@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -89,7 +90,7 @@ object Bench {
       // count()-pruned plan (the r8 honesty rule applies to warm-up
       // too — a count() warm-up leaves the first timed full plan cold)
       try SparkEntry.queries(w)(spark, sfDir).queryExecution.toRdd.count()
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => } // the timed run reports it
     // drop the warm-up queries' checkpoint blocks so the first timed
     // query doesn't run under their GC pressure
     spark.sparkContext.getPersistentRDDs.values
@@ -117,7 +118,9 @@ object Bench {
     // explicitly so their protocols keep one timed region per JVM).
     val legs = math.max(1, scala.util.Try(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_LEGS", "2").toInt).getOrElse(2))
-    def runLeg(): Seq[(String, Double)] =
+    // a query that throws is left out of the timings (its elapsed time
+    // measures nothing), named in the record, and fails the process
+    def runLeg(): Seq[(String, Either[Throwable, Double])] =
       SparkEntry.queries.toSeq.map { case (name, fn) =>
         val t0 = System.nanoTime()
         // queryExecution.toRdd.count() materializes the query's ACTUAL
@@ -125,8 +128,9 @@ object Bench {
         // count doesn't need — for 1:1 transform queries that is the
         // whole operator (q103's scrub benched as a bare parquet count
         // until round 8). Rows are produced but not collected.
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case _: Throwable => -1L }
+        val error =
+          try { fn(spark, sfDir).queryExecution.toRdd.count(); None }
+          catch { case NonFatal(e) => Some(e) }
         val dt = (System.nanoTime() - t0) / 1e9
         // queries are independent and sequential here: drop this query's
         // persisted/locally-checkpointed blocks so they don't pile up into
@@ -138,20 +142,26 @@ object Bench {
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = true))
         if (gcBetween) System.gc()
-        name -> dt
+        name -> error.toLeft(dt)
       }
     val legRuns = (1 to legs).map { _ =>
       val r = runLeg()
       if (legs > 1) System.gc() // isolate legs like the closing protocol
       (r, loadAvg())
     }
-    val results: Seq[(String, Double)] = legRuns.head._1.map(_._1).map { n =>
-      n -> legRuns.map(_._1.toMap.apply(n)).min
+    val failed = legRuns.flatMap(_._1).collect { case (n, Left(e)) => n -> e }
+      .distinctBy(_._1)
+    failed.foreach { case (n, e) => System.err.println(s"[bench] $n failed: $e") }
+    val timings = legRuns.map(_._1.collect {
+      case (n, Right(dt)) if !failed.exists(_._1 == n) => n -> dt
+    })
+    val results: Seq[(String, Double)] = timings.head.map(_._1).map { n =>
+      n -> timings.map(_.toMap.apply(n)).min
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val legTotals = legRuns.map(_._1.map(_._2).sum)
+    val legTotals = timings.map(_.map(_._2).sum)
     val legLoads = legRuns.map(_._2)
     // stamp the load at BOTH ends of the run: the gate-exit reading
     // alone can overstate how quiet the run was if contention arrives
@@ -164,6 +174,7 @@ object Bench {
     // single-leg (≤ r14), 2 = min-of-legs (r15+).
     val protocol = if (legs > 1) 2 else 1
     val full = s"""{"queries":$qs,"sf":"$sfDir","cpus":$cpus,""" +
+      s""""failed":[${failed.map("\"" + _._1 + "\"").mkString(",")}],""" +
       s""""protocol":$protocol,""" +
       s""""gc_between":$gcBetween,"epoch_s":${System.currentTimeMillis / 1000},""" +
       s""""legs":$legs,"leg_totals":[${legTotals.mkString(",")}],""" +
@@ -193,5 +204,6 @@ object Bench {
     println(full)
     println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"detail":"$outPath"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -17,27 +17,12 @@ import graft.ops._
   */
 object VolTransferJob {
 
-  /** Batch core: lines + dimension tables → (vol, edges) written to outDir. */
+  /** Batch core: lines + dimension tables → (vol, edges) appended to
+    * outDir. */
   def writeBatch(spark: SparkSession, lines: DataFrame, priceDim: DataFrame,
-                 outDir: String): Unit = {
-    val blocks = BlockParser.parse(lines)
-    val txs = Flatten.transactions(blocks).persist()
-    try {
-      val outFlows = TokenValues.outputFlows(txs).persist()
-      // grow the UTXO set first so intra- and cross-batch spends resolve
-      outFlows.write.mode("append").parquet(s"$outDir/utxo")
-      val utxo = spark.read.parquet(s"$outDir/utxo")
-      val inFlows = Resolver.resolve(Resolver.outpoints(txs), utxo)
-      val net = NetFlow.compute(outFlows, inFlows).persist()
-      val txMeta = txs.select("hash", "height", "slot")
-      Volume.vol(net, txMeta, priceDim)
-        .write.mode("append").parquet(s"$outDir/vol")
-      Transfers.edges(net, priceDim)
-        .write.mode("append").parquet(s"$outDir/edges")
-      net.unpersist()
-      outFlows.unpersist()
-    } finally { txs.unpersist() }
-  }
+                 outDir: String): Unit =
+    writeCore(spark, lines, priceDim, outDir,
+      (df, table) => df.write.mode("append").parquet(s"$outDir/$table"))
 
   /** Idempotent batch core: every output table lands in a
     * `batch=<id>` directory overwritten WHOLE, so a replayed
@@ -50,24 +35,31 @@ object VolTransferJob {
     * so a rewrite reproduces identical bytes. */
   def writeBatchIdempotent(spark: SparkSession, lines: DataFrame,
                            priceDim: DataFrame, outDir: String,
-                           batchId: Long): Unit = {
+                           batchId: Long): Unit =
+    writeCore(spark, lines, priceDim, outDir,
+      (df, table) => df.write.mode("overwrite")
+        .parquet(s"$outDir/$table/batch=$batchId"))
+
+  /** The one batch chain behind both cores; `write(df, table)` stores
+    * one output table of the batch under outDir. */
+  private def writeCore(spark: SparkSession, lines: DataFrame,
+                        priceDim: DataFrame, outDir: String,
+                        write: (DataFrame, String) => Unit): Unit = {
     val blocks = BlockParser.parse(lines)
     val txs = Flatten.transactions(blocks).persist()
     try {
       val outFlows = TokenValues.outputFlows(txs).persist()
       // grow the UTXO set first so intra- and cross-batch spends resolve
-      outFlows.write.mode("overwrite")
-        .parquet(s"$outDir/utxo/batch=$batchId")
-      // partition-discovery adds the synthetic batch column — drop it,
+      write(outFlows, "utxo")
+      // a batch=<id> layout makes partition discovery add a synthetic
+      // batch column — drop it (a no-op on the append layout), so
       // downstream operators see the plain utxo schema
       val utxo = spark.read.parquet(s"$outDir/utxo").drop("batch")
       val inFlows = Resolver.resolve(Resolver.outpoints(txs), utxo)
       val net = NetFlow.compute(outFlows, inFlows).persist()
       val txMeta = txs.select("hash", "height", "slot")
-      Volume.vol(net, txMeta, priceDim)
-        .write.mode("overwrite").parquet(s"$outDir/vol/batch=$batchId")
-      Transfers.edges(net, priceDim)
-        .write.mode("overwrite").parquet(s"$outDir/edges/batch=$batchId")
+      write(Volume.vol(net, txMeta, priceDim), "vol")
+      write(Transfers.edges(net, priceDim), "edges")
       net.unpersist()
       outFlows.unpersist()
     } finally { txs.unpersist() }

@@ -12,53 +12,27 @@ import org.apache.spark.sql.functions._
   * receiver's inflow, plus its price-adjusted form. Replicated exactly,
   * not "improved" (SURVEY.md §7.4 risk 4).
   *
-  * The cross product is realized as an equi-join on the grouping key
-  * (hash, unit) — Catalyst shuffles both sides once on that key. Hot
-  * (tx, unit) groups (SURVEY §7.4 risk 4: a batching tx with 10⁴
-  * receivers × 10⁴ senders lands 10⁸ pairs on ONE reducer) are routed
-  * through [[Skew.saltedJoin]]: groups whose receiver×sender product
-  * exceeds `hotPairsThreshold` salt the receiver side across
-  * `saltFactor` reducers; everything else takes the plain join, and the
-  * union is row-identical either way (pinned in SkewSpec). AQE's skew
-  * split can only rebalance what fits its post-shuffle statistics;
-  * the explicit route is the plan-level guarantee.
+  * The cross product is one equi-join on the grouping key (hash, unit):
+  * Catalyst shuffles each side once on that key. No group is salted.
+  * A group is one transaction, and Cardano's `maxTxSize` (16,384 bytes,
+  * with an input ≥ ~36 B and an output ≥ ~40 B) bounds a valid tx at
+  * ~4.7×10⁴ receiver×sender pairs — small enough for one reducer. AQE's
+  * runtime skew-join split (on by default) still divides an oversized
+  * shuffle partition, and [[Skew.saltedJoin]] stays available for keys
+  * that are not bounded this way.
   */
 object Transfers {
 
   /** @param netFlow  (hash, address, unit, diff)
     * @param priceDim Pricing.dimension output
-    * @param hotPairsThreshold (tx, unit) groups producing more pairs
-    *   than this take the salted join (the group-size count is one
-    *   map-side-combined aggregation — k rows per group key, not data)
-    * @param saltFactor reducers each hot group is split across
     * @return edges (hash, unit, rx_addr, send_addr, value, value_adj) */
-  def edges(netFlow: DataFrame, priceDim: DataFrame,
-            hotPairsThreshold: Long = 1L << 22,
-            saltFactor: Int = 16): DataFrame = {
+  def edges(netFlow: DataFrame, priceDim: DataFrame): DataFrame = {
     val receivers = netFlow.filter(col("diff") > 0)
       .select(col("hash"), col("unit"),
         col("address").as("rx_addr"), col("diff").as("value"))
     val senders = netFlow.filter(col("diff") < 0)
       .select(col("hash"), col("unit"), col("address").as("send_addr"))
-    // hot-group detection on the pair PRODUCT — the explosion metric.
-    // The hot-key list is ~0 rows in healthy data → broadcast semi/anti
-    // routing adds no shuffle to the cold path's data.
-    val hot = receivers.groupBy(col("hash"), col("unit"))
-      .agg(count(lit(1)).as("__nr"))
-      .join(senders.groupBy(col("hash"), col("unit"))
-        .agg(count(lit(1)).as("__ns")), Seq("hash", "unit"))
-      .filter(col("__nr") * col("__ns") > hotPairsThreshold)
-      .select(col("hash"), col("unit"))
-    val cold = receivers
-      .join(broadcast(hot), Seq("hash", "unit"), "left_anti")
-      .join(senders, Seq("hash", "unit"), "inner")
-    val salted = Skew.saltedJoin(
-      receivers.join(broadcast(hot), Seq("hash", "unit"), "left_semi"),
-      senders.join(broadcast(hot), Seq("hash", "unit"), "left_semi"),
-      Seq("hash", "unit"), saltFactor)
-    val paired = cold.unionByName(
-      salted.select(cold.columns.map(col).toIndexedSeq: _*))
-    Pricing.adjust(paired, priceDim)
+    Pricing.adjust(receivers.join(senders, Seq("hash", "unit")), priceDim)
       .select(col("hash"), col("unit"), col("rx_addr"), col("send_addr"),
         col("value"), col("value_adj"))
   }

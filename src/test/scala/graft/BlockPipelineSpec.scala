@@ -139,6 +139,35 @@ class BlockPipelineSpec extends AnyFunSuite with SparkTestBase {
       ("t2", "pol16161", "C", "B", 100L, 2.0)))
   }
 
+  test("transfers: a batching tx pairs every receiver with every sender") {
+    // one batching tx: 50 receivers × 40 senders = 2000 pairs in a
+    // single (hash, unit) group, plus normal 1×1 txs
+    val hotRx = (0 until 50).map(i => ("hot", s"r$i", "lovelace", 10L + i))
+    val hotTx = (0 until 40).map(i => ("hot", s"s$i", "lovelace", -5L - i))
+    val cold = Seq(("t1", "a", "lovelace", 7L), ("t1", "b", "lovelace", -7L),
+      ("t2", "c", "pol16161", 300L), ("t2", "d", "pol16161", -300L))
+    val netFlow = (hotRx ++ hotTx ++ cold)
+      .toDF("hash", "address", "unit", "diff")
+    val got = Transfers.edges(netFlow, dim)
+      .select("hash", "unit", "rx_addr", "send_addr", "value", "value_adj")
+      .as[(String, String, String, String, Long, Double)].collect()
+    val hot = for (r <- 0 until 50; s <- 0 until 40)
+      yield ("hot", "lovelace", s"r$r", s"s$s", 10L + r, (10L + r) / 1e6)
+    assert(got.length == 50 * 40 + 2)
+    assert(got.toSet == (hot ++ Seq(
+      ("t1", "lovelace", "a", "b", 7L, 7.0e-6),
+      ("t2", "pol16161", "c", "d", 300L, 6.0))).toSet)
+  }
+
+  test("transfers: plan is one shuffle join, no pre-pass or salting") {
+    // past the broadcast threshold — the large-batch regime — the
+    // pairing join shuffles each side once; the price join stays a
+    // broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try PlanCheck.assertOneShufflePerJoinSide(Transfers.edges(net, dim))
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
   test("transfer nodes: distinct endpoints") {
     val nodes = Transfers.nodes(Transfers.edges(net, dim))
       .as[String].collect().toSet

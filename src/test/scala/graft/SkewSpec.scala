@@ -32,31 +32,6 @@ class SkewSpec extends AnyFunSuite with SparkTestBase {
     assert(salted == plain)
   }
 
-  test("transfer edges: salted hot-group routing is row-identical to " +
-    "the plain join") {
-    // one batching tx: 50 receivers × 40 senders = 2000 pairs in a
-    // single (hash, unit) group, plus normal 1×1 txs
-    val hotRx = (0 until 50).map(i => ("hot", s"r$i", "lovelace", 10.0 + i))
-    val hotTx = (0 until 40).map(i => ("hot", s"s$i", "lovelace", -5.0 - i))
-    val cold = Seq(("t1", "a", "lovelace", 7.0), ("t1", "b", "lovelace", -7.0),
-      ("t2", "c", "lovelace", 3.0), ("t2", "d", "lovelace", -3.0))
-    val netFlow = (hotRx ++ hotTx ++ cold)
-      .toDF("hash", "address", "unit", "diff")
-    val dim = graft.ops.Pricing.dimension(
-      Seq.empty[(String, Double)].toDF("unit", "last_price_ada"),
-      Seq.empty[(String, Int)].toDF("unit", "decimals"))
-    def run(threshold: Long) = graft.ops.Transfers
-      .edges(netFlow, dim, hotPairsThreshold = threshold, saltFactor = 8)
-      .select("hash", "unit", "rx_addr", "send_addr", "value", "value_adj")
-      .as[(String, String, String, String, Double, Double)]
-      .collect().sorted.toSeq
-    val plain = run(Long.MaxValue) // nothing routes to the salted path
-    val salted = run(100L)         // the hot tx (2000 pairs) routes
-    assert(plain == salted)
-    assert(plain.count(_._1 == "hot") == 50 * 40)
-    assert(plain.count(_._1 == "t1") == 1)
-  }
-
   test("salting is deterministic across retries (hash salt, no RNG)") {
     val df = (1L to 50L).map(k => (k % 3, k)).toDF("k", "v")
     val right = (0L to 2L).map(k => (k, s"d$k")).toDF("k", "name")
