@@ -1,10 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     // Quiet-host gate (round-13): host contention inflated the recorded
     // r11 driver bench ~50% and the r12 one ~20% vs the same binary on
     // a quiet machine — the measured signature is uniform inflation of
@@ -30,21 +29,7 @@ object Bench {
            gateWaited < gateMax) {
       Thread.sleep(15000); gateWaited += 15; load = loadAvg()
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Spark's generated-class cache defaults to 100 entries; this
-      // suite compiles far more (137 queries, iterative families
-      // codegen fresh plans per round), so the LRU thrashes and big
-      // plans recompile at their timed run — measured q106 19.3 s
-      // (evicted) vs 7.1 s (cached), whole-suite 146 s → 109 s. Any
-      // production cluster running a workload this wide would raise it.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warm-up: absorb one-time session costs (janino codegen,
     // parquet footer reads, shuffle/broadcast thread pools) so the timed

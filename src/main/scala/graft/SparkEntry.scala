@@ -52,9 +52,9 @@ object SparkEntry {
     // makes Spark's distinct-agg rewrite carry all four 128-bit
     // decimal partials through the (group, l_orderkey) distinct phase
     // — every distinct-shuffle row widens by 4 decimals (measured
-    // 1.59 s fused vs 0.89 s split at sf0.1, graft.tools.Q01Probe;
-    // the round-9 adjudication of q01's bench wall). The rejoin is a
-    // broadcast of one row per group. NB: the inner equi-join assumes
+    // 1.59 s fused vs 0.89 s split at sf0.1; SCALE_AUDIT "Round-9 q01
+    // adjudication"). The rejoin is a broadcast of one row per group.
+    // NB: the inner equi-join assumes
     // NON-NULL group keys (true for l_returnflag/l_linestatus); a
     // fused aggregate would keep NULL-key groups that this join drops
     // — use null-safe equality (<=>) if copying the pattern to
@@ -806,8 +806,8 @@ object SparkEntry {
     * doubles), scored by per-query lookup tables, and only the ADC
     * top candidate ids rejoin full vectors for the exact cosine.
     * Approximate by construction → rows-only; measured recall pinned in
-    * ProductQuantizerSpec. rerank=100 per the r17 FloatAnnDialProbe
-    * sweep (table in adcTopK's scaladoc + SCALE_AUDIT): the old
+    * ProductQuantizerSpec. rerank=100 per the r17 dial sweep (table in
+    * adcTopK's scaladoc + SCALE_AUDIT "float ANN dial tables"): the old
     * rerank=50 read recall@5 0.66 at sf0.1 while 100 reads 0.78 at
     * FLAT wall (0.46 vs 0.50 s) — the q145 cost-neutral-dial move
     * applied to the float PQ path.
@@ -2009,12 +2009,12 @@ object SparkEntry {
     * the SAME DuckDB oracle re-derives this query end to end — the
     * 100 TB serving shape gets its own hash-green row.
     *
-    * Cost split (r17 IvfPqServeProbe, SCALE_AUDIT): the bench row's
-    * sf10 14.79 s is BUILD (train + full store write) + probe on a
-    * cold path; the SERVING cost — a probe against the pre-built
-    * index, the number a 100× operator pays per query batch — is
-    * ~2 s at sf10 and decade-flat (sf1 1.7–2.1 s, sf10 1.9–2.0 s),
-    * compacted store. */
+    * Cost split (SCALE_AUDIT "IVF-PQ serving — build vs probe split"):
+    * the bench row's sf10 14.79 s is BUILD (train + full store
+    * write) + probe on a cold path; the SERVING cost — a probe
+    * against the pre-built index, the number a 100× operator pays per
+    * query batch — is ~2 s at sf10 and decade-flat (sf1 1.7–2.1 s,
+    * sf10 1.9–2.0 s), compacted store. */
   def q146_ivfpq_index_probe(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     val out = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_idx_" +
@@ -4931,8 +4931,8 @@ object SparkEntry {
     // residual sums go negative), nprobe=4 coarse probe, per-(query,
     // probed-cell) residual ADC, top-100 reranked by exact integer L2,
     // top-5 — step-for-step the graft.sim.IvfPqInt pipeline at the r16
-    // measured defaults (IvfPqDialProbe: recall@5 0.68/0.50 at
-    // sf0.01/sf0.1, vs 0.22 at the r15 floor point)
+    // measured defaults (recall@5 0.68/0.50 at sf0.01/sf0.1, vs 0.22
+    // at the r15 floor point; SCALE_AUDIT "q145 dial table")
     "q145_ivfpq_int_ann" -> ivfPqPipelineSql,
     // q146 probes the persisted index built from the same corpus with
     // the same frozen-model recipe — row-identical to q145 by the

@@ -112,8 +112,9 @@ object Dedup {
     * each word is hashed once, and the shingle key is xxhash64 over the
     * n-long slice of word hashes. The old form (array_join the slice,
     * then hash the string) re-copied every word's bytes into n shingle
-    * strings before hashing them — measured at sf0.1 (ShingleProbe,
-    * n=5) the word-hash pass is 0.75 s vs 1.02 s and the q51
+    * strings before hashing them — measured at sf0.1 (n=5; SCALE_AUDIT
+    * "funnel per-stage attribution at sf10") the word-hash pass is
+    * 0.75 s vs 1.02 s and the q51
     * contamination consumer 0.81 s vs 1.26 s, with identical distinct
     * counts. Key VALUES differ from the string form, but every caller
     * treats the key as opaque equality currency (counts and

@@ -60,7 +60,7 @@ object SemanticDedup {
     * explicit; the multiprobe form recovers recall at any k, and the
     * frozen-model ingest path is untouched. RE-MEASURED round 10 as
     * the paired default decision with knnGraphApprox's planes knob
-    * (AutoKnobProbe, SCALE_AUDIT "auto-knob decision"): sf1 organic
+    * (SCALE_AUDIT "auto-knob decision"): sf1 organic
     * auto 12.65 s vs fixed-8 6.53 s, sf10 auto 197.2 s vs fixed-8
     * 12.33 s — the k·n·d Lloyd/assignment constant dominates through
     * BOTH measured decades (cellCap already bounds the pair term at
@@ -148,8 +148,8 @@ object SemanticDedup {
     // all-duplicates, so the ascending-id early-exit scan below does
     // O(p) COMPARE work on it; what remains bounded only by executor
     // memory is its p·d member buffer, measured to its breaking point
-    // in tools/DegenerateCellProbe (SCALE_AUDIT "degenerate-cell
-    // ceiling") — the q113 Σ|block|² style contract for this operator.
+    // in SCALE_AUDIT "degenerate-cell ceiling" — the q113 Σ|block|²
+    // style contract for this operator.
     val oversized: Map[Int, Int] = e.groupBy(col("cell"))
       .agg(count(lit(1)).as("n")).collect()
       .map(r => r.getInt(0) ->
@@ -207,8 +207,9 @@ object SemanticDedup {
         // equal embeddings share ONE array (DoubleBuffer wraps compare
         // by content), so the irreducible identical-signature bucket —
         // the one no LSH s can split — buffers p ids + refs plus ONE
-        // vector instead of p·d doubles. Measured (DegenerateCellProbe,
-        // 8g heap): the 90%-identical cell broke at 3.6M members
+        // vector instead of p·d doubles. Measured (SCALE_AUDIT
+        // "degenerate-cell ceiling", 8g heap): the 90%-identical cell
+        // broke at 3.6M members
         // un-interned; interned it passes 7.2M and breaks at 14.4M
         // (SCALE_AUDIT "degenerate-cell ceiling"). Distinct-heavy
         // buckets pay one O(d) hash per member and keep their

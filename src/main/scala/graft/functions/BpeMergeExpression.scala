@@ -16,7 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * OUTPUT ARRAY per symbol per word — O(len²) allocation per word on
   * top of the interpreter tax. The cost is per-WORD over the
   * distinct-word vocabulary frame, and vocabulary grows with the
-  * corpus (Heaps: types ~ n^β) — measured by BpeVocabProbe: corpus
+  * corpus (Heaps: types ~ n^β) — measured (SCALE_AUDIT "BPE training
+  * stressed at grown vocabulary"): corpus
   * axis flat (10× docs at fixed vocab → 1.0×), vocab axis linear
   * (10k → 100k → 1M types: 2.6 → 5.9 → 26.0 s for a 10-merge train),
   * exactly the corpus-soft share the r15 adjudication under-called.

@@ -12,9 +12,10 @@ import org.apache.spark.sql.types._
   * `array_max`/`array_sort` chain still ran on every q104/q108 corpus
   * row, every `ivfTopKTrained` corpus row (q27), once per Lloyd
   * iteration over the whole training frame, and on every
-  * SemanticIngestJob batch — the EXACT pattern SemanticIntScaleProbe
-  * measured at 8.5–60× slower than the codegen kernel on the integer
-  * family (cells=64: 84 s interpreted vs 1.41 s kernel'd, sf10).
+  * SemanticIngestJob batch — the EXACT pattern SCALE_AUDIT "the integer
+  * nearest-cell assignment kernel'd" measured at 8.5–60× slower than
+  * the codegen kernel on the integer family (cells=64: 84 s
+  * interpreted vs 1.41 s kernel'd, sf10).
   *
   * BIT-EXACT with the HOF forms it replaces (kept as
   * `Similarity.nearestCellHof` / `nearestCellL2Hof` /

@@ -21,9 +21,10 @@ import org.apache.spark.sql.types._
   * MatVecKernelSpec) evaluate one interpreted lambda frame per MATRIX
   * CELL per corpus row — outDims·inDims frames plus outDims zipped-array
   * allocations (16×64 ≈ 1k frames/row at the defaults), the exact shape
-  * round 14's SemanticIntScaleProbe measured at 8.5–60× on the
-  * nearest-cell twin, and the reason growing outDims (the projection
-  * family's fidelity knob) scaled interpreted cost linearly. Here it is
+  * round 14 measured at 8.5–60× on the nearest-cell twin (SCALE_AUDIT
+  * "the integer nearest-cell assignment kernel'd"), and the reason
+  * growing outDims (the projection family's fidelity knob) scaled
+  * interpreted cost linearly. Here it is
   * two tight loops: one quantize pass into a stack long[], then
   * outDims·inDims long multiply-adds.
   *

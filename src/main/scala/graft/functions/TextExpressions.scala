@@ -24,8 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * String[][] and the whole scan is a static-method call inside
   * whole-stage codegen.
   *
-  * Value identity with the built-in tree it replaces (pinned to 0
-  * mismatches by tools/FeatureProbe): tokenization is literally
+  * Value identity with the built-in tree it replaces (0 mismatches,
+  * SCALE_AUDIT "gate-features as a codegen expression"): tokenization
+  * is literally
   * `lower → trim → Java-regex split "\\s+" limit −1` — the same
   * UTF8String.toLowerCase / .trim methods Lower/StringTrim call and
   * the same Pattern.split semantics StringSplit delegates to; a token

@@ -170,11 +170,9 @@ object PageRank {
         .agg(max(col("is_seed")).as("is_seed"),
           max(col("is_dang")).as("is_dang"),
           sum(col("contrib")).as("contrib"))
-      val dmAsLiteral = e.sparkSession.conf
-        .get("spark.graft.graph.dmLiteral", "true").toBoolean
       val withDm =
         if (!hasDangling) joined
-        else if (prevMaterialized && dmAsLiteral)
+        else if (prevMaterialized)
           // previous round is checkpointed and its dangling mass was
           // observed during that materialization: fold it in as a
           // literal — the identical value the 1-row aggregate would

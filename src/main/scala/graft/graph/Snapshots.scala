@@ -14,13 +14,11 @@ import org.apache.spark.storage.StorageLevel
   * the flat DISK_ONLY default cost the sf0.1 graph family ~18% for
   * snapshots that were KB-sized):
   *
-  *  1. an EXPLICIT level always wins — session conf [[ConfKey]], env
-  *     `SPARK_GRAFT_SNAPSHOT_LEVEL` (the probe-main A/B hook);
-  *  2. [[cutSized]] (a caller-known row count: KCore's peel size,
+  *  1. [[cutSized]] (a caller-known row count: KCore's peel size,
   *     PageRank's node count, CC's label count) compares against
   *     [[MemRowsKey]] — small snapshots go MEMORY_AND_DISK,
   *     large go DISK_ONLY;
-  *  3. [[cut]] (no count in hand) consults the optimizer's
+  *  2. [[cut]] (no count in hand) consults the optimizer's
   *     `stats.sizeInBytes` against [[MemBytesKey]] — free (no job),
   *     real for scan-rooted plans (the expensive FIRST snapshot of
   *     every algorithm, built straight off parquet), and
@@ -59,7 +57,6 @@ import org.apache.spark.storage.StorageLevel
   * latency, never correctness.
   */
 object Snapshots {
-  val ConfKey = "spark.graft.graph.snapshotLevel"
   val MemRowsKey = "spark.graft.graph.snapshotMemRows"
   val MemBytesKey = "spark.graft.graph.snapshotMemBytes"
 
@@ -79,41 +76,25 @@ object Snapshots {
     * ≤ +0.8 s at sf0.1, vs an 8g driver OOM the other way). */
   val DefaultMemBytes: Long = 32L << 20
 
-  /** Explicit override: session conf first, env fallback (so
-    * single-purpose probe mains — QueryProfile, GraphScaleProbe — can
-    * A/B levels without a conf flag of their own). */
-  private def explicitLevel(ds: Dataset[_]): Option[StorageLevel] =
-    ds.sparkSession.conf.getOption(ConfKey)
-      .orElse(sys.env.get("SPARK_GRAFT_SNAPSHOT_LEVEL"))
-      .map(StorageLevel.fromString)
+  /** The level [[cut]] will use: the optimizer's size estimate
+    * against [[MemBytesKey]]. */
+  def level(ds: Dataset[_]): StorageLevel = {
+    val memBytes = ds.sparkSession.conf
+      .get(MemBytesKey, DefaultMemBytes.toString).toLong
+    val est = ds.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (est <= memBytes) StorageLevel.MEMORY_AND_DISK
+    else StorageLevel.fromString(DefaultLevel)
+  }
 
-  /** True when an explicit level override is in force — callers that
-    * would otherwise run a sizing pass (e.g. Bfs's edge count) can
-    * skip it, because [[levelFor]] ignores the row bound anyway. */
-  def hasExplicitLevel(ds: Dataset[_]): Boolean =
-    explicitLevel(ds).isDefined
-
-  /** The level [[cut]] will use — explicit override, else the
-    * optimizer's size estimate against [[MemBytesKey]]. */
-  def level(ds: Dataset[_]): StorageLevel =
-    explicitLevel(ds).getOrElse {
-      val memBytes = ds.sparkSession.conf
-        .get(MemBytesKey, DefaultMemBytes.toString).toLong
-      val est = ds.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (est <= memBytes) StorageLevel.MEMORY_AND_DISK
-      else StorageLevel.fromString(DefaultLevel)
-    }
-
-  /** The level [[cutSized]] will use — explicit override, else the
-    * caller's known row count against [[MemRowsKey]]. */
-  def levelFor(ds: Dataset[_], knownRows: Long): StorageLevel =
-    explicitLevel(ds).getOrElse {
-      val memRows = ds.sparkSession.conf
-        .get(MemRowsKey, DefaultMemRows.toString).toLong
-      if (knownRows >= 0 && knownRows <= memRows)
-        StorageLevel.MEMORY_AND_DISK
-      else StorageLevel.fromString(DefaultLevel)
-    }
+  /** The level [[cutSized]] will use: the caller's known row count
+    * against [[MemRowsKey]]. */
+  def levelFor(ds: Dataset[_], knownRows: Long): StorageLevel = {
+    val memRows = ds.sparkSession.conf
+      .get(MemRowsKey, DefaultMemRows.toString).toLong
+    if (knownRows >= 0 && knownRows <= memRows)
+      StorageLevel.MEMORY_AND_DISK
+    else StorageLevel.fromString(DefaultLevel)
+  }
 
   /** Eager lineage cut at the stats-estimated storage level — drop-in
     * for `localCheckpoint(true)` at snapshot sites with no row count
@@ -134,19 +115,15 @@ object Snapshots {
     * 1M rows of (id, score) builds to tens of MB, comfortably inside
     * executor memory and far under the 8 GB broadcast cap; past the
     * bound the loops keep plain shuffle joins — the only correct shape
-    * when node frames are cluster-sized. Conf-tunable so a cluster
-    * with big executors can raise it. */
-  val BcastRowsKey = "spark.graft.graph.broadcastRowsMax"
-  val DefaultBcastRows: Long = 1000000L
+    * when node frames are cluster-sized. */
+  private val BcastRowsMax: Long = 1000000L
 
   /** `broadcast(df)` when the caller-known row bound is within
-    * [[BcastRowsKey]], else `df` unchanged. knownRows < 0 = unknown =
+    * [[BcastRowsMax]], else `df` unchanged. knownRows < 0 = unknown =
     * never broadcast. */
   def broadcastIfSmall(df: org.apache.spark.sql.DataFrame,
                        knownRows: Long): org.apache.spark.sql.DataFrame = {
-    val max = df.sparkSession.conf
-      .get(BcastRowsKey, DefaultBcastRows.toString).toLong
-    if (knownRows >= 0 && knownRows <= max)
+    if (knownRows >= 0 && knownRows <= BcastRowsMax)
       org.apache.spark.sql.functions.broadcast(df)
     else df
   }

@@ -107,10 +107,9 @@ object IvfPqIndexJob {
                                             version: Int)
 
   /** File-layout choice for both tables (power of two, io.Layout) —
-    * read at BUILD time and persisted in meta; later sessions use the
-    * persisted value (the files' actual layout), never the live conf. */
-  private def storeBuckets(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.ivfpq.storeBuckets", "8").toInt
+    * persisted in meta at BUILD time; later sessions use the persisted
+    * value (the files' actual layout). */
+  private val StoreBuckets = 8
 
   /** Bucket/sort layout per store — postings serve cell-key probes,
     * vecs serve rerank id-joins. */
@@ -258,7 +257,7 @@ object IvfPqIndexJob {
                   subspaces: Int = 8, cents: Int = 8): Unit = {
     val spark = embeddings.sparkSession
     val fp = fingerprint(embeddings)
-    val buckets = storeBuckets(spark)
+    val buckets = StoreBuckets
     val fresh = pathExists(spark, s"$outDir/model/stats") &&
       loadMeta(spark, outDir).exists(m =>
         m.version == FormatVersion && m.fingerprint == fp &&
@@ -306,7 +305,7 @@ object IvfPqIndexJob {
     // the old descriptor goes too (it described the OLD build)
     Seq("postings", "vecs").foreach(dropStore(spark, outDir, _))
     deletePath(spark, s"$outDir/meta")
-    val buckets = storeBuckets(spark)
+    val buckets = StoreBuckets
     appendBucketed(assigned
       .withColumn("enc", IvfPqInt.encodeWith(col("res"), books, subDim))
       .select(col("cell"), col("vec_id"), col("enc")),
@@ -346,7 +345,7 @@ object IvfPqIndexJob {
       throw new IllegalStateException(
         s"no IVF-PQ index at $outDir — build(...) first"))
     val meta = loadMeta(spark, outDir)
-    val buckets = meta.map(_.buckets).getOrElse(storeBuckets(spark))
+    val buckets = meta.map(_.buckets).getOrElse(StoreBuckets)
     val codes = graft.sim.Quantize
       .quantize(batch, model.statsFrame(spark))
     // replay guard: ids already ingested never re-append (bucket-aligned

@@ -45,13 +45,13 @@ import graft.dedup.Dedup
   */
 object NearDupIngestJob {
 
-  private case class Params(numHashes: Int, bands: Int, shingleN: Int,
-                            minMatchFrac: Double, storeBuckets: Int)
+  private val NumHashes = 16
+  private val Bands = 4
+  private val ShingleN = 3
+
+  private case class Params(minMatchFrac: Double, storeBuckets: Int)
 
   private def params(spark: SparkSession): Params = Params(
-    numHashes = spark.conf.get("spark.graft.neardup.numHashes", "16").toInt,
-    bands = spark.conf.get("spark.graft.neardup.bands", "4").toInt,
-    shingleN = spark.conf.get("spark.graft.neardup.shingleN", "3").toInt,
     minMatchFrac =
       spark.conf.get("spark.graft.neardup.minMatchFrac", "0.7").toDouble,
     storeBuckets =
@@ -78,9 +78,8 @@ object NearDupIngestJob {
       .map(_.hint("merge"))
 
   /** (doc_id, sig) — the per-doc signature vector, seed-ordered. */
-  private def packedSigs(docs: DataFrame, p: Params): DataFrame =
-    Dedup.minhashSignatures(Dedup.shingleKeys(docs, p.shingleN),
-      p.numHashes)
+  private def packedSigs(docs: DataFrame): DataFrame =
+    Dedup.minhashSignatures(Dedup.shingleKeys(docs, ShingleN), NumHashes)
       .groupBy(col("doc_id"))
       .agg(transform(
         sort_array(collect_list(struct(col("seed"), col("minhash")))),
@@ -88,27 +87,27 @@ object NearDupIngestJob {
 
   /** (doc_id, bucket) — one row per band; bucket hashes the band's
     * slice of the signature (same banding as Dedup.lshCandidatePairs). */
-  private def bandBuckets(sigs: DataFrame, p: Params): DataFrame = {
-    val rows = p.numHashes / p.bands
+  private def bandBuckets(sigs: DataFrame): DataFrame = {
+    val rows = NumHashes / Bands
     sigs.select(col("doc_id"),
-      explode(array((0 until p.bands).map(b =>
+      explode(array((0 until Bands).map(b =>
         xxhash64(lit(b), slice(col("sig"), b * rows + 1, rows))): _*))
         .as("bucket"))
   }
 
   /** Fraction of equal signature positions — MinHash's Jaccard
     * estimate. */
-  private def agreement(a: Column, b: Column, p: Params): Column =
+  private def agreement(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v).cast("double") / p.numHashes
+      lit(0), (acc, v) => acc + v).cast("double") / NumHashes
 
   /** Batch core, shared by streaming foreachBatch and tests.
     * @return number of admitted (non-near-dup) docs appended */
   def writeBatch(docs: DataFrame, outDir: String): Long = {
     val spark = docs.sparkSession
     val p = params(spark)
-    val sigs = packedSigs(docs, p).localCheckpoint(true)
-    val buckets = bandBuckets(sigs, p).localCheckpoint(true)
+    val sigs = packedSigs(docs).localCheckpoint(true)
+    val buckets = bandBuckets(sigs).localCheckpoint(true)
 
     // in-batch: banded candidates → agreement-verified pairs →
     // components → keep the lowest id per cluster
@@ -122,7 +121,7 @@ object NearDupIngestJob {
         Seq("id1"))
       .join(sigs.select(col("doc_id").as("id2"), col("sig").as("s2")),
         Seq("id2"))
-      .filter(agreement(col("s1"), col("s2"), p) >= p.minMatchFrac)
+      .filter(agreement(col("s1"), col("s2")) >= p.minMatchFrac)
       .select(col("id1").as("src"), col("id2").as("dst"))
     val reps = graft.graph.ConnectedComponents.run(pairs)
       .filter(col("id") === col("component")).select(col("id"))
@@ -144,7 +143,7 @@ object NearDupIngestJob {
         c.join(sigs, Seq("doc_id"))
           .join(storeSigs.select(col("doc_id").as("store_id"),
             col("sig").as("store_sig")), Seq("store_id"))
-          .filter(agreement(col("sig"), col("store_sig"), p)
+          .filter(agreement(col("sig"), col("store_sig"))
             >= p.minMatchFrac)
           .select(col("doc_id")).distinct()
       case None => spark.emptyDataFrame.withColumn("doc_id", lit(0L))

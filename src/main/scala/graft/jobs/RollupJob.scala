@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.ops.Volume
@@ -44,21 +44,7 @@ object RollupJob {
   /** Hash-bucket count for key-partitioned rollups (vol_all_time,
     * address_pagerank). Small tables → few buckets; the point is
     * partition-granular rewrites, not parallelism. */
-  private def keyBuckets(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.rollup.keyBuckets", "16").toInt
-
-  // partition-granular plumbing lives in Volume (shared with the
-  // streaming incremental rollup)
-  private def exists(spark: SparkSession, path: String): Boolean =
-    Volume.pathExists(spark, path)
-  private def readTouched(spark: SparkSession, path: String,
-                          touched: Array[Long]): DataFrame =
-    Volume.readTouched(spark, path, touched)
-  private def touchedBuckets(withBucket: DataFrame): Array[Long] =
-    Volume.touchedBuckets(withBucket)
-  private def upsertInto(spark: SparkSession, path: String,
-                         updates: DataFrame, keys: Seq[String]): Unit =
-    Volume.upsertPartitioned(spark, path, updates, keys)
+  private val KeyBuckets = 16
 
   /** @param sinceHeight the tick's input window — only vol rows at
     *   `height >= sinceHeight` are re-rolled (the cadence scheduler
@@ -68,7 +54,6 @@ object RollupJob {
   def run(spark: SparkSession, dataDir: String,
           sinceHeight: Option[Long] = None): Unit = {
     val hb = heightBucketSize(spark)
-    val kb = keyBuckets(spark)
     val byBlockPath = s"$dataDir/vol_by_block"
     val allTimePath = s"$dataDir/vol_all_time"
 
@@ -87,8 +72,8 @@ object RollupJob {
     val newSums = byBlock.groupBy("unit")
       .agg(sum(col("value_adj")).as("new_sum"))
     val replacedSums =
-      if (exists(spark, byBlockPath))
-        readTouched(spark, byBlockPath, touchedBuckets(byBlock))
+      if (Volume.pathExists(spark, byBlockPath))
+        Volume.readTouched(spark, byBlockPath, Volume.touchedBuckets(byBlock))
           .join(byBlock.select("unit", "height").distinct(),
             Seq("unit", "height"), "left_semi")
           .groupBy("unit").agg(sum(col("value_adj")).as("old_sum"))
@@ -102,15 +87,16 @@ object RollupJob {
         (col("new_sum") - coalesce(col("old_sum"), lit(0.0))).as("delta"))
       .localCheckpoint(true)
 
-    upsertInto(spark, byBlockPath, byBlock, Seq("height", "unit"))
+    Volume.upsertPartitioned(spark, byBlockPath, byBlock, Seq("height", "unit"))
 
     // apply the delta to the stored all-time values (key-hash buckets)
     val deltaB = delta
-      .withColumn("pbucket", pmod(hash(col("unit")), lit(kb)).cast("long"))
+      .withColumn("pbucket",
+        pmod(hash(col("unit")), lit(KeyBuckets)).cast("long"))
     val allTimeUpdates =
-      if (exists(spark, allTimePath))
+      if (Volume.pathExists(spark, allTimePath))
         deltaB.join(
-          readTouched(spark, allTimePath, touchedBuckets(deltaB))
+          Volume.readTouched(spark, allTimePath, Volume.touchedBuckets(deltaB))
             .select(col("unit"), col("value_adj").as("old_v")),
           Seq("unit"), "left")
           .select(col("unit"),
@@ -119,7 +105,7 @@ object RollupJob {
             col("pbucket"))
       else deltaB.select(col("unit"), col("delta").as("value_adj"),
         col("pbucket"))
-    upsertInto(spark, allTimePath, allTimeUpdates, Seq("unit"))
+    Volume.upsertPartitioned(spark, allTimePath, allTimeUpdates, Seq("unit"))
     byBlock.unpersist()
 
     // pagerank leg (etl_pagerank_dag): edges → (address, score).
@@ -127,13 +113,13 @@ object RollupJob {
     // key bucket — is touched each tick; the partitioned upsert still
     // keeps the write path uniform and FS-safe.
     val edgesPath = s"$dataDir/edges"
-    if (exists(spark, edgesPath)) {
+    if (Volume.pathExists(spark, edgesPath)) {
       val edges = spark.read.parquet(edgesPath)
         .select(col("send_addr").as("src"), col("rx_addr").as("dst"))
       val scores = PageRank.run(edges)
-        .withColumn("pbucket", pmod(hash(col("address")), lit(kb))
+        .withColumn("pbucket", pmod(hash(col("address")), lit(KeyBuckets))
           .cast("long"))
-      upsertInto(spark, s"$dataDir/address_pagerank", scores,
+      Volume.upsertPartitioned(spark, s"$dataDir/address_pagerank", scores,
         Seq("address"))
     }
   }

@@ -40,8 +40,7 @@ import graft.dedup.{Dedup, ParagraphDedup}
   */
 object SegmentIngestJob {
 
-  private def storeBuckets(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.segment.storeBuckets", "64").toInt
+  private val StoreBuckets = 64
 
   private def tableName(outDir: String, kind: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -115,7 +114,7 @@ object SegmentIngestJob {
                              bucketCol: String): Unit =
     graft.io.BucketedStore.append(df, tableName(outDir, kind),
       s"$outDir/$kind", bucketCol, Seq(bucketCol),
-      storeBuckets(df.sparkSession))
+      StoreBuckets)
 
   /** Batch core, shared by streaming foreachBatch and tests.
     * @param docs (doc_id, text) micro-batch; ids must be fresh and

@@ -33,8 +33,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object SubstringIngestJob {
 
-  private def storeBuckets(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.substring.storeBuckets", "64").toInt
+  private val StoreBuckets = 64
 
   private def tableName(outDir: String, kind: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -59,7 +58,7 @@ object SubstringIngestJob {
                              bucketCol: String): Unit =
     graft.io.BucketedStore.append(df, tableName(outDir, kind),
       s"$outDir/$kind", bucketCol, Seq(bucketCol),
-      storeBuckets(df.sparkSession))
+      StoreBuckets)
 
   /** Scrub stage core, two-phase so composed funnels
     * ([[CorpusIngestJob]]) can write their corpus BEFORE committing the

@@ -144,8 +144,9 @@ object CorpusPipeline {
       .orderBy(col("__q"), col("doc_id"))
     val cw = Window.partitionBy(col("source"))
     // one split + one fold for lang AND quality (TextAnalysis
-    // .gateFeatures — FeatureProbe: 50.4 → 29.9 s at sf10, values
-    // bit-identical to the separate langIdCols/qualityCol trees)
+    // .gateFeatures — 50.4 → 29.9 s at sf10, values bit-identical to
+    // the separate langIdCols/qualityCol trees; SCALE_AUDIT
+    // "gate-features as a codegen expression")
     val feat = describing("gates_features")(TextAnalysis
       .gateFeatures(input)
       .select(col("doc_id"), col("source"), col("__lang"), col("__q"),

@@ -56,12 +56,13 @@ object FallbackAllowlist {
     "q105_bpe_merges" -> (core ++ Set("ArrayFilter", "ArrayTransform")),
     // BUILD-phase BPE training rounds over the DISTINCT-word frame:
     // the merge-pass ArrayAggregate is kernel'd since r16
-    // (functions/BpeMergePass — BpeVocabProbe measured the fold
-    // vocab-linear, and vocabulary is Heaps-soft in the corpus); what
+    // (functions/BpeMergePass — the fold measured vocab-linear,
+    // SCALE_AUDIT "BPE training stressed at grown vocabulary", and
+    // vocabulary is Heaps-soft in the corpus); what
     // remains is the one-time char split (ArrayFilter) and the
     // per-round pair enumeration (ArrayTransform), each bounded by
     // word length per word, measured r16: the kernel cut the 1M-type
-    // train 26.0 → 9.6 s (10-merge, BpeVocabProbe); the residue moves
+    // train 26.0 → 9.6 s (10-merge); the residue moves
     // with the pair-count explode + map-side-combinable aggregate and
     // the per-round checkpoint write — agg/IO-bound, not
     // interpreter-bound (see SCALE_AUDIT r16 BPE section)

@@ -120,6 +120,7 @@ object FallbackInventory {
 
   /** The adjudicated registry allowlist: query name → fallback class
     * names it is PERMITTED to evaluate. Populated from the round-14
-    * FallbackInventoryProbe run; see each group's adjudication. */
+    * inventory (SCALE_AUDIT "the no-CodegenFallback pin widened to the
+    * whole registry"); see each group's adjudication. */
   val allowlist: Map[String, Set[String]] = FallbackAllowlist.entries
 }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
   *
   * Wide-interval safety: bin explosion is data-dependent (an interval
   * spanning 10⁹ units at width 256 would explode to millions of rows),
-  * so intervals whose bin span reaches `maxBins` take a fallback branch
+  * so intervals whose bin span reaches `MaxBins` take a fallback branch
   * that keeps the original nested-loop join shape; the output is the
   * UNION of the two disjoint branches.
   *
@@ -30,7 +30,7 @@ import org.apache.spark.sql.types._
   * fallback branch still contains the original range predicate, so the
   * rule must not rewrite its own fallback on the next iteration. The
   * guard is structural: the fallback's bound side carries a filter on
-  * the interval's bin span (`hi div w - lo div w >= maxBins`) — a shape
+  * the interval's bin span (`hi div w - lo div w >= MaxBins`) — a shape
   * no user query produces and no optimizer rule erases (predicate
   * pushdown only moves it further down the same subtree) — and the rule
   * skips any join whose subtree contains that marker. Normalizing the
@@ -51,10 +51,10 @@ import org.apache.spark.sql.types._
   * rule skips it on re-application. Restricted to integral types — no
   * ANSI-sensitive casts.
   *
-  * Confs: `spark.graft.rangeJoin.binWidth` (default 256; pick near the
-  * median interval length) and `spark.graft.rangeJoin.maxBinsPerInterval`
-  * (default 4096). Invalid conf values disable the rewrite rather than
-  * break optimization. Injected via [[graft.functions.GraftExtensions]].
+  * Conf: `spark.graft.rangeJoin.binWidth` (default 256; pick near the
+  * median interval length); an invalid value disables the rewrite
+  * rather than break optimization. Injected via
+  * [[graft.functions.GraftExtensions]].
   */
 object RangeJoinRewrite {
   /** Idempotent registration on an already-built session (the
@@ -69,20 +69,19 @@ object RangeJoinRewrite {
 
 case class RangeJoinRewrite() extends Rule[LogicalPlan] with PredicateHelper {
 
-  private def longConf(key: String, default: Long): Option[Long] =
+  /** Intervals spanning this many bins or more take the wide branch. */
+  private val MaxBins = 4096L
+
+  private def binWidth: Option[Long] =
     try {
-      val v = conf.getConfString(key, default.toString).toLong
+      val v = conf.getConfString("spark.graft.rangeJoin.binWidth", "256").toLong
       if (v > 0) Some(v) else None
     } catch { case _: NumberFormatException => None }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val confs = for {
-      w <- longConf("spark.graft.rangeJoin.binWidth", 256L)
-      m <- longConf("spark.graft.rangeJoin.maxBinsPerInterval", 4096L)
-    } yield (w, m)
-    confs match {
+    binWidth match {
       case None => plan // invalid conf → leave every plan untouched
-      case Some((w, maxBins)) => plan.transformUp {
+      case Some(w) => plan.transformUp {
         case j @ Join(left, right, Inner, Some(cond), _) =>
           val conjuncts = splitConjunctivePredicates(cond)
           val hasCrossEqui = conjuncts.exists {
@@ -94,7 +93,7 @@ case class RangeJoinRewrite() extends Rule[LogicalPlan] with PredicateHelper {
           if (hasCrossEqui || hasWideMarker(left) || hasWideMarker(right)) j
           else findRange(conjuncts, left, right) match {
             case Some((point, lo, hi, pointOnLeft)) =>
-              rewrite(j, point, lo, hi, pointOnLeft, w, maxBins)
+              rewrite(j, point, lo, hi, pointOnLeft, w)
             case None => j
           }
       }
@@ -106,7 +105,7 @@ case class RangeJoinRewrite() extends Rule[LogicalPlan] with PredicateHelper {
     case _ => false
   }
 
-  /** The wide-branch filter this rule itself emits: bin-span ≥ maxBins
+  /** The wide-branch filter this rule itself emits: bin-span ≥ MaxBins
     * over two integral divisions. Its presence anywhere in a join's
     * subtree marks that join as this rule's own fallback. */
   private def isWideMarker(e: Expression): Boolean = e match {
@@ -150,7 +149,7 @@ case class RangeJoinRewrite() extends Rule[LogicalPlan] with PredicateHelper {
 
   private def rewrite(j: Join, point: Expression, lo: Expression,
                       hi: Expression, pointOnLeft: Boolean,
-                      binWidth: Long, maxBins: Long): LogicalPlan = {
+                      binWidth: Long): LogicalPlan = {
     val w = Literal(binWidth, LongType)
     def toLong(e: Expression): Expression =
       if (e.dataType == LongType) e else Cast(e, LongType)
@@ -161,14 +160,13 @@ case class RangeJoinRewrite() extends Rule[LogicalPlan] with PredicateHelper {
     // valid (lo ≤ hi; null-free — null bounds match nothing) intervals,
     // split by bin span. sequence(lo, hi, 1) throws when hi < lo, and an
     // unbounded span would explode to millions of generated rows.
-    // span < maxBins → at most maxBins exploded bins (span+1), honoring
-    // the conf name; span ≥ maxBins is also the re-fire marker shape
-    // isWideMarker recognizes.
+    // span < MaxBins → at most MaxBins exploded bins (span+1); span ≥
+    // MaxBins is also the re-fire marker shape isWideMarker recognizes.
     val valid = LessThanOrEqual(lo, hi)
     val narrow = And(valid,
-      LessThan(Subtract(hiBin, loBin), Literal(maxBins, LongType)))
+      LessThan(Subtract(hiBin, loBin), Literal(MaxBins, LongType)))
     val wide = And(valid,
-      GreaterThanOrEqual(Subtract(hiBin, loBin), Literal(maxBins, LongType)))
+      GreaterThanOrEqual(Subtract(hiBin, loBin), Literal(MaxBins, LongType)))
 
     // binned branch: explode narrow intervals to their bins, equi-join
     val pBin = Alias(IntegralDivide(toLong(point), w), "__graft_bin")()

@@ -207,7 +207,7 @@ object IvfPqInt {
     *
     * Default dials (nprobe=4, rerank=100) clear recall@5 ≥ 0.5 on the
     * REAL test corpus at both measured scales — the r16 dial sweep
-    * (IvfPqDialProbe; full table in SCALE_AUDIT "q145 dial table"),
+    * (full table in SCALE_AUDIT "q145 dial table"),
     * replacing the r15 floor point (nprobe=2, rerank=20 → 0.22):
     *
     * {{{

@@ -144,8 +144,8 @@ object KnnGraph {
     // grows: 2^planes ≈ avg block / target depth 4. One tiny agg job
     // (two longs to the driver); at sf0.1 auto resolves to 6, so the
     // pinned recall spec covers both modes there. Auto-vs-fixed was
-    // MEASURED as the r10 default decision (AutoKnobProbe, SCALE_AUDIT
-    // "auto-knob decision"): sf1 organic auto 15.2 s vs fixed-6
+    // MEASURED as the r10 default decision (SCALE_AUDIT "auto-knob
+    // decision"): sf1 organic auto 15.2 s vs fixed-6
     // 66.0 s; sf10 auto 62.4 s vs fixed-6 DNF (Σ|bucket|² spill fills
     // the disk) — a fixed plane count is only safe where you already
     // know the density, which is exactly when you'd pass it

@@ -100,8 +100,8 @@ object ProductQuantizer {
     * ADC candidates per query with the exact cosine (joining candidate
     * ids back to `embeddings`) before taking k.
     *
-    * Real-corpus recall@5 vs exact cosine (FloatAnnDialProbe, r17;
-    * subspaces=8, iters=3, dims=64; full table in SCALE_AUDIT):
+    * Real-corpus recall@5 vs exact cosine (r17; subspaces=8, iters=3,
+    * dims=64; full table in SCALE_AUDIT "float ANN dial tables"):
     * {{{
     * recall@5 (sf0.01 / sf0.1):
     *   codebook k\rerank    0           20          50          100

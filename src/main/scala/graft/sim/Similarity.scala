@@ -106,8 +106,9 @@ object Similarity {
     * transform/struct chain (kept as [[nearestCellHof]], the pinned
     * specification) evaluated one lambda + allocation per CELL per row
     * on every semantic-dedup corpus row, every IVF corpus row, and
-    * every Lloyd iteration — the exact pattern round 14's
-    * SemanticIntScaleProbe measured at 8.5–60× on the integer twin. */
+    * every Lloyd iteration — the exact pattern round 14 measured at
+    * 8.5–60× on the integer twin (SCALE_AUDIT "the integer
+    * nearest-cell assignment kernel'd"). */
   private[graft] def nearestCell(v: Column, centroids: Seq[Seq[Double]]): Column =
     org.apache.spark.sql.graftbridge.Bridge.column(
       graft.functions.NearestCellsFloat(
@@ -218,9 +219,9 @@ object Similarity {
     * then the standard nprobe probe. This is the 100 TB similarity-search
     * path: train on a sample, index in one pass, probe sub-linearly.
     *
-    * Real-corpus recall@5 vs exact cosine (FloatAnnDialProbe, r17;
-    * near-uniform test corpus — the hard case, clustered production
-    * corpora sit above; full table in SCALE_AUDIT):
+    * Real-corpus recall@5 vs exact cosine (r17; near-uniform test
+    * corpus — the hard case, clustered production corpora sit above;
+    * full table in SCALE_AUDIT "float ANN dial tables"):
     * {{{
     * recall@5 (sf0.01 / sf0.1), iters=5:
     *   cells\nprobe     1           2           4           8
@@ -318,8 +319,8 @@ object Similarity {
     * (table, bucket) — shuffle-hash-joinable at any scale, never a
     * cross product; dedup shuffles only candidate pairs.
     *
-    * Real-corpus recall@5 vs exact cosine (FloatAnnDialProbe, r17;
-    * full table in SCALE_AUDIT):
+    * Real-corpus recall@5 vs exact cosine (r17; full table in
+    * SCALE_AUDIT "float ANN dial tables"):
     * {{{
     * recall@5 (sf0.01 / sf0.1), planes=8:
     *   tables\probeBits      0           1

@@ -32,9 +32,9 @@ import org.apache.spark.sql.functions._
   * `mergePassMultiHof`, the executable specifications, pinned
   * bit-exact by BpeKernelSpec) copied the whole output array per
   * symbol per WORD over the distinct-word frame, and vocabulary grows
-  * with the corpus (Heaps; BpeVocabProbe measured the train
-  * vocab-linear at 2.6 → 5.9 → 26.0 s across 10k → 100k → 1M types
-  * while the corpus axis stayed flat). */
+  * with the corpus (Heaps; SCALE_AUDIT "BPE training stressed at grown
+  * vocabulary" measured the train vocab-linear at 2.6 → 5.9 → 26.0 s
+  * across 10k → 100k → 1M types while the corpus axis stayed flat). */
 object Bpe {
 
   private def kernelPass(s: Column, rules: Seq[(String, String)],

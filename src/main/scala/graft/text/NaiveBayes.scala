@@ -86,7 +86,8 @@ object NaiveBayes {
     // of the scan only — canonically different subtrees, so neither
     // static ReuseExchange nor AQE reuse fired and the corpus was
     // TOKENIZED TWICE (measured: two concurrent full-explode stages at
-    // sf10, ClassifyPlanProbe showed 2 Generate nodes / 0 reuse).
+    // sf10, 2 Generate nodes / 0 reuse in the plan — SCALE_AUDIT
+    // "the normalize kernel").
     // Filtering here puts the same predicate on both branches; the
     // optimizer then collapses them into one exchange + ReusedExchange.
     val tf = docs

@@ -83,7 +83,8 @@ object SparseSim {
     // back onto the pair results. The join-back form gave the kept
     // subtree THREE consumers (norms + the two renamed self-join
     // sides); at bench scale AQE's broadcast choices split them into
-    // FIVE independent corpus scans/tokenizes (PlanShapeProbe, r12) —
+    // FIVE independent corpus scans/tokenizes (SCALE_AUDIT "q115
+    // sparse-cosine — norms ride the postings") —
     // and at 100 TB the two post-agg norm joins are full pair-count
     // shuffles. With the norm on the posting, the self-join's two
     // branches are the ONLY consumers of kept and share one exchange

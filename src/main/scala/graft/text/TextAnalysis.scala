@@ -55,7 +55,8 @@ object TextAnalysis {
     * integers from the same tokenization (the expression calls the
     * same UTF8String lower/trim and Java-regex split the built-ins
     * delegate to) and the quality blend applies the same double ops in
-    * the same order (FeatureProbe pins 0 mismatches at sf0.1/sf10).
+    * the same order (0 mismatches at sf0.1/sf10, SCALE_AUDIT
+    * "gate-features as a codegen expression").
     *
     * Structured as chained projections ON PURPOSE: the scan lands in
     * its own column that later projections reference several times —

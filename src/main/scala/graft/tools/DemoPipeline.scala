@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.jobs.{RawPersistJob, VolTransferJob, RollupJob}
 import graft.ops.Pricing
 import graft.streaming.ReplayServer
@@ -15,12 +14,7 @@ object DemoPipeline {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

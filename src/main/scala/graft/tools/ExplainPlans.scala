@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints formatted physical plans for selected queries and
   * greps the load-bearing properties (PushedFilters, ReadSchema pruning,
   * broadcast joins, WholeStageCodegen spans).
@@ -13,15 +11,7 @@ object ExplainPlans {
     // honor the bench env so plan evidence can be captured at the SAME
     // scale/core count the bench times (broadcast-vs-SMJ choices are
     // size-estimate-dependent; a sf0.001 plan can misrepresent sf0.1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names = if (args.nonEmpty) args.toSeq

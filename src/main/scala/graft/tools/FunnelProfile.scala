@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job wall breakdown of the corpus-funnel queries: attaches a
   * listener that prints every Spark job's duration and first stage
@@ -14,16 +13,7 @@ object FunnelProfile {
   def main(args: Array[String]): Unit = {
     val name = if (args.nonEmpty) args(0) else "q106_corpus_pipeline"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val starts = scala.collection.concurrent.TrieMap.empty[Int, (Long, String)]
     @volatile var record = false

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Incremental-ingest throughput: drives the batch cores of ALL SEVEN
@@ -42,12 +41,7 @@ object IngestThroughputBench {
     val jobs = args.drop(3).headOption.map(_.split(",").toSeq).getOrElse(
       Seq("dedup", "segment", "neardup", "substring", "corpus",
         "semantic", "ivfpq"))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus)
       // diagnosis knob: SPARK_GRAFT_ABJT=-1 disables broadcast joins,
       // isolating "store gets re-broadcast per batch" growth from
       // file-count / scan growth

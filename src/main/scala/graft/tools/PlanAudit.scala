@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale audit: for every query, count the plan features that decide
   * 100 TB behavior — shuffles (Exchange), broadcast joins vs shuffle
   * joins, nested loops / cartesian products (scale killers), scan
@@ -38,13 +36,7 @@ object PlanAudit {
     if (bytes == 0L) "0" else f"${bytes / 1e3}%.1f"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
@@ -145,7 +137,7 @@ object PlanAudit {
         |their upstream scan/join shapes are audited by their specs and by
         |the non-checkpointed queries sharing the same operators.
         |
-        |## PageRank skew probe (graft.tools.PageRankSkewProbe)
+        |## PageRank skew probe
         |
         |`runScaled`, 10 iterations, 200k nodes / 2.47M edges, local[32],
         |broadcast joins disabled (the at-scale regime — ranks, one row
@@ -170,7 +162,7 @@ object PlanAudit {
         |regime. `ops/Skew.saltedJoin` remains available if a real
         |graph's hot key ever dominates a partition.
         |
-        |## Frontier/peel scale probe (graft.tools.GraphScaleProbe)
+        |## Frontier/peel scale probe
         |
         |Bfs.boundedBfs and KCore.peel at 1× and 10× synthetic edge
         |counts (hub-spine multigraph, broadcast joins disabled),

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Repeated single-query timer: `runMain graft.tools.QueryProfile q44_dup_groups 3`
   * — isolates a query from bench-order effects (codegen cache, GC debt
   * from earlier queries) to tell real regressions from interplay. */
@@ -10,17 +8,7 @@ object QueryProfile {
     val names = args(0).split(",").toSeq
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // match Bench's codegen cache so isolated numbers are comparable
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Runs a comma-list of registry queries ONCE each, in order, in one
   * JVM with graft.Bench's exact inter-query hygiene (blocking
   * unpersist + GC) — the minimal reproducer harness for in-bench-vs-
@@ -14,16 +12,7 @@ object SeqProbe {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // same one-family warm-up Bench gives the first timed query
     try graft.SparkEntry.queries("q01_agg_sums")(spark, sfDir)

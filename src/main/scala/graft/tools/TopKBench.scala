@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -16,9 +15,7 @@ object TopKBench {
     val rows = args.headOption.map(_.toLong).getOrElse(5000000L)
     val groups = args.lift(1).map(_.toInt).getOrElse(100)
     val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sim.Similarity
 
@@ -11,11 +10,7 @@ import graft.sim.Similarity
 object VectorBench {
   def main(args: Array[String]): Unit = {
     val rep = args.headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val e = spark.read
       .parquet("/root/testdata/sf0.01/embeddings.parquet")

@@ -11,8 +11,9 @@ import graft.text.Bpe
   * mergePassMultiHof / encodeHof, kept as the executable
   * specifications — the NgramKernelSpec precedent). The kernel carries
   * q105's training rounds and q107's encode, both per-WORD costs over
-  * the distinct-word vocabulary frame (the corpus-soft share
-  * BpeVocabProbe measured vocab-linear). */
+  * the distinct-word vocabulary frame (the corpus-soft share measured
+  * vocab-linear, SCALE_AUDIT "BPE training stressed at grown
+  * vocabulary"). */
 class BpeKernelSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 

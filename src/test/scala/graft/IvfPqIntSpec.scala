@@ -96,8 +96,8 @@ class IvfPqIntSpec extends AnyFunSuite with SparkTestBase {
       .as[(Long, Long)].collect().toSet
     assert(full == exact)
     // default operating point (r16: nprobe=4, rerank=100 — the dial
-    // sweep's ≥0.5-real-corpus-recall pick, IvfPqDialProbe / SCALE_AUDIT
-    // "q145 dial table"): measured 0.68 here at sf0.01 and 0.50 at
+    // sweep's ≥0.5-real-corpus-recall pick, SCALE_AUDIT "q145 dial
+    // table"): measured 0.68 here at sf0.01 and 0.50 at
     // sf0.1 on this synthetic near-uniform corpus (the HARD case for
     // any quantized index: distances concentrate at d=64). The pin is
     // the stated target the defaults were chosen to clear; real

@@ -9,8 +9,8 @@ import graft.graph.{KCore, Snapshots}
   * snapshots (known row count under the threshold, or a small
   * optimizer size estimate) ride MEMORY_AND_DISK; big or unknown ones
   * stay DISK_ONLY, the level measured to hold sf10 inside an 8g heap.
-  * An explicit conf always wins. Results must not depend on the level
-  * (it is a storage policy, not a semantic). */
+  * Results must not depend on the level (it is a storage policy, not a
+  * semantic). */
 class SnapshotsSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
@@ -21,7 +21,6 @@ class SnapshotsSpec extends AnyFunSuite with SparkTestBase {
 
   test("small stats estimate -> memory; over the bytes threshold -> " +
     "DISK_ONLY (the unknown-size posture)") {
-    assert(spark.conf.getOption(Snapshots.ConfKey).isEmpty)
     // a KB-sized local frame estimates tiny -> memory level
     assert(Snapshots.level(edges) == StorageLevel.MEMORY_AND_DISK)
     // force the threshold to zero: everything is "big"
@@ -40,16 +39,22 @@ class SnapshotsSpec extends AnyFunSuite with SparkTestBase {
 
   test("session conf overrides both paths, and results are " +
     "level-independent") {
+    // zero MemRows/MemBytes thresholds force DISK_ONLY on the known-count
+    // and the stats-estimate path alike
     val base = KCore.peel(edges, k = 3, rounds = 10)
       .as[(Long, Long)].collect().toMap
-    spark.conf.set(Snapshots.ConfKey, "DISK_ONLY")
+    spark.conf.set(Snapshots.MemRowsKey, "0")
+    spark.conf.set(Snapshots.MemBytesKey, "0")
     try {
       assert(Snapshots.level(edges) == StorageLevel.DISK_ONLY)
       assert(Snapshots.levelFor(edges, 1L) == StorageLevel.DISK_ONLY)
-      val overridden = KCore.peel(edges, k = 3, rounds = 10)
+      val onDisk = KCore.peel(edges, k = 3, rounds = 10)
         .as[(Long, Long)].collect().toMap
-      assert(overridden == base)
+      assert(onDisk == base)
       assert(base == Map(1L -> 3, 2L -> 3, 3L -> 3, 4L -> 3))
-    } finally spark.conf.unset(Snapshots.ConfKey)
+    } finally {
+      spark.conf.unset(Snapshots.MemRowsKey)
+      spark.conf.unset(Snapshots.MemBytesKey)
+    }
   }
 }

@@ -5,13 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one per suite (lazy). */
 trait SparkTestBase { self: AnyFunSuite =>
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.builder(GraftSession.cpus)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.warehouse.dir",
       s"/tmp/graft_warehouse_${sys.props.getOrElse("user.name", "u")}")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
