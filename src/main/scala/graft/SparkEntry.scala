@@ -926,18 +926,10 @@ object SparkEntry {
       .join(Tables.supplier(s, d), col("l_suppkey") === col("s_suppkey"))
       .select(col("c_nationkey").cast("string").as("src"),
         col("s_nationkey").cast("string").as("dst"))
-    // checkpointEvery=1 (r17): with cuts every 2 rounds, each
-    // UN-checkpointed round executed twice at the next cut — ranks is
-    // referenced by both the contribs join and the dangling-mass agg,
-    // and no ReusedExchange fires across localCheckpoint-rooted
-    // subtrees (plans/r17/q34_pagerank_before.txt: 44 exchanges in the
-    // 2-round tail, zero reuse). Per 2 rounds that is 3 edge-join
-    // executions vs 2 + one extra node-sized checkpoint — strictly
-    // less work at scale, and measured faster here too (R17Probe cpe
-    // A/B, sf0.1 min-of-3 ×2 blocks: 3.26/3.94 s vs 5.19/5.34 s).
-    // Pure materialization policy — scores are bit-identical.
-    graft.graph.PageRank.runScaled(edges, iterations = 10,
-      checkpointEvery = 1)
+    // 25 nation nodes: the rounds run on the driver-held rank vector,
+    // one Spark job each; integer sums keep the scores bit-identical to
+    // the DataFrame loop and to the oracle below
+    graft.graph.PageRank.runScaled(edges, iterations = 10)
   }
 
   /** DuckDB oracle for [[q34_pagerank]]: the same fixed-point recurrence
@@ -1465,12 +1457,9 @@ object SparkEntry {
     val seeds = edges.select(col("src").as("node"))
       .unionByName(edges.select(col("dst").as("node"))).distinct()
       .orderBy(col("node").cast("int").asc).limit(3)
-    // checkpointEvery=1 for the same reason as q34: the dangling-mass
-    // branch re-executes every un-checkpointed round (no exchange
-    // reuse across checkpoint-rooted subtrees) — cutting every round
-    // is strictly less join work per iteration pair
+    // the driver-held rank vector regime, as in q34
     graft.graph.PageRank.runScaledPersonalized(edges, seeds,
-      iterations = 10, checkpointEvery = 1)
+      iterations = 10)
   }
 
   /** Time-series gap fill (ops/TimeSeries.interpolate): daily per-type

@@ -109,14 +109,15 @@ object Snapshots {
     ds.localCheckpoint(true, levelFor(ds, knownRows))
 
   /** Max known row count at which the iterative graph family broadcasts
-    * its node-sized per-round frames (PageRank ranks/contribs, KCore
-    * survivors, CC labels, BFS frontiers) into the iteration joins —
-    * the edge frame is then never shuffled inside a round (guide §3.1).
+    * its node-sized per-round frames (KCore survivors, CC labels, BFS
+    * frontiers) into the iteration joins — the edge frame is then never
+    * shuffled inside a round (guide §3.1) — and at which PageRank holds
+    * its rank vector on the driver and broadcasts it every round.
     * 1M rows of (id, score) builds to tens of MB, comfortably inside
     * executor memory and far under the 8 GB broadcast cap; past the
     * bound the loops keep plain shuffle joins — the only correct shape
     * when node frames are cluster-sized. */
-  private val BcastRowsMax: Long = 1000000L
+  private[graph] val BcastRowsMax: Long = 1000000L
 
   /** `broadcast(df)` when the caller-known row bound is within
     * [[BcastRowsMax]], else `df` unchanged. knownRows < 0 = unknown =

@@ -111,7 +111,9 @@ object RollupJob {
     // pagerank leg (etl_pagerank_dag): edges → (address, score).
     // PageRank is a global recompute, so every address — and thus every
     // key bucket — is touched each tick; the partitioned upsert still
-    // keeps the write path uniform and FS-safe.
+    // keeps the write path uniform and FS-safe. Up to 1M addresses the
+    // 20 rounds run on a driver-held rank vector, one Spark job each,
+    // and the scores come back as a local relation (see PageRank).
     val edgesPath = s"$dataDir/edges"
     if (Volume.pathExists(spark, edgesPath)) {
       val edges = spark.read.parquet(edgesPath)

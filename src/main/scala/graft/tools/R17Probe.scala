@@ -8,12 +8,6 @@ import org.apache.spark.sql.functions._
   * Modes (args(0)):
   *   phases  — split the iterative graph queries into (edge build,
   *             full query) wall, print the edge-build plan
-  *   cpe     — A/B PageRank checkpointEvery 1 vs 2 on q34/q95's exact
-  *             graphs: quantifies the double-execution of
-  *             un-checkpointed iterations (ranks is referenced twice
-  *             per round — contribs + dangling mass — and no
-  *             ReusedExchange fires across the localCheckpoint-rooted
-  *             subtrees, so every odd iteration runs twice)
   *
   * Usage: runMain graft.tools.R17Probe <mode> [sfDir] [reps]
   */
@@ -65,23 +59,6 @@ object R17Probe {
         time("q87_full") {
           graft.SparkEntry.queries("q87_bfs_hops")(spark, d)
             .queryExecution.toRdd.count()
-        }
-
-      case "cpe" =>
-        val e = edges(spark)
-        val seeds = e.select(col("src").as("node"))
-          .unionByName(e.select(col("dst").as("node"))).distinct()
-          .orderBy(col("node").cast("int").asc).limit(3)
-        for (cpe <- Seq(2, 1, 2, 1)) {
-          time(s"q34_runScaled_cpe$cpe") {
-            graft.graph.PageRank.runScaled(e, iterations = 10,
-              checkpointEvery = cpe).queryExecution.toRdd.count()
-          }
-          time(s"q95_personalized_cpe$cpe") {
-            graft.graph.PageRank.runScaledPersonalized(e, seeds,
-              iterations = 10, checkpointEvery = cpe)
-              .queryExecution.toRdd.count()
-          }
         }
 
       case "shj" =>
