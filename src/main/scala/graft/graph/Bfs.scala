@@ -45,23 +45,15 @@ object Bfs {
     // count job): every frontier is a subset of e's dst set, so
     // edgeCount is a sound upper bound that lets Snapshots pick a
     // memory level for small graphs.
-    val obsE = org.apache.spark.sql.Observation()
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .observe(obsE, count(lit(1)).as("n"))
-      .transform(Snapshots.cut)
-    // NOTE obsE.get blocks until an action runs the observed frame —
-    // sound only because Snapshots.cut is an EAGER localCheckpoint.
-    val edgeCount = obsE.get("n").asInstanceOf[Long]
+    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val (e, edgeCount) = Snapshots.cutCounted(e0, Snapshots.level(e0))
     // seed count rides the seed cut's materialization the same way —
     // the r17 form ran a separate full count() job (unconditionally,
     // even at maxHops == 0 where the loop never runs)
-    val obsS = org.apache.spark.sql.Observation()
-    var dist = seeds.select(col("node").cast("long"))
+    val s0 = seeds.select(col("node").cast("long"))
       .distinct().withColumn("dist", lit(0))
-      .observe(obsS, count(lit(1)).as("n"))
-      .transform(Snapshots.cut)
+    var (dist, frontierSize) = Snapshots.cutCounted(s0, Snapshots.level(s0))
     var frontier = dist.select(col("node"))
-    var frontierSize = obsS.get("n").asInstanceOf[Long]
     var hop = 1
     while (hop <= maxHops && frontierSize > 0) {
       val fb = Snapshots.broadcastIfSmall(frontier, frontierSize)
@@ -71,8 +63,7 @@ object Bfs {
       // group never saw a flagged row — exactly `reached.distinct()
       // LEFT ANTI dist`, for one exchange per hop instead of the
       // former distinct exchange plus an anti-join exchange/broadcast
-      val obs = org.apache.spark.sql.Observation()
-      val fresh = fb
+      val reached = fb
         .join(e, fb("node") === e("src"))
         .select(col("dst").as("node"), lit(0).as("in_dist"))
         .unionByName(dist.select(col("node"), lit(1).as("in_dist")))
@@ -80,10 +71,10 @@ object Bfs {
         .filter(col("in_dist") === 0)
         .select(col("node"))
         .withColumn("dist", lit(hop))
-        .observe(obs, count(lit(1)).as("n"))
-        // cut per-round lineage (as q34/q44 do), sized by the bound
-        .transform(ds => Snapshots.cutSized(ds, edgeCount))
-      frontierSize = obs.get("n").asInstanceOf[Long]
+      // cut per-round lineage (as q34/q44 do), sized by the bound
+      val (fresh, n) =
+        Snapshots.cutCounted(reached, Snapshots.levelFor(reached, edgeCount))
+      frontierSize = n
       dist = dist.unionByName(fresh)
       frontier = fresh.select(col("node"))
       hop += 1

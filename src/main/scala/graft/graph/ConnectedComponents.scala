@@ -22,17 +22,14 @@ object ConnectedComponents {
       .union(edges.select(col("dst").as("a"), col("src").as("b")))
       .distinct().transform(Snapshots.cut)
     // label frames are node-count-sized every round — the count rides
-    // the label cut's materialization (no separate count job; sound
-    // because Snapshots.cut is an EAGER localCheckpoint) and sizes
+    // the label cut's materialization (no separate count job) and sizes
     // every loop snapshot plus the broadcast gate below
-    val obsN = org.apache.spark.sql.Observation()
-    var labels = und.select(col("a").as("id")).distinct()
+    val l0 = und.select(col("a").as("id")).distinct()
       .withColumn("component", col("id"))
-      .observe(obsN, count(lit(1)).as("n"))
-      .transform(Snapshots.cut)
-    val nodeCount = obsN.get("n").asInstanceOf[Long]
+    val (labels0, nodeCount) = Snapshots.cutCounted(l0, Snapshots.level(l0))
+    var labels = labels0
     // the frame holding the current round's materialized blocks: each
-    // new checkpoint retires the previous one (without the unpersist,
+    // new checkpoint retires the previous one (without the release,
     // block-manager storage grows linearly with the round count)
     var materialized = labels
     var changed = 1L
@@ -65,8 +62,7 @@ object ConnectedComponents {
         .select(col("id"), col("prev"), col("component"))
       // shortcut (pointer doubling): jump to the label's label — chains
       // collapse in O(log diameter) rounds instead of O(diameter).
-      val obs = org.apache.spark.sql.Observation()
-      val next = propagated.as("x")
+      val shortcut = propagated.as("x")
         .join(Snapshots.broadcastIfSmall(
           propagated.select(col("id").as("pid"),
             col("component").as("pcomp")), nodeCount),
@@ -74,14 +70,15 @@ object ConnectedComponents {
         .select(col("x.id").as("id"), col("x.prev").as("prev"),
           least(col("x.component"), coalesce(col("pcomp"),
             col("x.component"))).as("component"))
-        // convergence metric collected DURING the checkpoint
-        // materialization job (CollectMetrics rides the same pass) —
-        // one job per round, not materialize + a second count job
-        .observe(obs,
-          count(when(col("component") =!= col("prev"), 1)).as("changed"))
-        .transform(ds => Snapshots.cutSized(ds, nodeCount))
-      changed = obs.get("changed").asInstanceOf[Long]
-      materialized.unpersist()
+      // convergence metric collected DURING the checkpoint
+      // materialization job (CollectMetrics rides the same pass) —
+      // one job per round, not materialize + a second count job
+      val cn = Snapshots.cutObserved(shortcut,
+        Snapshots.levelFor(shortcut, nodeCount),
+        count(when(col("component") =!= col("prev"), 1)).as("changed"))
+      val next = cn.ds
+      changed = cn.long("changed")
+      Snapshots.release(materialized)
       materialized = next
       labels = next.select(col("id"), col("component"))
       i += 1

@@ -29,18 +29,12 @@ object KCore {
   def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "k and rounds must be positive")
     // edge count observed DURING the cut's materialization — no
-    // separate count job (sound because Snapshots.cut is an EAGER
-    // localCheckpoint)
-    val obs0 = org.apache.spark.sql.Observation()
-    var e = {
-      val d = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .filter(col("src") =!= col("dst"))
-      d.unionByName(d.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .observe(obs0, count(lit(1)).as("n"))
-        .transform(Snapshots.cut)
-    }
-    var size = obs0.get("n").asInstanceOf[Long]
+    // separate count job
+    val d = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .filter(col("src") =!= col("dst"))
+    val sym = d.unionByName(d.select(col("dst").as("src"),
+      col("src").as("dst"))).distinct()
+    var (e, size) = Snapshots.cutCounted(sym, Snapshots.level(sym))
     // exact node count — one cheap setup aggregate over the
     // just-materialized blocks (the symmetrized edge list carries every
     // node as a src); gates the survivor-broadcast decision below. NOT
@@ -68,21 +62,19 @@ object KCore {
         nodeBound)
       // survivor count observed DURING checkpoint materialization (one
       // job per peel round, not materialize + count), and the previous
-      // round's blocks retired — without the unpersist, storage grows
+      // round's blocks retired — without the release, storage grows
       // linearly with the round count
-      val obs = org.apache.spark.sql.Observation()
-      val e2 = e
+      val peeled = e
         .join(keep, col("src") === col("__kept"), "left_semi")
         .join(keep, col("dst") === col("__kept"), "left_semi")
-        .observe(obs, count(lit(1)).as("n"))
-        // previous round's count is a monotone upper bound on this
-        // round's rows (peeling only deletes) — lets Snapshots pick a
-        // memory level for small cores without a pre-count job
-        .transform(ds => Snapshots.cutSized(ds, size))
-      val newSize = obs.get("n").asInstanceOf[Long]
-      e.unpersist()
+      // previous round's count is a monotone upper bound on this
+      // round's rows (peeling only deletes) — lets Snapshots pick a
+      // memory level for small cores without a pre-count job
+      val (next, newSize) =
+        Snapshots.cutCounted(peeled, Snapshots.levelFor(peeled, size))
+      Snapshots.release(e)
       fixed = newSize == size
-      e = e2; size = newSize; r += 1
+      e = next; size = newSize; r += 1
     }
     e.groupBy(col("src")).agg(count(lit(1)).as("degree"))
       .filter(col("degree") >= k)

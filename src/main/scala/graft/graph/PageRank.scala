@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType,
   StructField, StructType}
@@ -46,14 +46,10 @@ import scala.jdk.CollectionConverters._
 object PageRank {
 
   /** Shared prelude, then the regime split. The distinct edges and the
-    * node set are eager lineage cuts; every driver-side count rides an
-    * `Observation` on a materialization that happens anyway (edge count
-    * on the edge cut; n / |seeds| / dangling counts on the node cut).
-    *
-    * NOTE [[Observation.get]] blocks until an action materializes the
-    * observed frame — sound here only because Snapshots.cut/cutSized
-    * are EAGER localCheckpoints (a lazy cut variant would turn these
-    * gets into hangs).
+    * node set are eager lineage cuts; every driver-side count is
+    * observed on a materialization that happens anyway
+    * ([[Snapshots.cutObserved]]: edge count on the edge cut;
+    * n / |seeds| / dangling counts on the node cut).
     *
     * @param onIter   (iteration, seconds) after each eagerly
     *   materialized round — the skew-probe instrumentation hook; fires
@@ -72,14 +68,12 @@ object PageRank {
                              tolerance: Option[Double] = None,
                              vectorMaxNodes: Long = Snapshots.BcastRowsMax)
       : DataFrame = {
-    val obsE = Observation()
-    val e = edges.select(col("src"), col("dst")).distinct()
-      // edge count observed DURING the cut's materialization (no
-      // separate count job): sizes the node snapshot below
-      // (nodes ≤ 2·edges) and the DataFrame loop's edge snapshot
-      .observe(obsE, count(lit(1)).as("n"))
-      .transform(Snapshots.cut)
-    val edgeCount = obsE.get("n").asInstanceOf[Long]
+    val distinctEdges = edges.select(col("src"), col("dst")).distinct()
+    // edge count observed DURING the cut's materialization (no separate
+    // count job): sizes the node snapshot below (nodes ≤ 2·edges) and
+    // the DataFrame loop's edge snapshot
+    val (e, edgeCount) =
+      Snapshots.cutCounted(distinctEdges, Snapshots.level(distinctEdges))
     // teleport set: uniform PageRank IS the personalized recurrence with
     // every node a seed, so one loop serves both — is_seed ∈ {0,1} and
     // S = |seeds| parameterize init and update. The edges are distinct,
@@ -99,24 +93,23 @@ object PageRank {
     }).select(col("address"), col("is_seed"), col("out_deg"))
     // n, |seeds|, dangling counts all ride the node cut's
     // materialization
-    val obsN = Observation()
-    val nodes = flagged
-      .observe(obsN, count(lit(1)).as("n"),
-        coalesce(sum(col("is_seed")), lit(0L)).as("s"),
-        count(when(col("out_deg") === 0, 1)).as("dang"))
-      .transform(ds => Snapshots.cutSized(ds, 2L * edgeCount))
-    val n = obsN.get("n").asInstanceOf[Long]
+    val cn = Snapshots.cutObserved(flagged,
+      Snapshots.levelFor(flagged, 2L * edgeCount), count(lit(1)).as("n"),
+      coalesce(sum(col("is_seed")), lit(0L)).as("s"),
+      count(when(col("out_deg") === 0, 1)).as("dang"))
+    val nodes = cn.ds
+    val n = cn.long("n")
     if (n == 0) // empty graph → empty result, for both variants
       return nodes.select(col("address")).withColumn("score", arith.zero)
-    val s = obsN.get("s").asInstanceOf[Long]
+    val s = cn.long("s")
     require(seeds.isEmpty || s > 0,
       "personalization seeds must intersect the graph")
     if (n <= vectorMaxNodes)
       vectorRounds(e, nodes, n.toInt, s, edgeCount, iterations, arith,
         onIter, tolerance)
     else
-      frameLoop(e, nodes, n, s, obsN.get("dang").asInstanceOf[Long] > 0,
-        edgeCount, iterations, arith, onIter, tolerance)
+      frameLoop(e, nodes, n, s, cn.long("dang") > 0, edgeCount, iterations,
+        arith, onIter, tolerance)
   }
 
   /** Edges per cached partition of the vector regime, at most (~32 MB of
@@ -125,7 +118,8 @@ object PageRank {
 
   /** The vector regime: the rank vector as a driver array indexed by the
     * collected node list, one Spark job per round (see the object doc).
-    * Returns (address, score) as a local relation. */
+    * Returns (address, score) as a local relation, so the prelude's
+    * edge and node cuts are released on the way out. */
   private def vectorRounds[A](e: DataFrame, nodes: DataFrame, n: Int,
                               s: Long, edgeCount: Long, iterations: Int,
                               arith: Arith[A], onIter: (Int, Double) => Unit,
@@ -173,6 +167,8 @@ object PageRank {
     } finally {
       blocks.unpersist(blocking = false)
       index.destroy()
+      Snapshots.release(e)
+      Snapshots.release(nodes)
     }
     spark.createDataFrame(
       address.indices.map(v => Row(address(v), rank(v))).asJava,
@@ -206,17 +202,16 @@ object PageRank {
     // (round i's mass rides round i's checkpoint the same way): rank
     // rows carry (is_seed, is_dang) so every per-round scalar is an
     // aggregate OF THE CHECKPOINT, never a fresh subtree
-    val obs0 = Observation()
-    var ranks = nodes.select(col("address"), col("is_seed"),
+    val init = nodes.select(col("address"), col("is_seed"),
       (col("out_deg") === 0).cast("int").as("is_dang"),
       arith.initCol(s).as("score"))
-      .observe(obs0,
-        sum(when(col("is_dang") === 1, col("score"))).as("dm"))
-      .transform(ds => Snapshots.cutSized(ds, n))
+    val c0 = Snapshots.cutObserved(init, Snapshots.levelFor(init, n),
+      sum(when(col("is_dang") === 1, col("score"))).as("dm"))
+    var ranks = c0.ds
     // raw observed dangling mass of the previous round (Long for the
     // scaled variant, Double for the float one; null ⇒ no dangling rows
     // ⇒ only read when hasDangling is false)
-    var dmVal: Any = obs0.get("dm")
+    var dmVal: Any = c0.values("dm")
     var converged = false
     for (i <- 1 to iterations if !converged) {
       val t0 = System.nanoTime()
@@ -246,12 +241,10 @@ object PageRank {
       ranks = withDm.select(col("address"), col("is_seed"), col("is_dang"),
         arith.updateCol(s, hasDangling).as("score"))
       if (i < iterations) {
-        val obsI = Observation()
-        ranks = ranks
-          .observe(obsI,
-            sum(when(col("is_dang") === 1, col("score"))).as("dm"))
-          .transform(ds => Snapshots.cutSized(ds, n))
-        dmVal = obsI.get("dm")
+        val ci = Snapshots.cutObserved(ranks, Snapshots.levelFor(ranks, n),
+          sum(when(col("is_dang") === 1, col("score"))).as("dm"))
+        ranks = ci.ds
+        dmVal = ci.values("dm")
         onIter(i, (System.nanoTime() - t0) / 1e9)
         tolerance.foreach { tol =>
           val delta = ranks
@@ -270,7 +263,7 @@ object PageRank {
         }
         // retire the superseded round's blocks: the new eager
         // checkpoint is self-contained
-        prev.unpersist()
+        Snapshots.release(prev)
       }
     }
     ranks.select(col("address"), col("score"))

@@ -1,24 +1,36 @@
 package graft.graph
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Column, Dataset, Observation}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 
-/** Per-round snapshot policy for the iterative graph family (PageRank /
-  * ConnectedComponents / Bfs / KCore). Every round of an iterative
-  * DataFrame algorithm must cut lineage (or the plan grows exponentially,
-  * SURVEY.md §7.3); the cut is an eager `localCheckpoint`, and the
-  * storage level of those checkpoint blocks is the algorithm's entire
-  * memory footprint beyond the shuffle.
+/** The engine's lineage-cut primitive: the eager `localCheckpoint`
+  * every iterative graph loop (PageRank / ConnectedComponents / Bfs /
+  * KCore), the corpus funnel and the ingest jobs materialize through.
+  * Every round of an iterative DataFrame algorithm must cut lineage (or
+  * the plan grows exponentially, SURVEY.md §7.3), and the storage level
+  * of the checkpoint blocks is the algorithm's entire memory footprint
+  * beyond the shuffle.
+  *
+  * [[cut]] / [[cutSized]] cut at a size-aware level. [[cutObserved]]
+  * (and [[cutCounted]]) also return aggregates observed during the
+  * cut's own materialization, so driver-side counts ride a job that
+  * runs anyway; eager by construction, the values are there when it
+  * returns (an `Observation` read before any action blocks forever).
+  * [[release]] retires a cut's blocks: Spark 4.1's `Dataset.unpersist`
+  * only drops CacheManager entries, so a checkpoint RDD's blocks stay
+  * in `getPersistentRDDs` until the RDD object is garbage-collected.
   *
   * Level policy (round 11, closing the r10 "nothing adapts" defect —
   * the flat DISK_ONLY default cost the sf0.1 graph family ~18% for
   * snapshots that were KB-sized):
   *
-  *  1. [[cutSized]] (a caller-known row count: KCore's peel size,
-  *     PageRank's node count, CC's label count) compares against
+  *  1. [[levelFor]] / [[cutSized]] (a caller-known row count: KCore's
+  *     peel size, PageRank's node count, CC's label count) compare against
   *     [[MemRowsKey]] — small snapshots go MEMORY_AND_DISK,
   *     large go DISK_ONLY;
-  *  2. [[cut]] (no count in hand) consults the optimizer's
+  *  2. [[level]] / [[cut]] (no count in hand) consult the optimizer's
   *     `stats.sizeInBytes` against [[MemBytesKey]] — free (no job),
   *     real for scan-rooted plans (the expensive FIRST snapshot of
   *     every algorithm, built straight off parquet), and
@@ -107,6 +119,39 @@ object Snapshots {
     * from the previous round — peeling/convergence only shrinks). */
   def cutSized[T](ds: Dataset[T], knownRows: Long): Dataset[T] =
     ds.localCheckpoint(true, levelFor(ds, knownRows))
+
+  /** An eager cut and the aggregates observed while it materialized,
+    * by alias (a null value = an aggregate over no rows). */
+  final case class Observed[T](ds: Dataset[T], values: Map[String, Any]) {
+    def long(name: String): Long = values(name).asInstanceOf[Long]
+  }
+
+  /** Eager lineage cut at `level` with `aggs` (aliased aggregate
+    * columns) computed in the same pass as a CollectMetrics node — one
+    * job, where a cut then a separate aggregate runs two or more. */
+  def cutObserved[T](ds: Dataset[T], level: StorageLevel, agg: Column,
+                     aggs: Column*): Observed[T] = {
+    val o = Observation()
+    val cut = ds.observe(o, agg, aggs: _*).localCheckpoint(true, level)
+    Observed(cut, o.get)
+  }
+
+  /** [[cutObserved]] with the row count alone: (cut, rows). */
+  def cutCounted[T](ds: Dataset[T], level: StorageLevel): (Dataset[T], Long) = {
+    val c = cutObserved(ds, level, count(lit(1)).as("n"))
+    (c.ds, c.long("n"))
+  }
+
+  /** Retires the checkpoint blocks under a cut frame (one returned by
+    * [[cut]], [[cutSized]], [[cutObserved]] or `localCheckpoint`; a
+    * derived frame is refused). Call it only once everything that
+    * reads the cut is materialized: a lost local-checkpoint block fails
+    * the next read. */
+  def release(df: Dataset[_]): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case p => throw new IllegalArgumentException(
+      s"release expects a cut frame, got a ${p.nodeName} plan")
+  }
 
   /** Max known row count at which the iterative graph family broadcasts
     * its node-sized per-round frames (KCore survivors, CC labels, BFS

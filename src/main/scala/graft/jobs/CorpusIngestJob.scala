@@ -3,6 +3,8 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+import graft.graph.Snapshots
 import graft.pipeline.TrainingData
 import graft.text.TextAnalysis
 
@@ -98,13 +100,13 @@ object CorpusIngestJob {
           Seq("doc_id"), "left_anti")
         case None => classed
       }
-      val cleanKept = clean.localCheckpoint(true)
+      val (cleanKept, appended) =
+        Snapshots.cutCounted(clean, MEMORY_AND_DISK)
       try {
-        val appended = cleanKept.count()
         // stores must learn this batch's hashes/grams even when the
         // scrub or decontamination emptied the corpus delta — the
         // content was still SEEN, and future copies of it are dups
-        if (exact.count() > 0) {
+        if (hashStage.rows > 0) {
           if (appended > 0)
             cleanKept.write.mode("append").parquet(s"$outDir/documents")
           scrubStage.commit()
@@ -113,9 +115,9 @@ object CorpusIngestJob {
         appended
       } finally {
         scrubStage.release()
-        cleanKept.unpersist()
+        Snapshots.release(cleanKept)
       }
-    } finally hashStage.out.unpersist()
+    } finally Snapshots.release(hashStage.out)
   }
 
   /** File-drop streaming entry (replayable source + checkpoint →

@@ -3,7 +3,9 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.dedup.Dedup
+import graft.graph.Snapshots
 
 /** Incremental dedup at ingest — the continuous-corpus-building pattern:
   * each arriving micro-batch of documents is (1) deduplicated within the
@@ -76,10 +78,12 @@ object DedupIngestJob {
     * ([[CorpusIngestJob]]) can write their corpus BEFORE committing the
     * store (the no-loss ordering): `out` is the eagerly materialized
     * batch survivors (original columns + `content_hash`; in-batch
-    * keep-lowest-id per hash, store hashes anti-joined away) and
-    * `commit()` appends their hashes to the bucketed store. Caller
-    * unpersists `out`. */
-  private[jobs] case class StagedHash(out: DataFrame, commit: () => Unit)
+    * keep-lowest-id per hash, store hashes anti-joined away), `rows`
+    * their count (observed on the cut) and `commit()` appends their
+    * hashes to the bucketed store. Caller releases `out`
+    * ([[graft.graph.Snapshots.release]]). */
+  private[jobs] case class StagedHash(out: DataFrame, rows: Long,
+                                      commit: () => Unit)
 
   private[jobs] def hashCore(docs: DataFrame, outDir: String): StagedHash = {
     val spark = docs.sparkSession
@@ -90,13 +94,13 @@ object DedupIngestJob {
           .partitionBy(col("content_hash")).orderBy(col("doc_id"))))
       .filter(col("rn") === 1).drop("rn")
     // cross-batch dedup: drop docs whose hash the store already holds
-    val fresh = (storeView(spark, outDir) match {
+    val (fresh, rows) = Snapshots.cutCounted(storeView(spark, outDir) match {
       case Some(seen) =>
         inBatch.join(seen.select(col("content_hash")),
           Seq("content_hash"), "left_anti")
       case None => inBatch
-    }).localCheckpoint(true)
-    StagedHash(fresh, () =>
+    }, MEMORY_AND_DISK)
+    StagedHash(fresh, rows, () =>
       graft.io.BucketedStore.append(fresh.select(col("content_hash")),
         storeTable(outDir), s"$outDir/content_hash",
         "content_hash", Seq("content_hash"), storeBuckets(spark)))
@@ -107,7 +111,7 @@ object DedupIngestJob {
   def writeBatch(docs: DataFrame, outDir: String): Long = {
     val staged = hashCore(docs, outDir)
     try {
-      val n = staged.out.count()
+      val n = staged.rows
       if (n > 0) {
         // corpus first, store second: a crash between the writes can
         // re-admit this batch's docs on replay (rare duplicate), while
@@ -119,7 +123,7 @@ object DedupIngestJob {
         staged.commit()
       }
       n
-    } finally staged.out.unpersist()
+    } finally Snapshots.release(staged.out)
   }
 
   /** File-drop streaming entry (replayable source + checkpoint →

@@ -3,6 +3,8 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+import graft.graph.Snapshots
 import graft.sim.IvfPqInt
 import graft.sim.IvfPqInt.IvfPqModel
 
@@ -355,9 +357,8 @@ object IvfPqIndexJob {
         "left_anti")
       case None => codes
     }
-    val fresh = fresh0.localCheckpoint(true)
+    val (fresh, n) = Snapshots.cutCounted(fresh0, MEMORY_AND_DISK)
     try {
-      val n = fresh.count()
       if (n > 0) {
         // the stores are about to outgrow the build corpus: clear the
         // ensureBuilt fingerprint so a later ensureBuilt over the build
@@ -377,7 +378,7 @@ object IvfPqIndexJob {
       } else log.info(s"ivfpq ingest at $outDir: batch fully replayed, " +
         "nothing appended")
       n
-    } finally fresh.unpersist()
+    } finally Snapshots.release(fresh)
   }
 
   /** Bucket-preserving small-file compaction of both stores — the

@@ -3,7 +3,9 @@ package graft.jobs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.dedup.Dedup
+import graft.graph.Snapshots
 
 /** Incremental NEAR-dup suppression at ingest — [[DedupIngestJob]]'s
   * sibling for the fuzzy half of corpus building: exact dedup drops
@@ -150,9 +152,9 @@ object NearDupIngestJob {
         .limit(0).select(col("doc_id"))
     }
 
-    val keptIds = inBatchKept.join(crossDropped, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    val n = keptIds.count()
+    val (keptIds, n) = Snapshots.cutCounted(
+      inBatchKept.join(crossDropped, Seq("doc_id"), "left_anti"),
+      MEMORY_AND_DISK)
     if (n > 0) {
       docs.join(keptIds, Seq("doc_id"), "left_semi")
         .write.mode("append").parquet(s"$outDir/documents")

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 import graft.dedup.{Dedup, ParagraphDedup}
+import graft.graph.Snapshots
 
 /** Incremental segment-level ("paragraph") dedup at ingest — the
   * streaming form of [[ParagraphDedup.dedupSegments]]: each arriving
@@ -130,7 +132,7 @@ object SegmentIngestJob {
         docs.join(seen.select(col("doc_id")), Seq("doc_id"), "left_anti")
       case None => docs
     }
-    val fresh = fresh0.localCheckpoint(true)
+    val (fresh, n) = Snapshots.cutCounted(fresh0, MEMORY_AND_DISK)
     try {
       val seg = ParagraphDedup.segments(fresh, w)
         .withColumn("h", xxhash64(col("seg")))
@@ -156,7 +158,6 @@ object SegmentIngestJob {
               s => s.getField("seg"))).as("text_dedup"),
             count(lit(1)).as("segs_kept"),
             any_value(col("segs_total")).as("segs_total"))
-        val n = fresh.count()
         if (n > 0) {
           // corpus first, stores second (no-loss ordering): replay
           // after a crash between the writes can duplicate a batch's
@@ -174,8 +175,8 @@ object SegmentIngestJob {
             "doc_id")
         }
         n
-      } finally seg.unpersist()
-    } finally fresh.unpersist()
+      } finally Snapshots.release(seg)
+    } finally Snapshots.release(fresh)
   }
 
   /** File-drop streaming entry (replayable source + checkpoint →

@@ -3,6 +3,8 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+import graft.graph.Snapshots
 import graft.sim.Similarity
 
 /** Incremental semantic dedup at ingest — the streaming form of
@@ -173,7 +175,7 @@ object SemanticIngestJob {
         Seq("cell", "vec_id"), "left_anti")
       case None => e
     }
-    val fresh = fresh0.localCheckpoint(true)
+    val (fresh, n) = Snapshots.cutCounted(fresh0, MEMORY_AND_DISK)
     try {
       // dominators already ingested: smallest same-cell store id within
       // threshold (the id filter matters only for non-monotonic ingest
@@ -204,13 +206,12 @@ object SemanticIngestJob {
         .withColumn("dup_of", least(col("dup_hist"), col("dup_batch")))
         .select(col("vec_id"), col("cell"), col("v"), col("dup_of"),
           col("dup_of").isNull.as("kept"))
-      val n = fresh.count()
       if (n > 0)
         graft.io.BucketedStore.append(verdict, tableName(outDir),
           s"$outDir/vectors", "cell", Seq("cell", "vec_id"),
           storeBuckets(spark))
       n
-    } finally fresh.unpersist()
+    } finally Snapshots.release(fresh)
   }
 
   /** File-drop streaming entry (replayable source + checkpoint →

@@ -3,6 +3,8 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+import graft.graph.Snapshots
 
 /** Incremental exact-substring scrub at ingest — the streaming form of
   * [[graft.dedup.SubstringDedup.dedupCorpus]]: each arriving micro-batch
@@ -121,7 +123,7 @@ object SubstringIngestJob {
         appendBucketed(newGrams.select(col("g"), col("min_doc")),
           outDir, "grams", "g")
       },
-      () => sh.unpersist())
+      () => Snapshots.release(sh))
   }
 
   /** Batch core, shared by streaming foreachBatch and tests.
@@ -138,10 +140,9 @@ object SubstringIngestJob {
         docs.join(seen.select(col("doc_id")), Seq("doc_id"), "left_anti")
       case None => docs
     }
-    val fresh = fresh0.localCheckpoint(true)
+    val (fresh, n) = Snapshots.cutCounted(fresh0, MEMORY_AND_DISK)
     try {
       val staged = scrubCore(fresh, outDir, k)
-      val n = fresh.count()
       if (n > 0) {
         // corpus first, stores second (no-loss ordering, as the other
         // ingest jobs): a crash between the writes can re-append this
@@ -154,7 +155,7 @@ object SubstringIngestJob {
       }
       staged.release()
       n
-    } finally fresh.unpersist()
+    } finally Snapshots.release(fresh)
   }
 
   /** File-drop streaming entry (replayable source + checkpoint →

@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.dedup.{Dedup, SemanticDedup, SubstringDedup}
-import graft.graph.ConnectedComponents
+import graft.graph.{ConnectedComponents, Snapshots}
 import graft.text.{Bpe, NaiveBayes, TextAnalysis}
 
 /** End-to-end training-corpus preparation — the composition proof that
@@ -91,27 +91,31 @@ object CorpusPipeline {
               classifier: Option[(DataFrame, Seq[String])] = None,
               segmentDedupW: Int = 0, domainBudget: Long = 0)
       : Prepared = {
-    import org.apache.spark.sql.Observation
     import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val funnel = scala.collection.mutable.ArrayBuffer.empty[StageCount]
-    // rows + Σ tokens of the stage's survivors, riding the stage's own
-    // materialization job as a CollectMetrics node — accounting costs
-    // zero extra passes
+    def ntok = when(col("text") === "", 0)
+      .otherwise(size(split(col("text"), " "))).cast("long")
+    def total(c: Column) = coalesce(sum(c), lit(0L))
     def cnt = count(lit(1)).as("n")
-    def tok = coalesce(sum(when(col("text") === "", 0)
-      .otherwise(size(split(col("text"), " ")))), lit(0L)).as("tok")
-    def stageOf(name: String, o: Observation): Unit =
-      funnel += StageCount(name, o.get("n").asInstanceOf[Long],
-        o.get("tok").asInstanceOf[Long])
     // every stage's materialization runs under a job description
     // ("funnel:<stage>") so a listener (tools/FunnelProfile) can
-    // attribute wall time to stages without guessing from job ids —
-    // zero-cost observability, the per-stage twin of the Observation
-    // row/token accounting above
+    // attribute wall time to stages without guessing from job ids
     def describing[T](name: String)(body: => T): T = {
       val sc = docs.sparkSession.sparkContext
       sc.setJobDescription(s"funnel:$name")
       try body finally sc.setJobDescription(null)
+    }
+    // one corpus stage: the survivors are cut with their receipt (rows
+    // + Σ tokens) observed in the same job — accounting costs zero
+    // extra passes — then the superseded cuts are retired so
+    // full-corpus copies don't pin executor storage
+    def stage(name: String, retire: DataFrame*)(df: DataFrame): DataFrame = {
+      val c = describing(name)(Snapshots.cutObserved(df, MEMORY_AND_DISK,
+        cnt, total(ntok).as("tok")))
+      funnel += StageCount(name, c.long("n"), c.long("tok"))
+      retire.foreach(Snapshots.release)
+      c.ds
     }
     // the input is NOT copied aside: its lineage (normally a pruned
     // parquet scan) is read by both the main chain and the
@@ -147,14 +151,20 @@ object CorpusPipeline {
     // .gateFeatures — 50.4 → 29.9 s at sf10, values bit-identical to
     // the separate langIdCols/qualityCol trees; SCALE_AUDIT
     // "gate-features as a codegen expression")
-    val feat = describing("gates_features")(TextAnalysis
-      .gateFeatures(input)
-      .select(col("doc_id"), col("source"), col("__lang"), col("__q"),
-        when(col("text") === "", 0)
-          .otherwise(size(split(col("text"), " ")))
-          .cast("long").as("__ntok"))
-      .localCheckpoint(true))
-    val langOk = feat.filter(col("__lang").isin(langs: _*))
+    val langIn = col("__lang").isin(langs: _*)
+    // the input and lang_filter receipts ride the feature cut
+    val feat = {
+      val c = describing("gates_features")(Snapshots.cutObserved(
+        TextAnalysis.gateFeatures(input).select(col("doc_id"),
+          col("source"), col("__lang"), col("__q"), ntok.as("__ntok")),
+        MEMORY_AND_DISK, cnt, total(col("__ntok")).as("tok"),
+        count(when(langIn, 1)).as("lang_n"),
+        total(when(langIn, col("__ntok"))).as("lang_tok")))
+      funnel += StageCount("input", c.long("n"), c.long("tok"))
+      funnel += StageCount("lang_filter", c.long("lang_n"), c.long("lang_tok"))
+      c.ds
+    }
+    val langOk = feat.filter(langIn)
     // same boundary semantics as before: smallest kept (quality,
     // doc_id) struct per source; single-row strata keep their row
     val thresholds = langOk
@@ -164,26 +174,20 @@ object CorpusPipeline {
       .filter(col("__pr") >= minQualityPercentile || col("__n") === 1)
       .groupBy(col("source"))
       .agg(min(struct(col("__q"), col("doc_id"))).as("__thr"))
-    val keepIds = describing("gates_boundary")(langOk
-      .join(broadcast(thresholds), Seq("source"))
-      .filter(struct(col("__q"), col("doc_id")) >= col("__thr"))
-      .select(col("doc_id"), col("__ntok"))
-      .localCheckpoint(true))
-    // funnel receipts for input/lang/quality: aggregates over the
-    // narrow frames — same values the in-plan observations produced,
-    // at the cost of two sub-second narrow jobs
-    def narrowStage(name: String, df: DataFrame): Unit = {
-      val r = df.agg(count(lit(1)).as("n"),
-        coalesce(sum(col("__ntok")), lit(0L)).as("tok")).head()
-      funnel += StageCount(name, r.getLong(0), r.getLong(1))
+    // the quality_gate receipt rides the keep-id cut
+    val keepIds = {
+      val c = describing("gates_boundary")(Snapshots.cutObserved(
+        langOk
+          .join(broadcast(thresholds), Seq("source"))
+          .filter(struct(col("__q"), col("doc_id")) >= col("__thr"))
+          .select(col("doc_id"), col("__ntok")),
+        MEMORY_AND_DISK, cnt, total(col("__ntok")).as("tok")))
+      funnel += StageCount("quality_gate", c.long("n"), c.long("tok"))
+      c.ds
     }
-    narrowStage("input", feat)
-    narrowStage("lang_filter", langOk)
-    narrowStage("quality_gate", keepIds)
 
-    val oExact = Observation()
     val hw = Window.partitionBy(col("__ch"))
-    val exactKept = input
+    val exactKept = stage("exact_dedup", feat, keepIds)(input
       .join(keepIds.select(col("doc_id")), Seq("doc_id"), "left_semi")
       // exact dedup: keep each content-hash group's min doc_id — one
       // window over one well-distributed shuffle, no join-back
@@ -192,26 +196,16 @@ object CorpusPipeline {
       .withColumn("__ch", xxhash64(Dedup.normalize(col("text"))))
       .withColumn("__keep", min(col("doc_id")).over(hw))
       .filter(col("doc_id") === col("__keep"))
-      .select(cols: _*)
-      .observe(oExact, cnt, tok)
-      .transform(d => describing("gates")(d.localCheckpoint(true)))
-    stageOf("exact_dedup", oExact)
-    feat.unpersist(); keepIds.unpersist()
+      .select(cols: _*))
 
     // duplicated k-gram spans removed keep-first; scrubDocs carries the
     // doc's remaining columns through its internal rebuild join, so the
     // stage is ONE pass — no second corpus-wide join-back on doc_id.
     // Fully-covered (now empty) docs leave the corpus
-    val oScrub = Observation()
-    val scrubKept = SubstringDedup.scrubDocs(exactKept, scrubK)
+    val scrubKept = stage("substring_scrub", exactKept)(SubstringDedup
+      .scrubDocs(exactKept, scrubK)
       .filter(col("text") =!= "")
-      .select(cols: _*)
-      .observe(oScrub, cnt, tok)
-      .transform(d => describing("substring_scrub")(d.localCheckpoint(true)))
-    stageOf("substring_scrub", oScrub)
-    // each new checkpoint retires its predecessor's blocks so
-    // superseded full-corpus copies don't pin executor storage
-    exactKept.unpersist()
+      .select(cols: _*))
 
     // segment-level dedup (C4/CCNet paragraph shape): aligned w-word
     // windows deduplicated corpus-wide keep-first, documents rebuilt
@@ -222,19 +216,13 @@ object CorpusPipeline {
     val afterSeg =
       if (segmentDedupW <= 0) scrubKept
       else {
-        val oSeg = Observation()
         val segd = graft.dedup.ParagraphDedup
           .dedupSegments(scrubKept, segmentDedupW)
           .select(col("doc_id"),
             col("text_dedup").as("text"))
-        val kept = scrubKept.drop("text")
+        stage("segment_dedup", scrubKept)(scrubKept.drop("text")
           .join(segd, Seq("doc_id"))
-          .select(cols: _*)
-          .observe(oSeg, cnt, tok)
-          .transform(d => describing("segment_dedup")(d.localCheckpoint(true)))
-        stageOf("segment_dedup", oSeg)
-        scrubKept.unpersist()
-        kept
+          .select(cols: _*))
       }
 
     // model-based gate on the text that ships: docs whose argmax class
@@ -243,40 +231,29 @@ object CorpusPipeline {
     val afterClf = classifier match {
       case None => afterSeg
       case Some((model, keep)) =>
-        val oClf = Observation()
         val passing = NaiveBayes.classify(afterSeg, model)
           .filter(col("pred_label").isin(keep: _*))
           .select(col("doc_id"))
-        val kept = afterSeg.join(passing, Seq("doc_id"), "left_semi")
-          .observe(oClf, cnt, tok)
-          .transform(d => describing("classifier_gate")(d.localCheckpoint(true)))
-        stageOf("classifier_gate", oClf)
-        afterSeg.unpersist()
-        kept
+        stage("classifier_gate", afterSeg)(
+          afterSeg.join(passing, Seq("doc_id"), "left_semi"))
     }
 
     val afterNear =
       if (nearDupThreshold <= 0) afterClf
       else {
-        val oNear = Observation()
         val pairs = Dedup
           .minhashDuplicatePairs(afterClf, nearDupThreshold)
           .select(col("id1").as("src"), col("id2").as("dst"))
         val dropNear = ConnectedComponents.run(pairs)
           .filter(col("id") =!= col("component")) // keep cluster's min
           .select(col("id").as("doc_id"))
-        val kept = afterClf.join(dropNear, Seq("doc_id"), "left_anti")
-          .observe(oNear, cnt, tok)
-          .transform(d => describing("near_dedup")(d.localCheckpoint(true)))
-        stageOf("near_dedup", oNear)
-        afterClf.unpersist()
-        kept
+        stage("near_dedup", afterClf)(
+          afterClf.join(dropNear, Seq("doc_id"), "left_anti"))
       }
 
     val afterSemantic = embeddings match {
       case None => afterNear
       case Some(emb) =>
-        val oSem = Observation()
         val sem = SemanticDedup.semanticDedup(
           emb.join(afterNear.select(col("doc_id")), Seq("doc_id"),
             "left_semi")
@@ -284,24 +261,14 @@ object CorpusPipeline {
           semanticClusters, semanticThreshold)
         val drop = sem.filter(!col("kept"))
           .select(col("vec_id").as("doc_id"))
-        val kept = afterNear.join(drop, Seq("doc_id"), "left_anti")
-          .observe(oSem, cnt, tok)
-          .transform(d => describing("semantic_dedup")(d.localCheckpoint(true)))
-        stageOf("semantic_dedup", oSem)
-        afterNear.unpersist()
-        kept
+        stage("semantic_dedup", afterNear)(
+          afterNear.join(drop, Seq("doc_id"), "left_anti"))
     }
 
-    val oClean = Observation()
     val contaminated = TrainingData.contamination(afterSemantic, benchmark)
       .select(col("doc_id"))
-    val cleanKept = afterSemantic
-      .join(contaminated, Seq("doc_id"), "left_anti")
-      .observe(oClean, cnt, tok)
-      .persist()
-    describing("decontaminate")(cleanKept.count()) // materialize; fires the observation
-    stageOf("decontaminate", oClean)
-    afterSemantic.unpersist()
+    val cleanKept = stage("decontaminate", afterSemantic)(
+      afterSemantic.join(contaminated, Seq("doc_id"), "left_anti"))
 
     // per-source token budget (RefinedWeb-style balancing) as the LAST
     // gate: budgets are spent on exactly the text that ships, with the
@@ -309,17 +276,11 @@ object CorpusPipeline {
     val afterCap =
       if (domainBudget <= 0) cleanKept
       else {
-        val oCap = Observation()
         val keepIds = DomainBalance
           .capByTokenBudget(cleanKept, domainBudget)
           .select(col("doc_id"))
-        val kept = cleanKept.join(keepIds, Seq("doc_id"), "left_semi")
-          .observe(oCap, cnt, tok)
-          .persist()
-        describing("domain_cap")(kept.count())
-        stageOf("domain_cap", oCap)
-        cleanKept.unpersist()
-        kept
+        stage("domain_cap", cleanKept)(
+          cleanKept.join(keepIds, Seq("doc_id"), "left_semi"))
       }
 
     // tokenizer training on exactly the corpus that ships

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.graph.Snapshots
 
 /** Approximate/exact nearest-neighbor search over an embedding column
   * (BASELINE.json north star: similarity search as a first-class engine
@@ -210,7 +211,7 @@ object Similarity {
     // the model is extracted — the training frame's checkpoint blocks
     // have no further reader (callers re-derive their own assignment
     // frame from `embeddings`)
-    e.unpersist()
+    Snapshots.release(e)
     cents
   }
 

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.graph.Snapshots
 
 /** Byte-pair-encoding merge learning — the tokenizer TRAINING step
   * (classic BPE: repeatedly merge the most frequent adjacent symbol
@@ -109,10 +110,11 @@ object Bpe {
         // the new checkpoint is materialized (eager=true): the previous
         // round's blocks are dead weight — without this, block-manager
         // storage grows linearly with the merge count
-        prev.unpersist()
+        Snapshots.release(prev)
         rank += 1
       }
     }
+    Snapshots.release(words)
     import spark.implicits._
     learned.result().toDF("rank", "left", "right", "pair_count")
       .select(col("rank").cast("int"), col("left"), col("right"),
@@ -252,9 +254,10 @@ object Bpe {
         words = words.withColumn("s",
           mergePassMulti(col("s"), picked.map(p => (p._1, p._2))))
           .localCheckpoint(true)
-        prev.unpersist()
+        Snapshots.release(prev)
       }
     }
+    Snapshots.release(words)
     (learned.result(), rounds)
   }
 

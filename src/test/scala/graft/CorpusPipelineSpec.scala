@@ -240,4 +240,18 @@ class CorpusPipelineSpec extends AnyFunSuite with SparkTestBase {
       .collect().toSet
     assert(capIds == ids)
   }
+
+  test("q106's options: every receipt rides a cut, no receipt jobs") {
+    var p: CorpusPipeline.Prepared = null
+    val jobs = sparkJobs {
+      p = CorpusPipeline.prepare(docs, benchmark, langs = Seq("en", "und"),
+        minQualityPercentile = 0.2, nearDupThreshold = 0.0, scrubK = 8)
+    }
+    // 24 jobs when the input/lang/quality receipts were three separate
+    // aggregates (2 jobs each under AQE) and decontaminate was a
+    // persist + count (2 jobs more than its cut): 24 − 6 − 2 = 16
+    assert(jobs == 16, s"$jobs jobs")
+    assert(p.funnel.map(_.stage) == Seq("input", "lang_filter",
+      "quality_gate", "exact_dedup", "substring_scrub", "decontaminate"))
+  }
 }

@@ -38,6 +38,20 @@ class DedupIngestSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.parquet(s"$out/documents").count() == 2)
   }
 
+  test("writeBatch reads the survivor count off the cut: no count job") {
+    val out = tmp()
+    val b1 = Seq((1L, "alpha beta"), (2L, "gamma delta"), (3L, "Alpha beta"))
+      .toDF("doc_id", "text")
+    val b2 = Seq((4L, "alpha beta"), (5L, "epsilon zeta"))
+      .toDF("doc_id", "text")
+    var n1, n2 = 0L
+    val jobs1 = sparkJobs { n1 = DedupIngestJob.writeBatch(b1, out) }
+    val jobs2 = sparkJobs { n2 = DedupIngestJob.writeBatch(b2, out) }
+    assert((n1, n2) == ((2L, 1L)))
+    // 7 and 9 jobs when a count (2 jobs under AQE) ran after the cut
+    assert((jobs1, jobs2) == ((5, 7)), s"$jobs1, $jobs2 jobs")
+  }
+
   test("bucketed store: anti-join plans with no exchange on the store " +
     "side") {
     val out = tmp()

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.graph.PageRank
@@ -87,21 +85,8 @@ class PageRankRegimeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("one Spark job per round") {
-    def jobs(iterations: Int): Int = {
-      val sc = spark.sparkContext
-      var n = 0
-      val listener = new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit =
-          synchronized { n += 1 }
-      }
-      Bridge.waitListenerBus(spark)
-      sc.addSparkListener(listener)
-      try {
-        PageRank.run(graph, iterations = iterations).collect()
-        Bridge.waitListenerBus(spark)
-      } finally sc.removeSparkListener(listener)
-      listener.synchronized(n)
-    }
+    def jobs(iterations: Int): Int =
+      sparkJobs(PageRank.run(graph, iterations = iterations).collect())
     val five = jobs(5)
     val ten = jobs(10)
     assert(ten - five == 5, s"5 rounds: $five jobs, 10 rounds: $ten jobs")

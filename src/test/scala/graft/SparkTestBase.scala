@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one per suite (lazy). */
@@ -10,4 +12,22 @@ trait SparkTestBase { self: AnyFunSuite =>
     .config("spark.sql.warehouse.dir",
       s"/tmp/graft_warehouse_${sys.props.getOrElse("user.name", "u")}")
     .getOrCreate()
+
+  /** Number of Spark jobs `body` starts (the listener bus is drained
+    * on both sides, so no earlier job leaks in and none is missed). */
+  def sparkJobs(body: => Any): Int = {
+    val sc = spark.sparkContext
+    var n = 0
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        synchronized { n += 1 }
+    }
+    Bridge.waitListenerBus(spark)
+    sc.addSparkListener(listener)
+    try {
+      body
+      Bridge.waitListenerBus(spark)
+    } finally sc.removeSparkListener(listener)
+    listener.synchronized(n)
+  }
 }
