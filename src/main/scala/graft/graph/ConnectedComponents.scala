@@ -17,7 +17,16 @@ object ConnectedComponents {
 
   /** @param edges (src, dst) undirected pairs (any orientation)
     * @return (id, component) — component = min node id in the component */
-  def run(edges: DataFrame, maxIterations: Int = 20): DataFrame = {
+  def run(edges: DataFrame, maxIterations: Int = 20): DataFrame =
+    labelCut(edges, maxIterations).select(col("id"), col("component"))
+
+  /** [[run]]'s labels as the cut frame that holds them — (id,
+    * component), plus the previous round's `prev` once a round has run —
+    * so a caller can retire it with [[Snapshots.release]] once its
+    * readers are materialized. Every other cut of the run is released
+    * here. */
+  private[graft] def labelCut(edges: DataFrame,
+                              maxIterations: Int = 20): DataFrame = {
     val und = edges.select(col("src").as("a"), col("dst").as("b"))
       .union(edges.select(col("dst").as("a"), col("src").as("b")))
       .distinct().transform(Snapshots.cut)
@@ -83,6 +92,8 @@ object ConnectedComponents {
       labels = next.select(col("id"), col("component"))
       i += 1
     }
-    labels
+    // every round is materialized, and the last label cut reads no edge
+    Snapshots.release(und)
+    materialized
   }
 }

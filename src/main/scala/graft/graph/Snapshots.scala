@@ -124,6 +124,9 @@ object Snapshots {
     * by alias (a null value = an aggregate over no rows). */
   final case class Observed[T](ds: Dataset[T], values: Map[String, Any]) {
     def long(name: String): Long = values(name).asInstanceOf[Long]
+    /** A `collect_set` / `collect_list` of longs, by alias. */
+    def longs(name: String): Seq[Long] =
+      values(name).asInstanceOf[scala.collection.Seq[Long]].toSeq
   }
 
   /** Eager lineage cut at `level` with `aggs` (aliased aggregate

@@ -125,7 +125,8 @@ object NearDupIngestJob {
         Seq("id2"))
       .filter(agreement(col("s1"), col("s2")) >= p.minMatchFrac)
       .select(col("id1").as("src"), col("id2").as("dst"))
-    val reps = graft.graph.ConnectedComponents.run(pairs)
+    val labels = graft.graph.ConnectedComponents.labelCut(pairs)
+    val reps = labels
       .filter(col("id") === col("component")).select(col("id"))
     val clustered = pairs.select(col("src")).union(pairs.select(col("dst")))
       .distinct().withColumnRenamed("src", "doc_id")
@@ -155,6 +156,7 @@ object NearDupIngestJob {
     val (keptIds, n) = Snapshots.cutCounted(
       inBatchKept.join(crossDropped, Seq("doc_id"), "left_anti"),
       MEMORY_AND_DISK)
+    Snapshots.release(labels) // its only reader, keptIds, is materialized
     if (n > 0) {
       docs.join(keptIds, Seq("doc_id"), "left_semi")
         .write.mode("append").parquet(s"$outDir/documents")
@@ -166,6 +168,8 @@ object NearDupIngestJob {
       appendStore(buckets.join(keptIds, Seq("doc_id"), "left_semi")
         .select(col("bucket"), col("doc_id")), "buckets", "bucket")
     }
+    // the writes above are the last readers of the batch's cuts
+    Seq(keptIds, buckets, sigs).foreach(Snapshots.release)
     n
   }
 

@@ -1,10 +1,10 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.ops.Volume
-import graft.graph.PageRank
+import graft.graph.{PageRank, Snapshots}
 
 /** Batch rollup chain (SURVEY.md §3.3) — the Airflow DAGs as one job:
   * vol → vol_by_block / vol_all_time (upserted on their keys), plus
@@ -25,8 +25,15 @@ import graft.graph.PageRank
   * the table. Existence probes go through the Hadoop FileSystem API, so
   * the job runs unchanged on HDFS/S3 (`java.io.File` does not).
   *
+  * The touched sets cost no job of their own: `byBlock` and the
+  * all-time `delta` are each one eager observed cut
+  * ([[Snapshots.cutObserved]]) that also collects its `pbucket` set, and
+  * PageRank, a global recompute, touches every key bucket. Stored
+  * partitions are read with the updates' schema (no schema-inference
+  * job), and each upsert materializes its merged partitions once.
+  *
   * vol_all_time is maintained INCREMENTALLY: the tick computes, per
-  * unit, Δ = Σ(new by-block rows) − Σ(the rows they replace) and adds it
+  * unit, Δ = Σ(new by-block row − the stored row it replaces) and adds it
   * to the stored all-time value, so neither leg ever rescans
   * vol_by_block history. Incremental double summation reassociates
   * floating-point adds (same class of reordering as Spark's own partial
@@ -46,6 +53,9 @@ object RollupJob {
     * partition-granular rewrites, not parallelism. */
   private val KeyBuckets = 16
 
+  private def keyBucket(key: Column): Column =
+    pmod(hash(key), lit(KeyBuckets)).cast("long")
+
   /** @param sinceHeight the tick's input window — only vol rows at
     *   `height >= sinceHeight` are re-rolled (the cadence scheduler
     *   passes the last processed height, minus any reorg margin). None
@@ -56,57 +66,67 @@ object RollupJob {
     val hb = heightBucketSize(spark)
     val byBlockPath = s"$dataDir/vol_by_block"
     val allTimePath = s"$dataDir/vol_all_time"
+    val touchedSet = collect_set(col("pbucket")).as("touched")
 
-    // extract: WHERE value_adj != 0 (F5), windowed to the tick
+    // extract: WHERE value_adj != 0 (F5), windowed to the tick; the cut
+    // observes the height buckets the by-block upsert will rewrite
     val vol = sinceHeight.foldLeft(
       spark.read.parquet(s"$dataDir/vol")
         .filter(col("value_adj") =!= 0.0))(
       (df, h) => df.filter(col("height") >= h))
-    val byBlock = Volume.byBlock(vol)
-      .withColumn("pbucket", expr(s"height div $hb"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    byBlock.count()
+    val byBlockCut = Snapshots.cutObserved(Volume.byBlock(vol)
+      .withColumn("pbucket", expr(s"height div $hb")),
+      MEMORY_AND_DISK, touchedSet)
+    val byBlock = byBlockCut.ds
+    val byBlockTouched = byBlockCut.longs("touched")
 
     // all-time delta, computed BEFORE the by-block write rewrites the
-    // partitions it reads: Δ(unit) = Σ new rows − Σ the rows they replace
-    val newSums = byBlock.groupBy("unit")
-      .agg(sum(col("value_adj")).as("new_sum"))
-    val replacedSums =
+    // partitions it reads: each new row minus the stored row it
+    // replaces (stored (unit, height) keys are unique — the upsert keeps
+    // them so), summed per unit. A re-rolled row equal to its stored
+    // value contributes an exact 0.
+    val withOld =
       if (Volume.pathExists(spark, byBlockPath))
-        Volume.readTouched(spark, byBlockPath, Volume.touchedBuckets(byBlock))
-          .join(byBlock.select("unit", "height").distinct(),
-            Seq("unit", "height"), "left_semi")
-          .groupBy("unit").agg(sum(col("value_adj")).as("old_sum"))
-      else newSums.select(col("unit"), lit(0.0).as("old_sum")).limit(0)
+        byBlock.join(
+          Volume.readTouched(spark, byBlockPath, byBlock.schema,
+            byBlockTouched)
+            .select(col("unit"), col("height"), col("value_adj").as("old")),
+          Seq("unit", "height"), "left")
+      else byBlock.withColumn("old", lit(null).cast("double"))
     // Lineage CUT, not just cache: delta's plan scans vol_by_block, and
     // the upsert below rewrites those partitions AND refreshes path
     // caches (refreshByPath) — a plain persist would silently recompute
-    // delta from the post-write files, collapsing it to 0.
-    val delta = newSums.join(replacedSums, Seq("unit"), "left")
-      .select(col("unit"),
-        (col("new_sum") - coalesce(col("old_sum"), lit(0.0))).as("delta"))
-      .localCheckpoint(true)
+    // delta from the post-write files, collapsing it to 0. The cut
+    // observes the key buckets the all-time upsert will rewrite.
+    val deltaCut = Snapshots.cutObserved(withOld.groupBy("unit")
+      .agg(sum(col("value_adj") - coalesce(col("old"), lit(0.0)))
+        .as("delta"))
+      .withColumn("pbucket", keyBucket(col("unit"))),
+      MEMORY_AND_DISK, touchedSet)
+    val delta = deltaCut.ds
+    val deltaTouched = deltaCut.longs("touched")
 
-    Volume.upsertPartitioned(spark, byBlockPath, byBlock, Seq("height", "unit"))
+    Volume.upsertPartitioned(spark, byBlockPath, byBlock,
+      Seq("height", "unit"), byBlockTouched)
 
     // apply the delta to the stored all-time values (key-hash buckets)
-    val deltaB = delta
-      .withColumn("pbucket",
-        pmod(hash(col("unit")), lit(KeyBuckets)).cast("long"))
+    val fresh = delta.select(col("unit"), col("delta").as("value_adj"),
+      col("pbucket"))
     val allTimeUpdates =
       if (Volume.pathExists(spark, allTimePath))
-        deltaB.join(
-          Volume.readTouched(spark, allTimePath, Volume.touchedBuckets(deltaB))
+        delta.join(
+          Volume.readTouched(spark, allTimePath, fresh.schema, deltaTouched)
             .select(col("unit"), col("value_adj").as("old_v")),
           Seq("unit"), "left")
           .select(col("unit"),
             (coalesce(col("old_v"), lit(0.0)) + col("delta"))
               .as("value_adj"),
             col("pbucket"))
-      else deltaB.select(col("unit"), col("delta").as("value_adj"),
-        col("pbucket"))
-    Volume.upsertPartitioned(spark, allTimePath, allTimeUpdates, Seq("unit"))
-    byBlock.unpersist()
+      else fresh
+    Volume.upsertPartitioned(spark, allTimePath, allTimeUpdates, Seq("unit"),
+      deltaTouched)
+    Snapshots.release(byBlock)
+    Snapshots.release(delta)
 
     // pagerank leg (etl_pagerank_dag): edges → (address, score).
     // PageRank is a global recompute, so every address — and thus every
@@ -119,10 +139,9 @@ object RollupJob {
       val edges = spark.read.parquet(edgesPath)
         .select(col("send_addr").as("src"), col("rx_addr").as("dst"))
       val scores = PageRank.run(edges)
-        .withColumn("pbucket", pmod(hash(col("address")), lit(KeyBuckets))
-          .cast("long"))
+        .withColumn("pbucket", keyBucket(col("address")))
       Volume.upsertPartitioned(spark, s"$dataDir/address_pagerank", scores,
-        Seq("address"))
+        Seq("address"), 0L until KeyBuckets)
     }
   }
 }

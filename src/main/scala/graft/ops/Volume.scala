@@ -3,7 +3,9 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import graft.graph.Snapshots
 
 /** Volume reduction + rollups (SURVEY.md §2.9 reduce_vol, §2.7 A4–A6,
   * §2.2 K4 upsert).
@@ -64,43 +66,46 @@ object Volume {
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
-  /** The touched-partition list is driver-side metadata (one long per
-    * partition a tick writes) — the same enumeration dynamic partition
-    * overwrite itself performs at commit. */
-  def touchedBuckets(withBucket: DataFrame): Array[Long] =
-    withBucket.select(col("pbucket").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-
   /** Partition-pruned read of only the `pbucket` partitions in
-    * `touched` — O(touched buckets), never a full-table scan. */
-  def readTouched(spark: SparkSession, path: String,
-                  touched: Array[Long]): DataFrame = {
-    val df = spark.read.parquet(path)
+    * `touched` — O(touched buckets), never a full-table scan. The
+    * caller passes the table's known schema, so no schema-inference job
+    * runs per read (an untyped `spark.read.parquet` reads footers in a
+    * Spark job of its own). */
+  def readTouched(spark: SparkSession, path: String, schema: StructType,
+                  touched: Seq[Long]): DataFrame = {
+    val df = spark.read.schema(schema).parquet(path)
     if (touched.isEmpty) df.limit(0)
-    else df.filter(col("pbucket").isin(touched.toIndexedSeq: _*))
+    else df.filter(col("pbucket").isin(touched: _*))
   }
 
   /** Partition-granular keyed upsert: merge `updates` (which must carry
     * a long-valued `pbucket` column) into the `pbucket`-partitioned
-    * table at `path`, reading and rewriting ONLY the touched partitions
-    * via dynamic partition overwrite — O(delta·bucket) per tick, never
-    * O(table). The at-scale form of [[upsert]]; shared by the batch
-    * RollupJob tick and the streaming incremental rollup. */
+    * table at `path`, reading and rewriting ONLY the `touched`
+    * partitions via dynamic partition overwrite — O(delta·bucket) per
+    * tick, never O(table). The at-scale form of [[upsert]]; shared by
+    * the batch RollupJob tick and the streaming incremental rollup.
+    *
+    * `touched` must cover every `pbucket` in `updates`; a superset is
+    * fine (its extra partitions are rewritten unchanged). Callers
+    * observe it on a cut that already runs
+    * ([[graft.graph.Snapshots.cutObserved]] with `collect_set(pbucket)`)
+    * or know it outright, so no job runs to find it. The merged
+    * partitions materialize once, as one eager cut, before the write
+    * overwrites the files they were read from. */
   def upsertPartitioned(spark: SparkSession, path: String,
-                        updates: DataFrame, keys: Seq[String]): Unit = {
+                        updates: DataFrame, keys: Seq[String],
+                        touched: Seq[Long]): Unit = {
     if (!pathExists(spark, path)) {
       updates.write.partitionBy("pbucket").mode("overwrite").parquet(path)
       return
     }
-    val touched = touchedBuckets(updates)
     if (touched.isEmpty) return
-    val existing = readTouched(spark, path, touched)
+    val existing = readTouched(spark, path, updates.schema, touched)
     val merged = upsert(existing, updates, keys)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    merged.count() // materialize before overwriting the partitions we read
-    merged.write.mode("overwrite")
+      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
+    try merged.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("pbucket").parquet(path)
-    merged.unpersist()
+    finally Snapshots.release(merged)
   }
 }

@@ -2,6 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import graft.graph.Snapshots
+import graft.ops.Volume
 
 /** Event-time windowed rollup — the Spark-native extension the reference
   * lacks (SURVEY.md §2.12: no watermarks/event-time anywhere in the
@@ -36,7 +39,9 @@ object EventTimeRollup {
     * carry windows inside the watermark horizon, so a micro-batch
     * rewrites a couple of recent day partitions — O(delta), cloud-FS-
     * safe, never the read-all→overwrite of the whole serving history
-    * (the RollupJob scale fix, applied to the streaming twin). */
+    * (the RollupJob scale fix, applied to the streaming twin). Each
+    * micro-batch is cut once, and that cut observes the day buckets it
+    * touches, so the stateful aggregation runs once per batch. */
   def incrementalRollup(volStream: DataFrame, servingDir: String,
                         windowLength: String = "5 minutes",
                         watermark: String = "10 minutes")
@@ -45,10 +50,13 @@ object EventTimeRollup {
     agg.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Volume.upsertPartitioned(batch.sparkSession, servingDir,
-          batch.withColumn("pbucket",
+        val c = Snapshots.cutObserved(batch.withColumn("pbucket",
             expr("unix_timestamp(window_start) div 86400")),
-          Seq("window_start", "unit"))
+          StorageLevel.MEMORY_AND_DISK,
+          collect_set(col("pbucket")).as("touched"))
+        try Volume.upsertPartitioned(batch.sparkSession, servingDir, c.ds,
+          Seq("window_start", "unit"), c.longs("touched"))
+        finally Snapshots.release(c.ds)
       }
       .start()
   }

@@ -50,6 +50,21 @@ class NearDupIngestSpec extends AnyFunSuite with SparkTestBase {
       .select("doc_id").as[Long].collect().toSet == Set(1L, 2L, 11L))
   }
 
+  test("successive batches leave no persistent RDD behind") {
+    val out = tmp()
+    val batches = Seq(
+      Seq((1L, base), (2L, variant("tea")), (3L, unrelated)),
+      Seq((10L, variant("cocoa")), (11L, variant("milk"))),
+      Seq((20L, base), (21L, "a short note about gardening tools")))
+    var admitted = Seq.empty[Long]
+    val leaked = newPersistentRDDs {
+      admitted = batches.map(b =>
+        NearDupIngestJob.writeBatch(b.toDF("doc_id", "text"), out))
+    }
+    assert(admitted == Seq(2L, 0L, 1L))
+    assert(leaked.isEmpty, s"${leaked.size} RDDs left after 3 batches")
+  }
+
   test("replay idempotence: re-running a batch admits nothing") {
     val out = tmp()
     val b = Seq((1L, base), (2L, unrelated)).toDF("doc_id", "text")

@@ -30,4 +30,13 @@ trait SparkTestBase { self: AnyFunSuite =>
     } finally sc.removeSparkListener(listener)
     listener.synchronized(n)
   }
+
+  /** Ids of the RDDs `sc.getPersistentRDDs` gained across `body`: the
+    * cuts and caches it left behind. */
+  def newPersistentRDDs(body: => Any): Set[Int] = {
+    def ids = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = ids
+    body
+    ids -- before
+  }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.jobs.{RawPersistJob, VolTransferJob, RollupJob}
-import graft.ops.Pricing
+import graft.ops.{Pricing, Volume}
 import graft.streaming.{EventTimeRollup, ReplayServer}
 import graft.ingest.BlockParser
 
@@ -119,6 +119,75 @@ class StreamingJobSpec extends AnyFunSuite with SparkTestBase {
         .select("unit", "value_adj").as[(String, Double)].collect()
       assert(at.length == 1 && math.abs(at.head._2 - 9.0) < 1e-9, at.toSeq)
     } finally spark.conf.unset("spark.graft.rollup.heightBucketSize")
+  }
+
+  /** A store whose rollups took their first (full) tick: heights 5 and
+    * 15 of two units over height buckets of 10, and a 3-address edge
+    * set; returns the store and the windowed tick that revises height
+    * 15 and adds 17 (buckets 1 only, plus the all-time and PageRank
+    * legs). */
+  private def rolledStore(): (String, () => Unit) = {
+    val out = Files.createTempDirectory("graft_tick").toString
+    Seq(("t1", 5L, 50L, "u", 3e6), ("t2", 15L, 150L, "u", 4e6),
+      ("t3", 15L, 150L, "w", 2e6))
+      .toDF("hash", "height", "slot", "unit", "value_adj")
+      .write.parquet(s"$out/vol")
+    Seq(("A", "B"), ("B", "C"), ("C", "A"), ("A", "C"))
+      .toDF("send_addr", "rx_addr").write.parquet(s"$out/edges")
+    RollupJob.run(spark, out)
+    Seq(("t2", 15L, 150L, "u", 5e6), ("t4", 17L, 170L, "w", 1e6))
+      .toDF("hash", "height", "slot", "unit", "value_adj")
+      .write.mode("overwrite").parquet(s"$out/vol")
+    (out, () => RollupJob.run(spark, out, sinceHeight = Some(10L)))
+  }
+
+  private def withHeightBuckets[T](body: => T): T = {
+    spark.conf.set("spark.graft.rollup.heightBucketSize", "10")
+    try body finally spark.conf.unset("spark.graft.rollup.heightBucketSize")
+  }
+
+  test("windowed rollup tick: Spark job count pin") {
+    withHeightBuckets {
+      val (out, tick) = rolledStore()
+      // 68 jobs when each touched set was a distinct + collect, each
+      // stored read inferred its schema and each write was preceded by a
+      // persist + count; 45 with the touched sets observed on cuts
+      val jobs = sparkJobs(tick())
+      assert(jobs == 45, s"windowed tick ran $jobs Spark jobs")
+      val at = spark.read.parquet(s"$out/vol_all_time")
+        .select("unit", "value_adj").as[(String, Double)].collect().toMap
+      assert(at.keySet == Set("u", "w"))
+      assert(math.abs(at("u") - 8.0) < 1e-9 && math.abs(at("w") - 3.0) < 1e-9,
+        at)
+    }
+  }
+
+  test("windowed rollup ticks leave no persistent RDD behind") {
+    withHeightBuckets {
+      val (_, tick) = rolledStore()
+      val leaked = newPersistentRDDs { tick(); tick() }
+      assert(leaked.isEmpty, s"${leaked.size} RDDs left after 2 ticks")
+    }
+  }
+
+  test("upsertPartitioned over a touched superset rewrites the extra " +
+    "buckets unchanged") {
+    val path = Files.createTempDirectory("graft_upsert").toString + "/t"
+    def rows = spark.read.parquet(path)
+      .select("k", "v", "pbucket").as[(String, Double, Long)]
+      .collect().toSet
+    Volume.upsertPartitioned(spark, path,
+      Seq(("a", 1.0, 0L), ("b", 2.0, 1L), ("c", 3.0, 2L))
+        .toDF("k", "v", "pbucket"), Seq("k"), Seq(0L, 1L, 2L))
+    val b2 = new java.io.File(s"$path/pbucket=2").listFiles().toSet
+    // the updates hit bucket 0 only; buckets 1 and 5 are touched too
+    Volume.upsertPartitioned(spark, path,
+      Seq(("a", 10.0, 0L), ("d", 4.0, 0L)).toDF("k", "v", "pbucket"),
+      Seq("k"), Seq(0L, 1L, 5L))
+    assert(rows == Set(("a", 10.0, 0L), ("b", 2.0, 1L), ("c", 3.0, 2L),
+      ("d", 4.0, 0L)))
+    assert(new java.io.File(s"$path/pbucket=2").listFiles().toSet == b2,
+      "a bucket outside the touched set was rewritten")
   }
 
   test("socket source: replay server → streaming raw persist") {
