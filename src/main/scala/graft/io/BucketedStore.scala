@@ -11,7 +11,10 @@ import org.apache.spark.sql.functions.col
   * one parquet directory + one catalog entry + (r17) one LAYOUT
   * DESCRIPTOR (`<path>_layout`, a one-row parquet beside the data —
   * NOT inside it, where a table scan would read it as data) recording
-  * (buckets, bucket key, sort keys, format version).
+  * (buckets, bucket key, sort keys, format version). A job names each
+  * of its stores once, as a [[Store]] (path + seed layout) derived from
+  * its `outDir`; every read, append and maintenance pass goes through
+  * this object with that value.
   *
   * Why the descriptor exists — two fresh-session failure modes the
   * r16 IvfPqIndexJob audit surfaced, which every sibling store shared:
@@ -31,14 +34,26 @@ import org.apache.spark.sql.functions.col
   *     over the same directory and write files under a different
   *     bucket modulus — mixed moduli in one store, silently wrong
   *     bucket pruning and joins from then on. [[append]] resolves the
-  *     effective layout from the descriptor FIRST (the conf value only
-  *     seeds a store's very first write), so appends always match the
-  *     files already on disk.
+  *     effective layout from the descriptor FIRST (the store's seed
+  *     layout only shapes its very first write), so appends always
+  *     match the files already on disk.
   *
   * A store from before the descriptor existed (no `_layout` file)
   * degrades exactly as before — plain path read, re-registration on
-  * next append under the session conf — and is upgraded in place by
+  * next append under its seed layout — and is upgraded in place by
   * that append writing the descriptor.
+  *
+  * Maintenance: appends add a file set per bucket per batch, so an
+  * append-heavy store wants a periodic `compact(spark, store)` with the
+  * job's own store declaration — `DedupIngestJob.hashStore(outDir)`,
+  * `NearDupIngestJob.sigStore` / `bucketStore`,
+  * `SubstringIngestJob.gramStore` / `seenStore`,
+  * `SegmentIngestJob.segStore` / `seenStore`,
+  * `SemanticIngestJob.vectorStore`, `IvfPqIndexJob.store(outDir, which)`
+  * (a [[graft.jobs.CorpusIngestJob]] keeps the Dedup stores under
+  * `<outDir>/hash` and the Substring stores under `<outDir>/scrub`).
+  * `DedupIngestJob.compactStores` and `IvfPqIndexJob.compact` do this
+  * for their jobs; audit with [[Layout.bucketFileCounts]].
   */
 object BucketedStore {
 
@@ -47,17 +62,36 @@ object BucketedStore {
   final case class StoreLayout(buckets: Int, bucketKey: String,
                                sortKeys: Seq[String], version: Int = 1)
 
-  private def layoutPath(path: String): String = s"${path}_layout"
+  /** First-write bucket count of the ingest stores. Must stay constant
+    * for a given store — Spark rejects appends with a different bucket
+    * spec — which the descriptor guarantees once the store exists. */
+  val Buckets = 64
 
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  /** One persisted store: its directory and the layout its first write
+    * takes (`seed`; an existing store's descriptor wins over it). The
+    * catalog name of the external table is derived from the path here
+    * and nowhere else — bucket specs live in the catalog, not in
+    * parquet. */
+  final case class Store(path: String, seed: StoreLayout) {
+    def table: String = {
+      val md = java.security.MessageDigest.getInstance("MD5")
+        .digest(path.getBytes("UTF-8"))
+      "graft_store_" + md.take(8).map("%02x".format(_)).mkString
+    }
   }
+
+  object Store {
+    /** A store bucketed and sorted on one key, seeding [[Buckets]]. */
+    def keyed(path: String, key: String): Store =
+      Store(path, StoreLayout(Buckets, key, Seq(key)))
+  }
+
+  private def layoutPath(path: String): String = s"${path}_layout"
 
   private[graft] def loadLayout(spark: SparkSession,
                                 path: String): Option[StoreLayout] = {
     val lp = layoutPath(path)
-    if (!pathExists(spark, lp)) return None
+    if (!Fs.pathExists(spark, lp)) return None
     val df = spark.read.parquet(lp)
     val need = Seq("buckets", "bucket_key", "sort_keys", "version")
     if (!need.forall(df.columns.contains)) return None
@@ -94,17 +128,35 @@ object BucketedStore {
     * descriptor (keeping the bucketed plan); a descriptor-less legacy
     * store falls back to a plain path read (correct, unbucketed until
     * its next append upgrades it). None = store does not exist. */
-  def view(spark: SparkSession, table: String,
-           path: String): Option[DataFrame] = {
+  def view(spark: SparkSession, store: Store): Option[DataFrame] = {
+    val table = store.table
     if (spark.catalog.tableExists(table)) Some(spark.table(table))
-    else if (pathExists(spark, path)) loadLayout(spark, path) match {
-      case Some(l) =>
-        register(spark, table, path, l)
-        Some(spark.table(table))
-      case None => Some(spark.read.parquet(path))
-    }
+    else if (Fs.pathExists(spark, store.path))
+      loadLayout(spark, store.path) match {
+        case Some(l) =>
+          register(spark, table, store.path, l)
+          Some(spark.table(table))
+        case None => Some(spark.read.parquet(store.path))
+      }
     else None
   }
+
+  /** [[view]] as the history side of an ingest job's per-batch join,
+    * with a `merge` join hint. A left-anti join can only broadcast its
+    * RIGHT side, which is the store — the side that grows without
+    * bound — so without the hint Spark re-collects and re-broadcasts
+    * the whole store every micro-batch while it sits under the
+    * broadcast threshold, and the per-batch cost climbs with store
+    * size until the driver chokes (measured: SegmentIngestJob 5.9 →
+    * 21 s/batch over 12 batches broadcast-on vs flat ~5 s with merge —
+    * SCALE_AUDIT "ingest throughput"). Sort-merge keeps the bucketed
+    * store co-located: only the batch side exchanges, at any store size
+    * (asserted in DedupIngestSpec and SemanticIngestSpec). A missing
+    * store is the one absence handled here; genuine read failures
+    * PROPAGATE so the batch retries instead of silently admitting
+    * duplicates. */
+  def history(spark: SparkSession, store: Store): Option[DataFrame] =
+    view(spark, store).map(_.hint("merge"))
 
   /** Bucket-preserving small-file compaction: every append writes its
     * own file set per bucket, the scan tax is per-FILE, and Spark only
@@ -122,8 +174,9 @@ object BucketedStore {
     * beside the store, swap directories, re-register. Row set
     * unchanged; requires a layout descriptor (a legacy store gets one
     * on its next [[append]]). No-op when the store doesn't exist. */
-  def compact(spark: SparkSession, table: String, path: String): Unit = {
-    if (!pathExists(spark, path)) return
+  def compact(spark: SparkSession, store: Store): Unit = {
+    val (table, path) = (store.table, store.path)
+    if (!Fs.pathExists(spark, path)) return
     val layout = loadLayout(spark, path).getOrElse(throw
       new IllegalStateException(s"no layout descriptor at " +
         s"${layoutPath(path)} — compact only manages descriptor-backed " +
@@ -131,7 +184,7 @@ object BucketedStore {
     val tmpTable = s"${table}_compacting"
     val tmpPath = s"${path}_compacting"
     spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
-    deletePath(spark, tmpPath)
+    Fs.deletePath(spark, tmpPath)
     spark.read.parquet(path)
       .repartition(layout.buckets, col(layout.bucketKey))
       .write.format("parquet")
@@ -140,7 +193,7 @@ object BucketedStore {
       .option("path", tmpPath).mode("overwrite").saveAsTable(tmpTable)
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
-    deletePath(spark, path)
+    Fs.deletePath(spark, path)
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.rename(new Path(tmpPath), new Path(path)))
@@ -149,27 +202,21 @@ object BucketedStore {
     register(spark, table, path, layout)
   }
 
-  private def deletePath(spark: SparkSession, path: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-
   /** Remove a store completely: catalog entry, data directory, AND the
     * layout descriptor — a stale descriptor surviving a data purge
     * would force the store's NEXT first write back into the old bucket
     * count regardless of the caller's intent. */
-  def drop(spark: SparkSession, table: String, path: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    deletePath(spark, path)
-    deletePath(spark, layoutPath(path))
+  def drop(spark: SparkSession, store: Store): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS `${store.table}`")
+    Fs.deletePath(spark, store.path)
+    Fs.deletePath(spark, layoutPath(store.path))
   }
 
   /** Append `df` to the store in ITS layout: the persisted descriptor
-    * wins over `confBuckets` (which only seeds the first write of a
+    * wins over `store.seed` (which only shapes the first write of a
     * brand-new store), and a lost catalog entry is re-registered
     * before the append so the files' bucket bookkeeping stays
-    * consistent across sessions and conf changes.
+    * consistent across sessions.
     *
     * The re-register-first step is also a DATA-LOSS guard, not just a
     * plan nicety: `saveAsTable(Append)` on a NONEXISTENT table plans
@@ -178,23 +225,22 @@ object BucketedStore {
     * append-after-catalog-loss flow silently wiped the store's entire
     * history and kept only the new batch. Any existing path therefore
     * goes through registration (descriptor layout when present; the
-    * session conf for a pre-descriptor store — the same
-    * one-conf-per-store invariant those stores' appends always
-    * assumed) so the append always runs against a REGISTERED table,
-    * where Append means append. The create-as-select path is reached
-    * only for a genuinely new store. Pinned in BucketedStoreSpec. */
-  def append(df: DataFrame, table: String, path: String,
-             bucketKey: String, sortKeys: Seq[String],
-             confBuckets: Int): Unit = {
+    * seed for a pre-descriptor store — the same one-layout-per-store
+    * invariant those stores' appends always assumed) so the append
+    * always runs against a REGISTERED table, where Append means
+    * append. The create-as-select path is reached only for a genuinely
+    * new store. Pinned in BucketedStoreSpec. */
+  def append(df: DataFrame, store: Store): Unit = {
     val spark = df.sparkSession
+    val (table, path, seed) = (store.table, store.path, store.seed)
     val persisted = loadLayout(spark, path)
-    val layout = persisted.getOrElse(
-      StoreLayout(confBuckets, bucketKey, sortKeys))
-    require(layout.bucketKey == bucketKey && layout.sortKeys == sortKeys,
+    val layout = persisted.getOrElse(seed)
+    require(layout.bucketKey == seed.bucketKey &&
+      layout.sortKeys == seed.sortKeys,
       s"store at $path is keyed (${layout.bucketKey}; " +
         s"${layout.sortKeys.mkString(",")}), caller asked for " +
-        s"($bucketKey; ${sortKeys.mkString(",")})")
-    if (!spark.catalog.tableExists(table) && pathExists(spark, path))
+        s"(${seed.bucketKey}; ${seed.sortKeys.mkString(",")})")
+    if (!spark.catalog.tableExists(table) && Fs.pathExists(spark, path))
       register(spark, table, path, layout)
     val w = df.write.format("parquet")
       .bucketBy(layout.buckets, layout.bucketKey)

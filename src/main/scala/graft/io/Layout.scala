@@ -8,8 +8,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * exchange.
   *
   * The resolver join (outpoints ⋈ utxo on src_tx_hash) is the canonical
-  * case: at 100 TB both tables are bucketed by the tx-hash key at write
-  * time, so each resolve is a per-bucket sort-merge with zero network.
+  * candidate: bucketed on the tx-hash key at write time, each resolve
+  * would be a per-bucket sort-merge with zero network. It is not there
+  * yet — VolTransferJob's `utxo` table is an unbucketed, append-only
+  * directory re-listed every batch (ROADMAP item 2); the bucketed
+  * ingest stores live in [[BucketedStore]].
   * Bucket counts are powers of two so a cluster can re-bucket by splitting
   * without rewriting everything.
   */

@@ -2,10 +2,11 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.graph.Snapshots
 import graft.pipeline.TrainingData
+import graft.streaming.FileDrop
 import graft.text.TextAnalysis
 
 /** The corpus-preparation funnel as a STREAMING ingest job — the
@@ -121,20 +122,15 @@ object CorpusIngestJob {
   }
 
   /** File-drop streaming entry (replayable source + checkpoint →
-    * restart-safe): each dropped file holds JSON lines
+    * restart-safe, [[FileDrop]]): each dropped file holds JSON lines
     * {"doc_id": …, "text": …, "source": …}. AvailableNow drains and
     * stops. */
   def runFiles(spark: SparkSession, inDir: String, outDir: String,
                checkpoint: String, langs: Seq[String],
-               qualityFloor: Double, scrubK: Int = 8): StreamingQuery = {
-    val schema = "doc_id LONG, text STRING, source STRING"
-    spark.readStream.schema(schema).json(inDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        writeBatch(df, outDir, langs, qualityFloor, scrubK); ()
-      }
-      .start()
-  }
+               qualityFloor: Double, scrubK: Int = 8): StreamingQuery =
+    FileDrop.drain(spark.readStream
+      .schema("doc_id LONG, text STRING, source STRING").json(inDir),
+      checkpoint) { (df, _) =>
+      writeBatch(df, outDir, langs, qualityFloor, scrubK); ()
+    }
 }

@@ -2,9 +2,12 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.graph.Snapshots
+import graft.io.{BucketedStore, Fs}
+import graft.io.BucketedStore.{Store, StoreLayout}
+import graft.streaming.FileDrop
 import graft.sim.IvfPqInt
 import graft.sim.IvfPqInt.IvfPqModel
 
@@ -41,9 +44,9 @@ import graft.sim.IvfPqInt.IvfPqModel
   *    [[ingest]] growth), the build recipe (cells, subspaces, cents),
   *    the store BUCKET COUNT, and a format version. The bucket count
   *    lives here because the catalog entry does NOT survive a new
-  *    SparkSession while the files do: [[storeView]] re-registers the
-  *    table from this descriptor (CREATE TABLE ... CLUSTERED BY ...
-  *    LOCATION) so a fresh serving session keeps the bucket-pruned,
+  *    SparkSession while the files do: [[BucketedStore.view]]
+  *    re-registers the table from the stores' layout descriptors
+  *    (CREATE TABLE ... CLUSTERED BY ... LOCATION) so a fresh serving session keeps the bucket-pruned,
   *    exchange-free probe plan instead of silently degrading to a
   *    plain parquet scan whose rerank join re-shuffles the index side
   *    — exactly the cost the bucketing exists to avoid at 100 TB. The
@@ -113,42 +116,32 @@ object IvfPqIndexJob {
     * value (the files' actual layout). */
   private val StoreBuckets = 8
 
-  /** Bucket/sort layout per store — postings serve cell-key probes,
-    * vecs serve rerank id-joins. */
-  private def storeLayout(which: String): (String, Seq[String]) =
-    which match {
+  /** The index's two stores under `outDir` — postings serve cell-key
+    * probes, vecs serve rerank id-joins. Bucket by the store's single
+    * key ONLY (a multi-column bucket hash would defeat the probe's
+    * In(cell) bucket pruning); sort by the sort keys within buckets so
+    * row-group stats prune too. `buckets` seeds a new store; an
+    * existing one keeps its descriptor's count. */
+  def store(outDir: String, which: String,
+            buckets: Int = StoreBuckets): Store = {
+    val (bucketKey, sortKeys) = which match {
       case "postings" => ("cell", Seq("cell", "vec_id"))
       case "vecs" => ("vec_id", Seq("vec_id"))
       case other => throw new IllegalArgumentException(
         s"unknown store '$other'")
     }
-
-  private[graft] def tableName(outDir: String, which: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(outDir.getBytes("UTF-8"))
-    s"graft_ivfpq_${which}_" + md.take(8).map("%02x".format(_)).mkString
-  }
-
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
-  private def deletePath(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    Store(s"$outDir/$which", StoreLayout(buckets, bucketKey, sortKeys))
   }
 
   private[graft] def loadMeta(spark: SparkSession,
                               outDir: String): Option[IndexMeta] = {
     val p = s"$outDir/meta"
-    if (!pathExists(spark, p)) return None
+    if (!Fs.pathExists(spark, p)) return None
     val df = spark.read.parquet(p)
     val need =
       Seq("fingerprint", "cells", "subspaces", "cents", "buckets", "version")
     // a pre-v2 meta (bare fingerprint) carries no descriptor: treat as
-    // absent — ensureBuilt rebuilds, storeView degrades gracefully
+    // absent — ensureBuilt rebuilds, BucketedStore.view degrades gracefully
     if (!need.forall(df.columns.contains)) return None
     val r = df.select(need.map(col): _*).head()
     Some(IndexMeta(r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3),
@@ -165,37 +158,9 @@ object IvfPqIndexJob {
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/meta")
   }
 
-  /** Bucket-aware store view — [[graft.io.BucketedStore.view]]: the
-    * catalog table when registered; a fresh session re-registers from
-    * the store's layout sidecar (fresh-session serving keeps the
-    * bucketed plan); a sidecar-less pre-v3 store falls back to a plain
-    * path read, correct but shuffle-degraded — ensureBuilt over such a
-    * store rebuilds it into the current format (version check). */
-  private[graft] def storeView(spark: SparkSession, outDir: String,
-                               which: String): Option[DataFrame] =
-    graft.io.BucketedStore
-      .view(spark, tableName(outDir, which), s"$outDir/$which")
-
-  /** Bucket by the store's single key ONLY (a multi-column bucket hash
-    * would defeat the probe's In(cell) bucket pruning); sort by the
-    * sort keys within buckets so row-group stats prune too. Delegates
-    * to [[graft.io.BucketedStore.append]] (descriptor-first layout +
-    * the register-before-append data-loss guard). */
-  private[graft] def appendBucketed(df: DataFrame, outDir: String,
-                                    which: String, buckets: Int): Unit = {
-    val (bucketKey, sortKeys) = storeLayout(which)
-    graft.io.BucketedStore.append(df, tableName(outDir, which),
-      s"$outDir/$which", bucketKey, sortKeys, buckets)
-  }
-
-  private def dropStore(spark: SparkSession, outDir: String,
-                        which: String): Unit =
-    graft.io.BucketedStore
-      .drop(spark, tableName(outDir, which), s"$outDir/$which")
-
   /** The frozen model, or None before a build. */
   def loadModel(spark: SparkSession, outDir: String): Option[IvfPqModel] = {
-    if (!pathExists(spark, s"$outDir/model/stats")) return None
+    if (!Fs.pathExists(spark, s"$outDir/model/stats")) return None
     val stats = spark.read.parquet(s"$outDir/model/stats")
       .orderBy(col("dim")).collect()
       .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2))).toSeq
@@ -260,7 +225,7 @@ object IvfPqIndexJob {
     val spark = embeddings.sparkSession
     val fp = fingerprint(embeddings)
     val buckets = StoreBuckets
-    val fresh = pathExists(spark, s"$outDir/model/stats") &&
+    val fresh = Fs.pathExists(spark, s"$outDir/model/stats") &&
       loadMeta(spark, outDir).exists(m =>
         m.version == FormatVersion && m.fingerprint == fp &&
           m.cells == cells && m.subspaces == subspaces &&
@@ -305,17 +270,19 @@ object IvfPqIndexJob {
     // a table location can survive a JVM whose in-memory catalog didn't
     // (the LshIndex lesson) — purge both stores before the fresh write;
     // the old descriptor goes too (it described the OLD build)
-    Seq("postings", "vecs").foreach(dropStore(spark, outDir, _))
-    deletePath(spark, s"$outDir/meta")
-    val buckets = StoreBuckets
-    appendBucketed(assigned
+    Seq("postings", "vecs")
+      .foreach(w => BucketedStore.drop(spark, store(outDir, w)))
+    Fs.deletePath(spark, s"$outDir/meta")
+    BucketedStore.append(assigned
       .withColumn("enc", IvfPqInt.encodeWith(col("res"), books, subDim))
       .select(col("cell"), col("vec_id"), col("enc")),
-      outDir, "postings", buckets)
-    appendBucketed(codes.select(col("vec_id"), col("codes")),
-      outDir, "vecs", buckets)
+      store(outDir, "postings"))
+    BucketedStore.append(codes.select(col("vec_id"), col("codes")),
+      store(outDir, "vecs"))
+    // the appends above are the last readers of the build's cuts
+    Seq(assigned, codes, statsDf).foreach(Snapshots.release)
     saveMeta(spark, outDir,
-      IndexMeta("", cells, subspaces, cents, buckets, FormatVersion))
+      IndexMeta("", cells, subspaces, cents, StoreBuckets, FormatVersion))
   }
 
   /** Quantized batch → (cell, vec_id, enc) postings rows through the
@@ -352,7 +319,7 @@ object IvfPqIndexJob {
       .quantize(batch, model.statsFrame(spark))
     // replay guard: ids already ingested never re-append (bucket-aligned
     // anti-join on the vecs store — idempotent under source replay)
-    val fresh0 = storeView(spark, outDir, "vecs") match {
+    val fresh0 = BucketedStore.view(spark, store(outDir, "vecs")) match {
       case Some(s) => codes.join(s.select(col("vec_id")), Seq("vec_id"),
         "left_anti")
       case None => codes
@@ -364,17 +331,17 @@ object IvfPqIndexJob {
         // ensureBuilt fingerprint so a later ensureBuilt over the build
         // corpus can never mistake the grown index for "current" (the
         // rest of the descriptor — recipe, buckets, version — stays:
-        // storeView still needs it to re-register in a fresh session)
+        // BucketedStore.view still needs it in a fresh session)
         meta match {
           case Some(m) if m.fingerprint.nonEmpty =>
             saveMeta(spark, outDir, m.copy(fingerprint = ""))
           case Some(_) => ()
-          case None => deletePath(spark, s"$outDir/meta")
+          case None => Fs.deletePath(spark, s"$outDir/meta")
         }
-        appendBucketed(encodePostings(fresh, model),
-          outDir, "postings", buckets)
-        appendBucketed(fresh.select(col("vec_id"), col("codes")),
-          outDir, "vecs", buckets)
+        BucketedStore.append(encodePostings(fresh, model),
+          store(outDir, "postings", buckets))
+        BucketedStore.append(fresh.select(col("vec_id"), col("codes")),
+          store(outDir, "vecs", buckets))
       } else log.info(s"ivfpq ingest at $outDir: batch fully replayed, " +
         "nothing appended")
       n
@@ -393,12 +360,8 @@ object IvfPqIndexJob {
     * actually usable again (Spark only trusts it at one file per
     * bucket). */
   def compact(spark: SparkSession, outDir: String): Unit =
-    Seq("postings", "vecs").foreach(compactStore(spark, outDir, _))
-
-  private def compactStore(spark: SparkSession, outDir: String,
-                           which: String): Unit =
-    graft.io.BucketedStore
-      .compact(spark, tableName(outDir, which), s"$outDir/$which")
+    Seq("postings", "vecs")
+      .foreach(w => BucketedStore.compact(spark, store(outDir, w)))
 
   /** Probe the index with a query batch of (vec_id, embedding) —
     * queries need NOT be indexed vectors (they are quantized through
@@ -419,10 +382,11 @@ object IvfPqIndexJob {
     val model = loadModel(spark, outDir).getOrElse(
       throw new IllegalStateException(
         s"no IVF-PQ index at $outDir — build(...) first"))
-    val postings = storeView(spark, outDir, "postings").getOrElse(
-      throw new IllegalStateException(s"missing postings store at $outDir"))
-    val vecs = storeView(spark, outDir, "vecs").getOrElse(
-      throw new IllegalStateException(s"missing vecs store at $outDir"))
+    def view(which: String) = BucketedStore.view(spark, store(outDir, which))
+      .getOrElse(throw new IllegalStateException(
+        s"missing $which store at $outDir"))
+    val postings = view("postings")
+    val vecs = view("vecs")
     import spark.implicits._
     // ONE driver collect of the quantized query batch (|q| rows): it
     // yields the probe-cell key set, the per-(query, cell) LUTs, AND
@@ -480,19 +444,12 @@ object IvfPqIndexJob {
   }
 
   /** File-drop streaming ingest (replayable source + checkpoint →
-    * restart-safe): each dropped file holds JSON lines
+    * restart-safe, [[FileDrop]]): each dropped file holds JSON lines
     * {"vec_id": …, "embedding": [...]}. AvailableNow drains and stops.
     * The index must already be built. */
   def runFiles(spark: SparkSession, inDir: String, outDir: String,
-               checkpoint: String): StreamingQuery = {
-    val schema = "vec_id LONG, embedding ARRAY<DOUBLE>"
-    spark.readStream.schema(schema).json(inDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        ingest(df, outDir); ()
-      }
-      .start()
-  }
+               checkpoint: String): StreamingQuery =
+    FileDrop.drain(spark.readStream
+      .schema("vec_id LONG, embedding ARRAY<DOUBLE>").json(inDir),
+      checkpoint) { (df, _) => ingest(df, outDir); () }
 }

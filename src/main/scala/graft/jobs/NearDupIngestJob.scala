@@ -2,10 +2,13 @@ package graft.jobs
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.dedup.Dedup
 import graft.graph.Snapshots
+import graft.io.BucketedStore
+import graft.io.BucketedStore.Store
+import graft.streaming.FileDrop
 
 /** Incremental NEAR-dup suppression at ingest — [[DedupIngestJob]]'s
   * sibling for the fuzzy half of corpus building: exact dedup drops
@@ -51,33 +54,16 @@ object NearDupIngestJob {
   private val Bands = 4
   private val ShingleN = 3
 
-  private case class Params(minMatchFrac: Double, storeBuckets: Int)
+  private def minMatchFrac(spark: SparkSession): Double =
+    spark.conf.get("spark.graft.neardup.minMatchFrac", "0.7").toDouble
 
-  private def params(spark: SparkSession): Params = Params(
-    minMatchFrac =
-      spark.conf.get("spark.graft.neardup.minMatchFrac", "0.7").toDouble,
-    storeBuckets =
-      spark.conf.get("spark.graft.neardup.storeBuckets", "64").toInt)
+  /** (doc_id, sig) per admitted doc, bucketed on doc_id. */
+  def sigStore(outDir: String): Store = Store.keyed(s"$outDir/sigs", "doc_id")
 
-  private def tableName(outDir: String, kind: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(outDir.getBytes("UTF-8"))
-    s"graft_neardup_${kind}_" + md.take(8).map("%02x".format(_)).mkString
-  }
-
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
-  /** Bucket-aware view of a store table; a fresh session re-registers
-    * from the persisted layout descriptor ([[graft.io.BucketedStore]],
-    * r17); None only when absent. */
-  private[graft] def storeView(spark: SparkSession, outDir: String,
-                               kind: String): Option[DataFrame] =
-    graft.io.BucketedStore
-      .view(spark, tableName(outDir, kind), s"$outDir/$kind")
-      .map(_.hint("merge"))
+  /** (bucket, doc_id) per band of each admitted doc, bucketed on
+    * bucket. */
+  def bucketStore(outDir: String): Store =
+    Store.keyed(s"$outDir/buckets", "bucket")
 
   /** (doc_id, sig) — the per-doc signature vector, seed-ordered. */
   private def packedSigs(docs: DataFrame): DataFrame =
@@ -107,7 +93,7 @@ object NearDupIngestJob {
     * @return number of admitted (non-near-dup) docs appended */
   def writeBatch(docs: DataFrame, outDir: String): Long = {
     val spark = docs.sparkSession
-    val p = params(spark)
+    val minFrac = minMatchFrac(spark)
     val sigs = packedSigs(docs).localCheckpoint(true)
     val buckets = bandBuckets(sigs).localCheckpoint(true)
 
@@ -123,7 +109,7 @@ object NearDupIngestJob {
         Seq("id1"))
       .join(sigs.select(col("doc_id").as("id2"), col("sig").as("s2")),
         Seq("id2"))
-      .filter(agreement(col("s1"), col("s2")) >= p.minMatchFrac)
+      .filter(agreement(col("s1"), col("s2")) >= minFrac)
       .select(col("id1").as("src"), col("id2").as("dst"))
     val labels = graft.graph.ConnectedComponents.labelCut(pairs)
     val reps = labels
@@ -136,18 +122,18 @@ object NearDupIngestJob {
 
     // cross-batch: candidates from the bucket store, verified against
     // the signature store; both joins shuffle only batch-sized frames
-    val crossDropped = storeView(spark, outDir, "buckets") match {
+    val history = BucketedStore.history(spark, _: Store)
+    val crossDropped = history(bucketStore(outDir)) match {
       case Some(storeBk) =>
         val c = buckets.join(inBatchKept, Seq("doc_id"), "left_semi")
           .join(storeBk.select(col("bucket"),
             col("doc_id").as("store_id")), Seq("bucket"))
           .select(col("doc_id"), col("store_id")).distinct()
-        val storeSigs = storeView(spark, outDir, "sigs").get
+        val storeSigs = history(sigStore(outDir)).get
         c.join(sigs, Seq("doc_id"))
           .join(storeSigs.select(col("doc_id").as("store_id"),
             col("sig").as("store_sig")), Seq("store_id"))
-          .filter(agreement(col("sig"), col("store_sig"))
-            >= p.minMatchFrac)
+          .filter(agreement(col("sig"), col("store_sig")) >= minFrac)
           .select(col("doc_id")).distinct()
       case None => spark.emptyDataFrame.withColumn("doc_id", lit(0L))
         .limit(0).select(col("doc_id"))
@@ -160,13 +146,10 @@ object NearDupIngestJob {
     if (n > 0) {
       docs.join(keptIds, Seq("doc_id"), "left_semi")
         .write.mode("append").parquet(s"$outDir/documents")
-      def appendStore(df: DataFrame, kind: String, key: String): Unit =
-        graft.io.BucketedStore.append(df, tableName(outDir, kind),
-          s"$outDir/$kind", key, Seq(key), p.storeBuckets)
-      appendStore(sigs.join(keptIds, Seq("doc_id"), "left_semi"),
-        "sigs", "doc_id")
-      appendStore(buckets.join(keptIds, Seq("doc_id"), "left_semi")
-        .select(col("bucket"), col("doc_id")), "buckets", "bucket")
+      BucketedStore.append(sigs.join(keptIds, Seq("doc_id"), "left_semi"),
+        sigStore(outDir))
+      BucketedStore.append(buckets.join(keptIds, Seq("doc_id"), "left_semi")
+        .select(col("bucket"), col("doc_id")), bucketStore(outDir))
     }
     // the writes above are the last readers of the batch's cuts
     Seq(keptIds, buckets, sigs).foreach(Snapshots.release)
@@ -174,23 +157,10 @@ object NearDupIngestJob {
   }
 
   /** File-drop streaming entry (replayable source + checkpoint →
-    * restart-safe), mirroring DedupIngestJob.runFiles. */
-  /** Bucket-preserving small-file compaction of both stores
-    * ([[graft.io.BucketedStore.compact]]). */
-  def compactStores(spark: SparkSession, outDir: String): Unit =
-    Seq("sigs", "buckets").foreach(k => graft.io.BucketedStore
-      .compact(spark, tableName(outDir, k), s"$outDir/$k"))
-
+    * restart-safe, [[FileDrop]]): each dropped file holds JSON lines
+    * {"doc_id": …, "text": …}. AvailableNow drains and stops. */
   def runFiles(spark: SparkSession, inDir: String, outDir: String,
-               checkpoint: String): StreamingQuery = {
-    val schema = "doc_id LONG, text STRING"
-    spark.readStream.schema(schema).json(inDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        writeBatch(df, outDir); ()
-      }
-      .start()
-  }
+               checkpoint: String): StreamingQuery =
+    FileDrop.drain(spark.readStream.schema("doc_id LONG, text STRING")
+      .json(inDir), checkpoint) { (df, _) => writeBatch(df, outDir); () }
 }

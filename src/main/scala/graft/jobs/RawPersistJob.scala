@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ingest.BlockParser
 import graft.ops.Flatten
+import graft.streaming.FileDrop
 
 /** Raw-block persistence pipeline (SURVEY.md §3.1) — the etl_blockchain job
   * re-expressed: stream of JSON lines → parse → four tables per micro-batch
@@ -49,17 +50,12 @@ object RawPersistJob {
   }
 
   /** Production-grade variant: file-drop source (replayable — unlike the
-    * socket source it supports checkpointed exactly-once recovery) with
-    * an AvailableNow trigger: drains everything present, then stops.
-    * Each file holds newline-JSON block lines. */
+    * socket source it supports checkpointed exactly-once recovery,
+    * [[FileDrop]]) with an AvailableNow trigger: drains everything
+    * present, then stops. Each file holds newline-JSON block lines. */
   def runFiles(spark: SparkSession, inDir: String, outDir: String,
                checkpoint: String): StreamingQuery =
-    spark.readStream.text(inDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        writeBatch(df.select("value"), outDir)
-      }
-      .start()
+    FileDrop.drain(spark.readStream.text(inDir), checkpoint) { (df, _) =>
+      writeBatch(df.select("value"), outDir)
+    }
 }

@@ -1,8 +1,9 @@
 package graft.jobs
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+import graft.io.Fs
 import graft.ops.Volume
 import graft.graph.{PageRank, Snapshots}
 
@@ -56,6 +57,21 @@ object RollupJob {
   private def keyBucket(key: Column): Column =
     pmod(hash(key), lit(KeyBuckets)).cast("long")
 
+  /** vol_all_time merge: a full outer join of the stored rows with the
+    * per-unit deltas on the key, each stored value plus its delta
+    * (a unit with no delta keeps its stored value; a new unit gets
+    * 0 + delta). Same column order as the stored table. */
+  private def addDelta(existing: DataFrame, delta: DataFrame,
+                       keys: Seq[String]): DataFrame =
+    existing.select(keys.map(col) :+ col("value_adj").as("old_v")
+        :+ col("pbucket").as("old_b"): _*)
+      .join(delta, keys, "full_outer")
+      .select(keys.map(col) ++ Seq(
+        when(col("value_adj").isNull, col("old_v"))
+          .otherwise(coalesce(col("old_v"), lit(0.0)) + col("value_adj"))
+          .as("value_adj"),
+        coalesce(col("pbucket"), col("old_b")).as("pbucket")): _*)
+
   /** @param sinceHeight the tick's input window — only vol rows at
     *   `height >= sinceHeight` are re-rolled (the cadence scheduler
     *   passes the last processed height, minus any reorg margin). None
@@ -86,7 +102,7 @@ object RollupJob {
     // them so), summed per unit. A re-rolled row equal to its stored
     // value contributes an exact 0.
     val withOld =
-      if (Volume.pathExists(spark, byBlockPath))
+      if (Fs.pathExists(spark, byBlockPath))
         byBlock.join(
           Volume.readTouched(spark, byBlockPath, byBlock.schema,
             byBlockTouched)
@@ -109,22 +125,13 @@ object RollupJob {
     Volume.upsertPartitioned(spark, byBlockPath, byBlock,
       Seq("height", "unit"), byBlockTouched)
 
-    // apply the delta to the stored all-time values (key-hash buckets)
-    val fresh = delta.select(col("unit"), col("delta").as("value_adj"),
-      col("pbucket"))
-    val allTimeUpdates =
-      if (Volume.pathExists(spark, allTimePath))
-        delta.join(
-          Volume.readTouched(spark, allTimePath, fresh.schema, deltaTouched)
-            .select(col("unit"), col("value_adj").as("old_v")),
-          Seq("unit"), "left")
-          .select(col("unit"),
-            (coalesce(col("old_v"), lit(0.0)) + col("delta"))
-              .as("value_adj"),
-            col("pbucket"))
-      else fresh
-    Volume.upsertPartitioned(spark, allTimePath, allTimeUpdates, Seq("unit"),
-      deltaTouched)
+    // add the delta to the stored all-time values (key-hash buckets):
+    // the merge folds it into the touched partitions as they are read
+    // for the rewrite, so they are read once
+    Volume.upsertPartitioned(spark, allTimePath,
+      delta.select(col("unit"), col("delta").as("value_adj"),
+        col("pbucket")),
+      Seq("unit"), deltaTouched, addDelta)
     Snapshots.release(byBlock)
     Snapshots.release(delta)
 
@@ -135,7 +142,7 @@ object RollupJob {
     // 20 rounds run on a driver-held rank vector, one Spark job each,
     // and the scores come back as a local relation (see PageRank).
     val edgesPath = s"$dataDir/edges"
-    if (Volume.pathExists(spark, edgesPath)) {
+    if (Fs.pathExists(spark, edgesPath)) {
       val edges = spark.read.parquet(edgesPath)
         .select(col("send_addr").as("src"), col("rx_addr").as("dst"))
       val scores = PageRank.run(edges)

@@ -3,11 +3,14 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 import graft.dedup.{Dedup, ParagraphDedup}
 import graft.graph.Snapshots
+import graft.io.{BucketedStore, Fs}
+import graft.io.BucketedStore.Store
+import graft.streaming.FileDrop
 
 /** Incremental segment-level ("paragraph") dedup at ingest — the
   * streaming form of [[ParagraphDedup.dedupSegments]]: each arriving
@@ -42,18 +45,12 @@ import graft.graph.Snapshots
   */
 object SegmentIngestJob {
 
-  private val StoreBuckets = 64
+  /** (h) per distinct segment hash ever seen, bucketed on h. */
+  def segStore(outDir: String): Store = Store.keyed(s"$outDir/segs", "h")
 
-  private def tableName(outDir: String, kind: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(outDir.getBytes("UTF-8"))
-    s"graft_seg_${kind}_" + md.take(8).map("%02x".format(_)).mkString
-  }
-
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
+  /** Ingested doc_ids (the replay guard), bucketed on doc_id. */
+  def seenStore(outDir: String): Store =
+    Store.keyed(s"$outDir/seen", "doc_id")
 
   /** The segment-key hash function this build writes. Bump ONLY with a
     * store migration story: an old store's keys can never match a new
@@ -67,8 +64,9 @@ object SegmentIngestJob {
     * different key hash (marker absent ⇒ the pre-versioning md5-hash60
     * era). Underscore-prefixed, so the parquet reader never sees it. */
   private def ensureHashKind(spark: SparkSession, outDir: String): Unit = {
-    val exists = spark.catalog.tableExists(tableName(outDir, "segs")) ||
-      pathExists(spark, s"$outDir/segs")
+    val segs = segStore(outDir)
+    val exists = spark.catalog.tableExists(segs.table) ||
+      Fs.pathExists(spark, segs.path)
     if (exists) {
       val p = hashKindPath(outDir)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -106,18 +104,6 @@ object SegmentIngestJob {
     }
   }
 
-  private def storeView(spark: SparkSession, outDir: String,
-                        kind: String): Option[DataFrame] =
-    graft.io.BucketedStore
-      .view(spark, tableName(outDir, kind), s"$outDir/$kind")
-      .map(_.hint("merge"))
-
-  private def appendBucketed(df: DataFrame, outDir: String, kind: String,
-                             bucketCol: String): Unit =
-    graft.io.BucketedStore.append(df, tableName(outDir, kind),
-      s"$outDir/$kind", bucketCol, Seq(bucketCol),
-      StoreBuckets)
-
   /** Batch core, shared by streaming foreachBatch and tests.
     * @param docs (doc_id, text) micro-batch; ids must be fresh and
     *   larger than every previously ingested id for batch-equality
@@ -127,7 +113,8 @@ object SegmentIngestJob {
   def writeBatch(docs: DataFrame, outDir: String, w: Int = 20): Long = {
     val spark = docs.sparkSession
     ensureHashKind(spark, outDir)
-    val fresh0 = storeView(spark, outDir, "seen") match {
+    val history = BucketedStore.history(spark, _: Store)
+    val fresh0 = history(seenStore(outDir)) match {
       case Some(seen) =>
         docs.join(seen.select(col("doc_id")), Seq("doc_id"), "left_anti")
       case None => docs
@@ -139,7 +126,7 @@ object SegmentIngestJob {
         .localCheckpoint(true)
       try {
         // history: any stored hash predates the whole batch
-        val vsHistory = storeView(spark, outDir, "segs") match {
+        val vsHistory = history(segStore(outDir)) match {
           case Some(st) =>
             seg.join(st.select(col("h")), Seq("h"), "left_anti")
           case None => seg
@@ -164,15 +151,15 @@ object SegmentIngestJob {
           // rows; the reverse order would silently lose docs
           out.write.mode("append").parquet(s"$outDir/documents")
           val distinctH = seg.select(col("h")).distinct()
-          val newH = storeView(spark, outDir, "segs") match {
+          val newH = history(segStore(outDir)) match {
             case Some(st) =>
               distinctH.join(st.select(col("h")), Seq("h"), "left_anti")
             case None => distinctH
           }
-          appendBucketed(newH, outDir, "segs", "h")
+          BucketedStore.append(newH, segStore(outDir))
           writeHashKindMarker(spark, outDir)
-          appendBucketed(fresh.select(col("doc_id")), outDir, "seen",
-            "doc_id")
+          BucketedStore.append(fresh.select(col("doc_id")),
+            seenStore(outDir))
         }
         n
       } finally Snapshots.release(seg)
@@ -180,24 +167,10 @@ object SegmentIngestJob {
   }
 
   /** File-drop streaming entry (replayable source + checkpoint →
-    * restart-safe): each dropped file holds JSON lines
+    * restart-safe, [[FileDrop]]): each dropped file holds JSON lines
     * {"doc_id": …, "text": …}. AvailableNow drains and stops. */
-  /** Bucket-preserving small-file compaction of both stores
-    * ([[graft.io.BucketedStore.compact]]). */
-  def compactStores(spark: SparkSession, outDir: String): Unit =
-    Seq("segs", "seen").foreach(k => graft.io.BucketedStore
-      .compact(spark, tableName(outDir, k), s"$outDir/$k"))
-
   def runFiles(spark: SparkSession, inDir: String, outDir: String,
-               checkpoint: String, w: Int = 20): StreamingQuery = {
-    val schema = "doc_id LONG, text STRING"
-    spark.readStream.schema(schema).json(inDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        writeBatch(df, outDir, w); ()
-      }
-      .start()
-  }
+               checkpoint: String, w: Int = 20): StreamingQuery =
+    FileDrop.drain(spark.readStream.schema("doc_id LONG, text STRING")
+      .json(inDir), checkpoint) { (df, _) => writeBatch(df, outDir, w); () }
 }

@@ -2,9 +2,12 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.graph.Snapshots
+import graft.io.{BucketedStore, Fs}
+import graft.io.BucketedStore.{Store, StoreLayout}
+import graft.streaming.FileDrop
 import graft.sim.Similarity
 
 /** Incremental semantic dedup at ingest — the streaming form of
@@ -50,9 +53,6 @@ object SemanticIngestJob {
   @transient private lazy val log =
     org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private def storeBuckets(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.semantic.storeBuckets", "64").toInt
-
   /** Target max store rows per cell when sizing the model at freeze.
     * Per-batch history cost is O(batch × store/cells) BY CONTRACT (the
     * per-cell scan), so the cell count — frozen forever at the first
@@ -73,32 +73,17 @@ object SemanticIngestJob {
     else math.max(requested,
       math.min(4096L, (expectedCorpus + budget - 1) / budget).toInt)
 
-  private def tableName(outDir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(outDir.getBytes("UTF-8"))
-    "graft_sem_vectors_" + md.take(8).map("%02x".format(_)).mkString
-  }
-
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
-  /** Bucket-aware store view — fresh sessions re-register from the
-    * persisted layout descriptor ([[graft.io.BucketedStore]], r17), so
-    * the per-batch history join keeps its store-side co-location
-    * instead of silently re-shuffling the whole history. */
-  private[graft] def storeView(spark: SparkSession,
-                               outDir: String): Option[DataFrame] =
-    graft.io.BucketedStore
-      .view(spark, tableName(outDir), s"$outDir/vectors")
-      .map(_.hint("merge"))
+  /** (vec_id, cell, v, dup_of, kept) per ingested vector, bucketed on
+    * cell (sorted by cell, vec_id) so the per-batch history join keeps
+    * its store-side co-location. */
+  def vectorStore(outDir: String): Store = Store(s"$outDir/vectors",
+    StoreLayout(BucketedStore.Buckets, "cell", Seq("cell", "vec_id")))
 
   /** The frozen model, or None before the first batch. */
   private[graft] def loadModel(spark: SparkSession,
                                outDir: String): Option[Seq[Seq[Double]]] = {
     val path = s"$outDir/model"
-    if (!pathExists(spark, path)) None
+    if (!Fs.pathExists(spark, path)) None
     else Some(spark.read.parquet(path)
       .orderBy(col("cell"))
       .collect().map(_.getSeq[Double](1)).toSeq)
@@ -153,7 +138,7 @@ object SemanticIngestJob {
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
       .withColumn("cell", Similarity.nearestCell(col("v"), model))
-    val store = storeView(spark, outDir)
+    val store = BucketedStore.history(spark, vectorStore(outDir))
     // past-the-knee tripwire: count-star over the bucketed parquet
     // store is footer-only (noise next to the full-store history join
     // below), and a store that outgrew its frozen cell count is a
@@ -207,35 +192,22 @@ object SemanticIngestJob {
         .select(col("vec_id"), col("cell"), col("v"), col("dup_of"),
           col("dup_of").isNull.as("kept"))
       if (n > 0)
-        graft.io.BucketedStore.append(verdict, tableName(outDir),
-          s"$outDir/vectors", "cell", Seq("cell", "vec_id"),
-          storeBuckets(spark))
+        BucketedStore.append(verdict, vectorStore(outDir))
       n
     } finally Snapshots.release(fresh)
   }
 
   /** File-drop streaming entry (replayable source + checkpoint →
-    * restart-safe): each dropped file holds JSON lines
+    * restart-safe, [[FileDrop]]): each dropped file holds JSON lines
     * {"vec_id": …, "embedding": [...]}. AvailableNow drains and stops. */
-  /** Bucket-preserving small-file compaction of the vector store
-    * ([[graft.io.BucketedStore.compact]]). */
-  def compactStores(spark: SparkSession, outDir: String): Unit =
-    graft.io.BucketedStore.compact(spark, tableName(outDir),
-      s"$outDir/vectors")
-
   def runFiles(spark: SparkSession, inDir: String, outDir: String,
                checkpoint: String, clusters: Int,
                threshold: Double,
-               expectedCorpus: Long = -1L): StreamingQuery = {
-    val schema = "vec_id LONG, embedding ARRAY<DOUBLE>"
-    spark.readStream.schema(schema).json(inDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        writeBatch(df, outDir, clusters, threshold,
-          expectedCorpus = expectedCorpus); ()
-      }
-      .start()
-  }
+               expectedCorpus: Long = -1L): StreamingQuery =
+    FileDrop.drain(spark.readStream
+      .schema("vec_id LONG, embedding ARRAY<DOUBLE>").json(inDir),
+      checkpoint) { (df, _) =>
+      writeBatch(df, outDir, clusters, threshold,
+        expectedCorpus = expectedCorpus); ()
+    }
 }

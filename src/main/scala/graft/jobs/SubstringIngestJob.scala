@@ -2,9 +2,12 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.graph.Snapshots
+import graft.io.BucketedStore
+import graft.io.BucketedStore.Store
+import graft.streaming.FileDrop
 
 /** Incremental exact-substring scrub at ingest — the streaming form of
   * [[graft.dedup.SubstringDedup.dedupCorpus]]: each arriving micro-batch
@@ -35,32 +38,12 @@ import graft.graph.Snapshots
   */
 object SubstringIngestJob {
 
-  private val StoreBuckets = 64
+  /** (g, min_doc) per distinct k-gram ever seen, bucketed on g. */
+  def gramStore(outDir: String): Store = Store.keyed(s"$outDir/grams", "g")
 
-  private def tableName(outDir: String, kind: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(outDir.getBytes("UTF-8"))
-    s"graft_sub_${kind}_" + md.take(8).map("%02x".format(_)).mkString
-  }
-
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
-  /** Bucket-aware store view — fresh sessions re-register from the
-    * persisted layout descriptor ([[graft.io.BucketedStore]], r17). */
-  private def storeView(spark: SparkSession, outDir: String,
-                        kind: String): Option[DataFrame] =
-    graft.io.BucketedStore
-      .view(spark, tableName(outDir, kind), s"$outDir/$kind")
-      .map(_.hint("merge"))
-
-  private def appendBucketed(df: DataFrame, outDir: String, kind: String,
-                             bucketCol: String): Unit =
-    graft.io.BucketedStore.append(df, tableName(outDir, kind),
-      s"$outDir/$kind", bucketCol, Seq(bucketCol),
-      StoreBuckets)
+  /** Ingested doc_ids (the replay guard), bucketed on doc_id. */
+  def seenStore(outDir: String): Store =
+    Store.keyed(s"$outDir/seen", "doc_id")
 
   /** Scrub stage core, two-phase so composed funnels
     * ([[CorpusIngestJob]]) can write their corpus BEFORE committing the
@@ -89,7 +72,7 @@ object SubstringIngestJob {
     val batchMin = sh.groupBy(col("g")).agg(min(col("doc_id")).as("bmin"))
     // a doc's occurrence is covered when an EARLIER doc holds the
     // gram — earlier batch (store join) or earlier in this batch
-    val store = storeView(spark, outDir, "grams")
+    val store = BucketedStore.history(spark, gramStore(outDir))
     val withHistory = store match {
       case Some(st) => batchMin.join(
         st.select(col("g"), col("min_doc")), Seq("g"), "left")
@@ -120,8 +103,8 @@ object SubstringIngestJob {
             Seq("g"), "left_anti")
           case None => withHistory
         }
-        appendBucketed(newGrams.select(col("g"), col("min_doc")),
-          outDir, "grams", "g")
+        BucketedStore.append(newGrams.select(col("g"), col("min_doc")),
+          gramStore(outDir))
       },
       () => Snapshots.release(sh))
   }
@@ -135,7 +118,7 @@ object SubstringIngestJob {
   def writeBatch(docs: DataFrame, outDir: String, k: Int = 8): Long = {
     val spark = docs.sparkSession
     // replay guard first: a doc already ingested contributes nothing
-    val fresh0 = storeView(spark, outDir, "seen") match {
+    val fresh0 = BucketedStore.history(spark, seenStore(outDir)) match {
       case Some(seen) =>
         docs.join(seen.select(col("doc_id")), Seq("doc_id"), "left_anti")
       case None => docs
@@ -150,8 +133,7 @@ object SubstringIngestJob {
         // order would silently LOSE docs (marked seen, never written)
         staged.out.write.mode("append").parquet(s"$outDir/documents")
         staged.commit()
-        appendBucketed(fresh.select(col("doc_id")), outDir, "seen",
-          "doc_id")
+        BucketedStore.append(fresh.select(col("doc_id")), seenStore(outDir))
       }
       staged.release()
       n
@@ -159,24 +141,10 @@ object SubstringIngestJob {
   }
 
   /** File-drop streaming entry (replayable source + checkpoint →
-    * restart-safe): each dropped file holds JSON lines
+    * restart-safe, [[FileDrop]]): each dropped file holds JSON lines
     * {"doc_id": …, "text": …}. AvailableNow drains and stops. */
-  /** Bucket-preserving small-file compaction of both stores
-    * ([[graft.io.BucketedStore.compact]]). */
-  def compactStores(spark: SparkSession, outDir: String): Unit =
-    Seq("grams", "seen").foreach(k => graft.io.BucketedStore
-      .compact(spark, tableName(outDir, k), s"$outDir/$k"))
-
   def runFiles(spark: SparkSession, inDir: String, outDir: String,
-               checkpoint: String, k: Int = 8): StreamingQuery = {
-    val schema = "doc_id LONG, text STRING"
-    spark.readStream.schema(schema).json(inDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        writeBatch(df, outDir, k); ()
-      }
-      .start()
-  }
+               checkpoint: String, k: Int = 8): StreamingQuery =
+    FileDrop.drain(spark.readStream.schema("doc_id LONG, text STRING")
+      .json(inDir), checkpoint) { (df, _) => writeBatch(df, outDir, k); () }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ingest.BlockParser
 import graft.ops._
+import graft.streaming.FileDrop
 
 /** Volume/transfer pipeline (SURVEY.md §3.2) — the etl_vol_transfers
   * flagship job: stream → flatten → resolve inputs → net-flow → price-adjust
@@ -12,8 +13,10 @@ import graft.ops._
   * UTXO state: each batch appends its output flows to a `utxo` parquet table
   * and resolves inputs against stored ∪ current outputs — the same contract
   * as the reference (inputs predating the stream's start drop out,
-  * SURVEY.md §7.4 risk 3). At scale the utxo table is bucketed by
-  * src tx hash so the resolve join is co-located.
+  * SURVEY.md §7.4 risk 3). The utxo table is an unbucketed, append-only
+  * directory that every batch re-lists and scans whole, so the resolve
+  * grows with stream age; the bounded, bucket-pruned resolve is ROADMAP
+  * item 2.
   */
 object VolTransferJob {
 
@@ -89,13 +92,7 @@ object VolTransferJob {
     * absorbs. */
   def runFiles(spark: SparkSession, inDir: String, priceDim: DataFrame,
                outDir: String, checkpoint: String): StreamingQuery =
-    spark.readStream.text(inDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        writeBatchIdempotent(spark, df.select("value"), priceDim,
-          outDir, id)
-      }
-      .start()
+    FileDrop.drain(spark.readStream.text(inDir), checkpoint) { (df, id) =>
+      writeBatchIdempotent(spark, df.select("value"), priceDim, outDir, id)
+    }
 }

@@ -12,8 +12,11 @@ import org.apache.spark.sql.functions._
   * — the single biggest anti-pattern at scale (SURVEY.md §4). Natively the
   * resolver is a data dependency: join input outpoints
   * `(source tx hash, output index)` against the engine's own table of prior
-  * outputs. At 100 TB both sides are bucketed on tx hash so the join is
-  * co-located; here Catalyst picks shuffle/broadcast via AQE.
+  * outputs. Catalyst picks shuffle/broadcast via AQE. Today the stored
+  * side (VolTransferJob's `utxo` table) is an unbucketed, append-only
+  * directory re-listed and scanned whole every batch; bucketing it on
+  * tx hash so the join is co-located and partition-pruned is ROADMAP
+  * item 2.
   *
   * Contract parity (SURVEY.md §7.4 risk 3): a LEFT join — inputs whose
   * source tx predates the stream's start point resolve to null and drop out

@@ -1,11 +1,11 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import graft.graph.Snapshots
+import graft.io.Fs
 
 /** Volume reduction + rollups (SURVEY.md §2.9 reduce_vol, §2.7 A4–A6,
   * §2.2 K4 upsert).
@@ -60,12 +60,6 @@ object Volume {
     existing.join(updates.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(updates)
 
-  /** Cloud-FS-safe existence probe (`java.io.File` is local-only). */
-  def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
   /** Partition-pruned read of only the `pbucket` partitions in
     * `touched` — O(touched buckets), never a full-table scan. The
     * caller passes the table's known schema, so no schema-inference job
@@ -91,17 +85,26 @@ object Volume {
     * ([[graft.graph.Snapshots.cutObserved]] with `collect_set(pbucket)`)
     * or know it outright, so no job runs to find it. The merged
     * partitions materialize once, as one eager cut, before the write
-    * overwrites the files they were read from. */
+    * overwrites the files they were read from.
+    *
+    * `merge(existing, updates, keys)` gives the rows of the touched
+    * partitions after the tick: by default [[upsert]] (updates replace
+    * the stored rows they collide with); an accumulating table passes
+    * a merge that folds updates into the stored rows, so the stored
+    * partitions are read once. A table's first write is `updates`
+    * as given. */
   def upsertPartitioned(spark: SparkSession, path: String,
                         updates: DataFrame, keys: Seq[String],
-                        touched: Seq[Long]): Unit = {
-    if (!pathExists(spark, path)) {
+                        touched: Seq[Long],
+                        merge: (DataFrame, DataFrame, Seq[String]) =>
+                          DataFrame = upsert): Unit = {
+    if (!Fs.pathExists(spark, path)) {
       updates.write.partitionBy("pbucket").mode("overwrite").parquet(path)
       return
     }
     if (touched.isEmpty) return
     val existing = readTouched(spark, path, updates.schema, touched)
-    val merged = upsert(existing, updates, keys)
+    val merged = merge(existing, updates, keys)
       .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
     try merged.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")

@@ -96,10 +96,8 @@ object LshIndex {
 
   private def dropTableAndLocation(spark: SparkSession, t: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    graft.io.Fs.deletePath(spark, new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), t.toLowerCase).toString)
   }
 
   /** Build the two index tables. `buckets` is a file-layout choice

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * re-broadcast-the-store scale bug; round 11 extends the line to the
   * other four. Documented caveat: plain-parquet appends add one file
   * per bucket per batch, so the store-read constant creeps with batch
-  * COUNT (a real deployment compacts; see DedupIngestJob scaladoc).
+  * COUNT (a real deployment compacts; see graft.io.BucketedStore).
   *
   * Docs: ~40 words each; `dupFrac` of each batch duplicates content
   * from batch 0 (cross-batch dups the store must catch), the rest are

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.io.BucketedStore
+import graft.io.BucketedStore.{Store, StoreLayout}
 
 /** Pins graft.io.BucketedStore — the shared layout-descriptor
   * management behind every persisted ingest store (r17): a fresh
@@ -15,12 +16,15 @@ import graft.io.BucketedStore
 class BucketedStoreSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
-  private var n = 0
   private def freshStore(): (String, String) = {
-    n += 1
     val dir = Files.createTempDirectory("graft_bstore").toString
-    (s"graft_bstore_spec_$n", s"$dir/store")
+    val path = s"$dir/store"
+    (at(path, 8).table, path)
   }
+
+  /** The store at `path` keyed on `key`, seeding `buckets`. */
+  private def at(path: String, buckets: Int, key: String = "k"): Store =
+    Store(path, StoreLayout(buckets, key, Seq(key)))
 
   private def rows(lo: Long, hi: Long) =
     (lo until hi).map(i => (i, s"v$i")).toDF("k", "payload")
@@ -29,12 +33,12 @@ class BucketedStoreSpec extends AnyFunSuite with SparkTestBase {
     "the descriptor — bucketed scan (no store-side exchange in a " +
     "co-located join), same rows, catalog entry restored") {
     val (table, path) = freshStore()
-    BucketedStore.append(rows(0, 100), table, path, "k", Seq("k"), 8)
-    val before = BucketedStore.view(spark, table, path).get
+    BucketedStore.append(rows(0, 100), at(path, 8))
+    val before = BucketedStore.view(spark, at(path, 8)).get
       .orderBy(col("k")).as[(Long, String)].collect().toSeq
     spark.sql(s"DROP TABLE `$table`") // external: files survive
     assert(!spark.catalog.tableExists(table))
-    val v = BucketedStore.view(spark, table, path).get
+    val v = BucketedStore.view(spark, at(path, 8)).get
     assert(spark.catalog.tableExists(table), "view must re-register")
     assert(v.orderBy(col("k")).as[(Long, String)].collect().toSeq
       == before)
@@ -51,19 +55,18 @@ class BucketedStoreSpec extends AnyFunSuite with SparkTestBase {
   test("appends follow the persisted layout, not the session conf: a " +
     "changed bucket knob cannot mix moduli in one store") {
     val (table, path) = freshStore()
-    BucketedStore.append(rows(0, 50), table, path, "k", Seq("k"), 4)
+    BucketedStore.append(rows(0, 50), at(path, 4))
     // catalog lost AND the caller now asks for a different bucket count
     spark.sql(s"DROP TABLE `$table`")
-    BucketedStore.append(rows(50, 100), table, path, "k", Seq("k"), 16)
+    BucketedStore.append(rows(50, 100), at(path, 16))
     // the descriptor wins: still 4 buckets, one consistent modulus
     val counts = graft.io.Layout.bucketFileCounts(spark, path)
     assert(counts.keys.forall(_ < 4),
       s"files outside the original 4-bucket layout: $counts")
-    assert(BucketedStore.view(spark, table, path).get.count() == 100)
+    assert(BucketedStore.view(spark, at(path, 4)).get.count() == 100)
     // and mismatched KEYS are refused loudly, not silently re-keyed
     val ex = intercept[IllegalArgumentException] {
-      BucketedStore.append(rows(100, 110), table, path, "payload",
-        Seq("payload"), 4)
+      BucketedStore.append(rows(100, 110), at(path, 4, "payload"))
     }
     assert(ex.getMessage.contains("keyed"))
   }
@@ -73,24 +76,23 @@ class BucketedStoreSpec extends AnyFunSuite with SparkTestBase {
     "registered and appendable") {
     val (table, path) = freshStore()
     for (b <- 0 until 3)
-      BucketedStore.append(rows(b * 20, (b + 1) * 20), table, path,
-        "k", Seq("k"), 4)
+      BucketedStore.append(rows(b * 20, (b + 1) * 20), at(path, 4))
     val pre = graft.io.Layout.bucketFileCounts(spark, path)
     assert(pre.values.max > 1, s"expected accreted files, got $pre")
-    BucketedStore.compact(spark, table, path)
+    BucketedStore.compact(spark, at(path, 4))
     val post = graft.io.Layout.bucketFileCounts(spark, path)
     assert(post.nonEmpty && post.values.forall(_ == 1), post.toString)
     assert(spark.catalog.tableExists(table))
-    assert(BucketedStore.view(spark, table, path).get
+    assert(BucketedStore.view(spark, at(path, 4)).get
       .orderBy(col("k")).as[(Long, String)].collect().toSeq
       == (0L until 60L).map(i => (i, s"v$i")))
-    BucketedStore.append(rows(60, 70), table, path, "k", Seq("k"), 4)
-    assert(BucketedStore.view(spark, table, path).get.count() == 70)
+    BucketedStore.append(rows(60, 70), at(path, 4))
+    assert(BucketedStore.view(spark, at(path, 4)).get.count() == 70)
     // compacting a store with no descriptor is refused with guidance
-    val (t2, p2) = freshStore()
+    val (_, p2) = freshStore()
     rows(0, 5).write.parquet(p2)
     val ex = intercept[IllegalStateException] {
-      BucketedStore.compact(spark, t2, p2)
+      BucketedStore.compact(spark, at(p2, 4))
     }
     assert(ex.getMessage.contains("descriptor"))
   }
@@ -122,7 +124,7 @@ class BucketedStoreSpec extends AnyFunSuite with SparkTestBase {
     "upgraded in place by its next append") {
     val (table, path) = freshStore()
     // a pre-descriptor store: bucketed files, catalog + descriptor gone
-    BucketedStore.append(rows(0, 30), table, path, "k", Seq("k"), 8)
+    BucketedStore.append(rows(0, 30), at(path, 8))
     spark.sql(s"DROP TABLE `$table`")
     val lp = new java.io.File(s"${path}_layout")
     def del(f: java.io.File): Unit = {
@@ -132,11 +134,11 @@ class BucketedStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(BucketedStore.loadLayout(spark, path).isEmpty)
     // view still answers (plain read), just unbucketed — and without a
     // descriptor it must NOT invent a catalog registration
-    assert(BucketedStore.view(spark, table, path).get.count() == 30)
+    assert(BucketedStore.view(spark, at(path, 8)).get.count() == 30)
     assert(!spark.catalog.tableExists(table))
     // the next append re-creates table + descriptor under its conf
-    BucketedStore.append(rows(30, 40), table, path, "k", Seq("k"), 8)
+    BucketedStore.append(rows(30, 40), at(path, 8))
     assert(BucketedStore.loadLayout(spark, path).exists(_.buckets == 8))
-    assert(BucketedStore.view(spark, table, path).get.count() == 40)
+    assert(BucketedStore.view(spark, at(path, 8)).get.count() == 40)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.io.BucketedStore
 import graft.jobs.DedupIngestJob
 
 class DedupIngestSpec extends AnyFunSuite with SparkTestBase {
@@ -10,6 +11,9 @@ class DedupIngestSpec extends AnyFunSuite with SparkTestBase {
 
   private def tmp(): String =
     Files.createTempDirectory("graft_dedup_ingest").toString
+
+  private def history(out: String) =
+    BucketedStore.history(spark, DedupIngestJob.hashStore(out))
 
   test("cross-batch dedup: later batches drop already-seen content") {
     val out = tmp()
@@ -55,7 +59,6 @@ class DedupIngestSpec extends AnyFunSuite with SparkTestBase {
   test("bucketed store: anti-join plans with no exchange on the store " +
     "side") {
     val out = tmp()
-    spark.conf.set("spark.graft.dedup.hashStoreBuckets", "4")
     // two appends → multiple files per bucket, the realistic store shape
     assert(DedupIngestJob.writeBatch(
       Seq((1L, "aa bb"), (2L, "cc dd")).toDF("doc_id", "text"), out) == 2)
@@ -66,7 +69,7 @@ class DedupIngestSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val store = DedupIngestJob.storeView(spark, out).get
+      val store = history(out).get
       val probe = Seq((99L, "zz yy")).toDF("doc_id", "text")
         .withColumn("content_hash",
           graft.dedup.Dedup.hash60(graft.dedup.Dedup.normalize(col("text"))))
@@ -89,7 +92,6 @@ class DedupIngestSpec extends AnyFunSuite with SparkTestBase {
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.unset("spark.sql.adaptive.enabled")
-      spark.conf.unset("spark.graft.dedup.hashStoreBuckets")
     }
   }
 
@@ -105,7 +107,7 @@ class DedupIngestSpec extends AnyFunSuite with SparkTestBase {
       Seq((1L, "aa bb"), (2L, "cc dd")).toDF("doc_id", "text"), out) == 2)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val store = DedupIngestJob.storeView(spark, out).get
+      val store = history(out).get
       val probe = Seq((99L, "zz yy")).toDF("doc_id", "text")
         .withColumn("content_hash",
           graft.dedup.Dedup.hash60(graft.dedup.Dedup.normalize(col("text"))))

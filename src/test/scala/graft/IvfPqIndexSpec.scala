@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.io.BucketedStore
 import graft.jobs.IvfPqIndexJob
 import graft.sim.IvfPqInt
 
@@ -19,6 +20,9 @@ class IvfPqIndexSpec extends AnyFunSuite with SparkTestBase {
 
   private def tmp(): String =
     Files.createTempDirectory("graft_ivfpq_idx").toString
+
+  private def storeView(out: String, which: String) =
+    BucketedStore.view(spark, IvfPqIndexJob.store(out, which))
 
   private lazy val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
   private lazy val q = e.filter(col("vec_id") < 10)
@@ -53,11 +57,11 @@ class IvfPqIndexSpec extends AnyFunSuite with SparkTestBase {
     // a frozen model trained on a strict subset differs from the
     // full-corpus retrain, so this really did exercise frozen-model
     // assignment (guard against accidentally retraining in ingest)
-    val postings0 = IvfPqIndexJob.storeView(spark, out, "postings").get.count()
+    val postings0 = storeView(out, "postings").get.count()
     // replay: both batches again — nothing appends, probe unchanged
     assert(IvfPqIndexJob.ingest(rest, out) == 0L)
     assert(IvfPqIndexJob.ingest(first, out) == 0L)
-    assert(IvfPqIndexJob.storeView(spark, out, "postings").get.count()
+    assert(storeView(out, "postings").get.count()
       == postings0)
     assert(rows(IvfPqIndexJob.probe(spark, out, q, k = 5)) == fromIndex)
   }
@@ -104,11 +108,11 @@ class IvfPqIndexSpec extends AnyFunSuite with SparkTestBase {
         .as("embedding"))
     batch.coalesce(1).write.mode("overwrite").json(inDir)
     IvfPqIndexJob.runFiles(spark, inDir, out, ckpt).awaitTermination()
-    val n = IvfPqIndexJob.storeView(spark, out, "vecs").get.count()
+    val n = storeView(out, "vecs").get.count()
     assert(n == e.count())
     // restart over the same checkpoint: nothing new
     IvfPqIndexJob.runFiles(spark, inDir, out, ckpt).awaitTermination()
-    assert(IvfPqIndexJob.storeView(spark, out, "vecs").get.count() == n)
+    assert(storeView(out, "vecs").get.count() == n)
   }
 
   test("ensureBuilt is build-once: an unchanged corpus reuses the " +
@@ -131,7 +135,7 @@ class IvfPqIndexSpec extends AnyFunSuite with SparkTestBase {
     e.limit(30).write.mode("overwrite").parquet(src)
     IvfPqIndexJob.ensureBuilt(corpus, out)
     assert(postingsMtime() > t0, "rewritten corpus must rebuild")
-    assert(IvfPqIndexJob.storeView(spark, out, "vecs").get.count() == 30)
+    assert(storeView(out, "vecs").get.count() == 30)
     // ingest grows the store past the build corpus: the fingerprint
     // must go with it, so ensureBuilt rebuilds rather than serving a
     // grown index as "current for the build corpus"
@@ -140,7 +144,7 @@ class IvfPqIndexSpec extends AnyFunSuite with SparkTestBase {
     Thread.sleep(1100)
     IvfPqIndexJob.ensureBuilt(corpus, out)
     assert(postingsMtime() > t1, "post-ingest ensureBuilt must rebuild")
-    assert(IvfPqIndexJob.storeView(spark, out, "vecs").get.count() == 30)
+    assert(storeView(out, "vecs").get.count() == 30)
   }
 
   private def assertProbePlanPins(out: String): Unit = {
@@ -164,12 +168,12 @@ class IvfPqIndexSpec extends AnyFunSuite with SparkTestBase {
     // simulate a new SparkSession over the same on-disk index: the
     // session-scoped catalog is empty, the table locations survive
     Seq("postings", "vecs").foreach(w => spark.sql(
-      s"DROP TABLE IF EXISTS `${IvfPqIndexJob.tableName(out, w)}`"))
-    assert(!spark.catalog.tableExists(IvfPqIndexJob.tableName(out, "postings")))
+      s"DROP TABLE IF EXISTS `${IvfPqIndexJob.store(out, w).table}`"))
+    assert(!spark.catalog.tableExists(IvfPqIndexJob.store(out, "postings").table))
     assertProbePlanPins(out)
     assert(rows(IvfPqIndexJob.probe(spark, out, q, k = 5)) == before)
     // and the re-registration stuck (next probes pay nothing)
-    assert(spark.catalog.tableExists(IvfPqIndexJob.tableName(out, "postings")))
+    assert(spark.catalog.tableExists(IvfPqIndexJob.store(out, "postings").table))
   }
 
   test("ensureBuilt currency covers the RECIPE, not just the corpus: " +
@@ -207,16 +211,16 @@ class IvfPqIndexSpec extends AnyFunSuite with SparkTestBase {
     val buckets = IvfPqIndexJob.loadMeta(spark, out).get.buckets
     // the crash: ingest(rest) appended postings, died before vecs
     val codes = graft.sim.Quantize.quantize(rest, model.statsFrame(spark))
-    IvfPqIndexJob.appendBucketed(
-      IvfPqIndexJob.encodePostings(codes, model), out, "postings", buckets)
+    BucketedStore.append(IvfPqIndexJob.encodePostings(codes, model),
+      IvfPqIndexJob.store(out, "postings", buckets))
     // source replay: ids are absent from vecs (the guard store), so the
     // whole batch re-appends — postings now duplicated, vecs completed
     assert(IvfPqIndexJob.ingest(rest, out) == rest.count())
-    val postings = IvfPqIndexJob.storeView(spark, out, "postings").get
+    val postings = storeView(out, "postings").get
     assert(postings.count() >
       postings.dropDuplicates(Seq("cell", "vec_id")).count(),
       "the simulation must actually produce duplicate postings rows")
-    assert(IvfPqIndexJob.storeView(spark, out, "vecs").get
+    assert(storeView(out, "vecs").get
       .groupBy(col("vec_id")).count().filter(col("count") > 1).isEmpty,
       "vecs (the guard store) must never duplicate")
     val fromIndex = rows(IvfPqIndexJob.probe(spark, out, q, k = 5))
@@ -238,14 +242,14 @@ class IvfPqIndexSpec extends AnyFunSuite with SparkTestBase {
     assert(preCounts.values.max > 1,
       s"ingest batches must accrete files per bucket, got $preCounts")
     val before = rows(IvfPqIndexJob.probe(spark, out, q, k = 5))
-    val nPost = IvfPqIndexJob.storeView(spark, out, "postings").get.count()
+    val nPost = storeView(out, "postings").get.count()
     IvfPqIndexJob.compact(spark, out)
     for (w <- Seq("postings", "vecs")) {
       val counts = graft.io.Layout.bucketFileCounts(spark, s"$out/$w")
       assert(counts.nonEmpty && counts.values.forall(_ == 1),
         s"$w after compact: expected one file per bucket, got $counts")
     }
-    assert(IvfPqIndexJob.storeView(spark, out, "postings").get.count()
+    assert(storeView(out, "postings").get.count()
       == nPost, "compaction must not change the row set")
     assert(rows(IvfPqIndexJob.probe(spark, out, q, k = 5)) == before)
     assertProbePlanPins(out)

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.io.BucketedStore
 import graft.jobs.NearDupIngestJob
 
 class NearDupIngestSpec extends AnyFunSuite with SparkTestBase {
@@ -23,7 +24,6 @@ class NearDupIngestSpec extends AnyFunSuite with SparkTestBase {
     "shared vocabulary at all in any shingle window of this text"
 
   spark.conf.set("spark.graft.neardup.minMatchFrac", "0.5")
-  spark.conf.set("spark.graft.neardup.storeBuckets", "4")
 
   test("in-batch: a near-dup cluster contributes one representative") {
     val out = tmp()
@@ -80,7 +80,8 @@ class NearDupIngestSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val store = NearDupIngestJob.storeView(spark, out, "buckets").get
+      val store =
+        BucketedStore.history(spark, NearDupIngestJob.bucketStore(out)).get
       val probe = Seq((99L, 12345L)).toDF("doc_id", "bucket")
       val joined = probe.join(store.select(col("bucket"),
         col("doc_id").as("store_id")), Seq("bucket"))

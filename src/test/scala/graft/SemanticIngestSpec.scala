@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.io.BucketedStore
 import graft.jobs.SemanticIngestJob
 import graft.dedup.SemanticDedup
 
@@ -11,6 +12,9 @@ class SemanticIngestSpec extends AnyFunSuite with SparkTestBase {
 
   private def tmp(): String =
     Files.createTempDirectory("graft_sem_ingest").toString
+
+  private def history(out: String) =
+    BucketedStore.history(spark, SemanticIngestJob.vectorStore(out))
 
   // two tight cosine families (a*, b*) plus loners; ids increase
   // across batches (the append-only ingest contract)
@@ -36,7 +40,7 @@ class SemanticIngestSpec extends AnyFunSuite with SparkTestBase {
     assert(SemanticIngestJob.writeBatch(batch2, out, clusters = 3,
       threshold = 0.95) == 4)
     val model = SemanticIngestJob.loadModel(spark, out).get
-    val store = SemanticIngestJob.storeView(spark, out).get
+    val store = history(out).get
       .select(col("vec_id"), col("cell"), col("dup_of"), col("kept"))
       .as[(Long, Int, Option[Long], Boolean)].collect().sortBy(_._1).toList
     val batch = SemanticDedup.semanticDedupWithModel(
@@ -60,7 +64,7 @@ class SemanticIngestSpec extends AnyFunSuite with SparkTestBase {
     assert(SemanticIngestJob.writeBatch(batch1, out, 3, 0.95) == 4)
     assert(SemanticIngestJob.writeBatch(batch2, out, 3, 0.95) == 4)
     assert(SemanticIngestJob.writeBatch(batch2, out, 3, 0.95) == 0)
-    val store = SemanticIngestJob.storeView(spark, out).get
+    val store = history(out).get
     assert(store.count() == 8)
     assert(store.filter(col("kept")).select("vec_id").as[Long]
       .collect().toSet == Set(1L, 2L, 4L, 12L))
@@ -84,7 +88,7 @@ class SemanticIngestSpec extends AnyFunSuite with SparkTestBase {
     ).toDF("vec_id", "embedding")
     assert(SemanticIngestJob.writeBatch(b1, out, 2, 0.95) == 3)
     assert(SemanticIngestJob.writeBatch(b2, out, 2, 0.95) == 1)
-    val m = SemanticIngestJob.storeView(spark, out).get
+    val m = history(out).get
       .select(col("vec_id"), col("dup_of")).as[(Long, Option[Long])]
       .collect().toMap
     assert(m(2L) == Some(1L) && m(20L) == Some(2L), m.toString)
@@ -99,13 +103,12 @@ class SemanticIngestSpec extends AnyFunSuite with SparkTestBase {
   test("bucketed store: the history join plans with no exchange on " +
     "the store side") {
     val out = tmp()
-    spark.conf.set("spark.graft.semantic.storeBuckets", "4")
     try {
       assert(SemanticIngestJob.writeBatch(batch1, out, 3, 0.95) == 4)
       assert(SemanticIngestJob.writeBatch(batch2, out, 3, 0.95) == 4)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val store = SemanticIngestJob.storeView(spark, out).get
+      val store = history(out).get
       val probe = Seq((99L, 0, vec(1.0, 0.0, 0.0, 0.0)))
         .toDF("vec_id", "cell", "v")
       val joined = probe.join(store.select(col("cell"),
@@ -124,7 +127,6 @@ class SemanticIngestSpec extends AnyFunSuite with SparkTestBase {
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.unset("spark.sql.adaptive.enabled")
-      spark.conf.unset("spark.graft.semantic.storeBuckets")
     }
   }
 
@@ -141,7 +143,7 @@ class SemanticIngestSpec extends AnyFunSuite with SparkTestBase {
     val q = SemanticIngestJob.runFiles(spark, in, out, tmp(),
       clusters = 2, threshold = 0.95)
     q.awaitTermination(60000)
-    val store = SemanticIngestJob.storeView(spark, out).get
+    val store = history(out).get
     assert(store.filter(col("kept")).select("vec_id").as[Long]
       .collect().toSet == Set(1L, 3L))
   }
