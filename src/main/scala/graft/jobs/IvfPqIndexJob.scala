@@ -46,14 +46,14 @@ import graft.sim.IvfPqInt.IvfPqModel
   *    lives here because the catalog entry does NOT survive a new
   *    SparkSession while the files do: [[BucketedStore.view]]
   *    re-registers the table from the stores' layout descriptors
-  *    (CREATE TABLE ... CLUSTERED BY ... LOCATION) so a fresh serving session keeps the bucket-pruned,
-  *    exchange-free probe plan instead of silently degrading to a
-  *    plain parquet scan whose rerank join re-shuffles the index side
-  *    — exactly the cost the bucketing exists to avoid at 100 TB. The
-  *    recipe + version are part of [[ensureBuilt]]'s freshness check,
-  *    so changed dials (or a format change in a later binary) rebuild
-  *    instead of silently reusing an index trained under other
-  *    parameters.
+  *    (CREATE TABLE ... CLUSTERED BY ... LOCATION) so a fresh serving
+  *    session keeps the bucket-pruned, exchange-free probe plan
+  *    instead of silently degrading to a plain parquet scan whose
+  *    rerank join re-shuffles the index side — exactly the cost the
+  *    bucketing exists to avoid at 100 TB. The recipe + version are
+  *    part of [[ensureBuilt]]'s freshness check, so changed dials (or
+  *    a format change in a later binary) rebuild instead of silently
+  *    reusing an index trained under other parameters.
   *
   * Probe plan: postings scan (pushed In(cell), bucket-pruned,
   * deduped by (cell, vec_id) — see ingest) ⋈ broadcast probe frame
@@ -141,7 +141,8 @@ object IvfPqIndexJob {
     val need =
       Seq("fingerprint", "cells", "subspaces", "cents", "buckets", "version")
     // a pre-v2 meta (bare fingerprint) carries no descriptor: treat as
-    // absent — ensureBuilt rebuilds, BucketedStore.view degrades gracefully
+    // absent — ensureBuilt rebuilds, BucketedStore.view degrades
+    // gracefully
     if (!need.forall(df.columns.contains)) return None
     val r = df.select(need.map(col): _*).head()
     Some(IndexMeta(r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3),
