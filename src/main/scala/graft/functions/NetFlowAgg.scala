@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
 /** Single-pass net-flow as a typed Aggregator (SURVEY.md §7.3's optional
   * upgrade over ops.NetFlow).
   *
-  * ops.NetFlow shuffles on (tx, address, unit) twice (once per side) and
-  * joins. This form unions signed flows and shuffles ONCE on the tx hash,
-  * folding each tx's rows into a map buffer — the shuffle key count drops
-  * from |tx|·|addr|·|unit| to |tx|, and the join disappears. The buffer is
+  * ops.NetFlow unions signed flows and shuffles once on the composite
+  * (tx, address, unit) key for a grouped sum. This form shuffles once on
+  * the tx hash alone, folding each tx's rows into a map buffer — the
+  * shuffle key count drops from |tx|·|addr|·|unit| to |tx|. The buffer is
   * bounded by a tx's distinct (address, unit) pairs (small by
   * construction), so it is spill-safe at any corpus size.
   */

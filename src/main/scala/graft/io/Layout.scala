@@ -9,10 +9,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The resolver join (outpoints ⋈ utxo on src_tx_hash) is the canonical
   * candidate: bucketed on the tx-hash key at write time, each resolve
-  * would be a per-bucket sort-merge with zero network. It is not there
-  * yet — VolTransferJob's `utxo` table is an unbucketed, append-only
-  * directory re-listed every batch (ROADMAP item 2); the bucketed
-  * ingest stores live in [[BucketedStore]].
+  * would be a per-bucket sort-merge with zero network. VolTransferJob's
+  * `utxo` table is not bucketed: it is an append-only directory (one
+  * file per batch) that each batch scans through a broadcast semi-join
+  * on the hashes its inputs name, so only the matching rows reach the
+  * resolve; the bucketed ingest stores live in [[BucketedStore]].
   * Bucket counts are powers of two so a cluster can re-bucket by splitting
   * without rewriting everything.
   */

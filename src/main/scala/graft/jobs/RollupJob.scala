@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.io.Fs
+import graft.model.Schemas
 import graft.ops.Volume
 import graft.graph.{PageRank, Snapshots}
 
@@ -30,8 +31,10 @@ import graft.graph.{PageRank, Snapshots}
   * all-time `delta` are each one eager observed cut
   * ([[Snapshots.cutObserved]]) that also collects its `pbucket` set, and
   * PageRank, a global recompute, touches every key bucket. Stored
-  * partitions are read with the updates' schema (no schema-inference
-  * job), and each upsert materializes its merged partitions once.
+  * partitions are read with the updates' schema and the `vol` and
+  * `edges` inputs with their declared sink schemas (no schema-inference
+  * job anywhere in the tick), and each upsert materializes its merged
+  * partitions once.
   *
   * vol_all_time is maintained INCREMENTALLY: the tick computes, per
   * unit, Δ = Σ(new by-block row − the stored row it replaces) and adds it
@@ -87,7 +90,7 @@ object RollupJob {
     // extract: WHERE value_adj != 0 (F5), windowed to the tick; the cut
     // observes the height buckets the by-block upsert will rewrite
     val vol = sinceHeight.foldLeft(
-      spark.read.parquet(s"$dataDir/vol")
+      spark.read.schema(Schemas.volSink).parquet(s"$dataDir/vol")
         .filter(col("value_adj") =!= 0.0))(
       (df, h) => df.filter(col("height") >= h))
     val byBlockCut = Snapshots.cutObserved(Volume.byBlock(vol)
@@ -143,7 +146,7 @@ object RollupJob {
     // and the scores come back as a local relation (see PageRank).
     val edgesPath = s"$dataDir/edges"
     if (Fs.pathExists(spark, edgesPath)) {
-      val edges = spark.read.parquet(edgesPath)
+      val edges = spark.read.schema(Schemas.edgesSink).parquet(edgesPath)
         .select(col("send_addr").as("src"), col("rx_addr").as("dst"))
       val scores = PageRank.run(edges)
         .withColumn("pbucket", keyBucket(col("address")))

@@ -1,8 +1,14 @@
 package graft.jobs
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+import graft.graph.Snapshots
 import graft.ingest.BlockParser
+import graft.io.Fs
 import graft.ops._
 import graft.streaming.FileDrop
 
@@ -10,13 +16,20 @@ import graft.streaming.FileDrop
   * flagship job: stream → flatten → resolve inputs → net-flow → price-adjust
   * → vol + transfer edges, all native (no UDF/REST boundary).
   *
-  * UTXO state: each batch appends its output flows to a `utxo` parquet table
-  * and resolves inputs against stored ∪ current outputs — the same contract
-  * as the reference (inputs predating the stream's start drop out,
-  * SURVEY.md §7.4 risk 3). The utxo table is an unbucketed, append-only
-  * directory that every batch re-lists and scans whole, so the resolve
-  * grows with stream age; the bounded, bucket-pruned resolve is ROADMAP
-  * item 2.
+  * UTXO state: each batch appends its output flows to a `utxo` parquet
+  * table and resolves inputs against stored ∪ current outputs — the same
+  * contract as the reference (inputs predating the stream's start drop
+  * out, SURVEY.md §7.4 risk 3). The stored side is read as it stood
+  * before the batch and semi-joined to the source tx hashes the batch's
+  * inputs name, so the store is scanned (one file per batch, unbucketed,
+  * with a known schema) but never broadcast or shuffled whole; the
+  * batch's own outputs resolve intra-batch spends in memory.
+  *
+  * A batch is three Spark phases: one eager cut of the parsed txs, one
+  * eager cut of the net flow (which pins the pre-write store listing),
+  * then the `utxo`, `vol` and `edges` writes at once — most of a small
+  * batch is per-job scheduling and commit time, which the writes then
+  * overlap instead of queueing.
   */
 object VolTransferJob {
 
@@ -24,8 +37,7 @@ object VolTransferJob {
     * outDir. */
   def writeBatch(spark: SparkSession, lines: DataFrame, priceDim: DataFrame,
                  outDir: String): Unit =
-    writeCore(spark, lines, priceDim, outDir,
-      (df, table) => df.write.mode("append").parquet(s"$outDir/$table"))
+    writeCore(spark, lines, priceDim, outDir, None)
 
   /** Idempotent batch core: every output table lands in a
     * `batch=<id>` directory overwritten WHOLE, so a replayed
@@ -34,38 +46,102 @@ object VolTransferJob {
     * instead of double-appending. Exactly-once for append-shaped
     * streaming sinks = replayable source + checkpointed offsets +
     * batch-id-keyed idempotent writes; this is the third leg. The
-    * pipeline is deterministic per batch (no uuid/rand on this path),
-    * so a rewrite reproduces identical bytes. */
+    * pipeline is deterministic per batch (no uuid/rand on this path,
+    * and the replay resolves against the store without its own
+    * `batch=<id>` files), so a rewrite reproduces identical rows. */
   def writeBatchIdempotent(spark: SparkSession, lines: DataFrame,
                            priceDim: DataFrame, outDir: String,
                            batchId: Long): Unit =
-    writeCore(spark, lines, priceDim, outDir,
-      (df, table) => df.write.mode("overwrite")
-        .parquet(s"$outDir/$table/batch=$batchId"))
+    writeCore(spark, lines, priceDim, outDir, Some(batchId))
 
-  /** The one batch chain behind both cores; `write(df, table)` stores
-    * one output table of the batch under outDir. */
+  /** The one batch chain behind both cores: with a `batchId` each
+    * output table of the batch overwrites its `batch=<id>` directory,
+    * without one it is appended under outDir. */
   private def writeCore(spark: SparkSession, lines: DataFrame,
                         priceDim: DataFrame, outDir: String,
-                        write: (DataFrame, String) => Unit): Unit = {
-    val blocks = BlockParser.parse(lines)
-    val txs = Flatten.transactions(blocks).persist()
+                        batchId: Option[Long]): Unit = {
+    def write(df: DataFrame, table: String): Unit = batchId match {
+      case Some(id) =>
+        df.write.mode("overwrite").parquet(s"$outDir/$table/batch=$id")
+      case None => df.write.mode("append").parquet(s"$outDir/$table")
+    }
+    // parse once; the cut also counts the batch's outpoints, the bound
+    // that lets the store-side semi-join broadcast its keys
+    val txCut = Snapshots.cutObserved(
+      Flatten.transactions(BlockParser.parse(lines)), MEMORY_AND_DISK,
+      sum(greatest(size(col("inputs")), lit(0))).as("outpoints"))
+    val txs = txCut.ds
     try {
-      val outFlows = TokenValues.outputFlows(txs).persist()
-      // grow the UTXO set first so intra- and cross-batch spends resolve
-      write(outFlows, "utxo")
-      // a batch=<id> layout makes partition discovery add a synthetic
-      // batch column — drop it (a no-op on the append layout), so
-      // downstream operators see the plain utxo schema
-      val utxo = spark.read.parquet(s"$outDir/utxo").drop("batch")
-      val inFlows = Resolver.resolve(Resolver.outpoints(txs), utxo)
-      val net = NetFlow.compute(outFlows, inFlows).persist()
-      val txMeta = txs.select("hash", "height", "slot")
-      write(Volume.vol(net, txMeta, priceDim), "vol")
-      write(Transfers.edges(net, priceDim), "edges")
-      net.unpersist()
-      outFlows.unpersist()
-    } finally { txs.unpersist() }
+      val outFlows = TokenValues.outputFlows(txs)
+      val outpoints = Resolver.outpoints(txs)
+      val utxo = storedBefore(spark, s"$outDir/utxo", outFlows.schema,
+          batchId, outpoints, txCut.long("outpoints"))
+        .fold(outFlows)(_.unionByName(outFlows))
+      // cut BEFORE any write: a lazy frame over the store would be
+      // re-planned against the files the concurrent utxo write adds
+      val net = NetFlow.compute(outFlows, Resolver.resolve(outpoints, utxo))
+        .localCheckpoint(true, MEMORY_AND_DISK)
+      try concurrently(
+        "utxo" -> (() => write(outFlows.hint("rebalance"), "utxo")),
+        "vol" -> (() => write(Volume.vol(net,
+          txs.select("hash", "height", "slot"), priceDim), "vol")),
+        "edges" -> (() => write(Transfers.edges(net, priceDim), "edges")))
+      finally Snapshots.release(net)
+    } finally Snapshots.release(txs)
+  }
+
+  /** The stored UTXO rows an outpoint of this batch can name: the store
+    * at `path` as it stood before the batch (on the idempotent path
+    * without the batch's own `batch=<id>` files, which a replay finds
+    * already written), read with the output flows' `schema` (no
+    * schema-inference job) and semi-joined to the outpoints' source tx
+    * hashes — broadcast while `outpointCount`, their row count, is
+    * small. None while the store does not exist yet. */
+  private def storedBefore(spark: SparkSession, path: String,
+                           schema: StructType, batchId: Option[Long],
+                           outpoints: DataFrame,
+                           outpointCount: Long): Option[DataFrame] =
+    if (!Fs.pathExists(spark, path)) None
+    else {
+      val all = spark.read.schema(schema).parquet(path)
+      val before = batchId.fold(all)(id =>
+        all.filter(col("batch") =!= id).drop("batch"))
+      val srcHashes = outpoints.select(col("src_tx_hash").as("hash"))
+      Some(before.join(Snapshots.broadcastIfSmall(srcHashes, outpointCount),
+        Seq("hash"), "left_semi"))
+    }
+
+  /** Runs each named task on a fresh thread and returns once all have
+    * ended — also when the calling thread is interrupted (a query
+    * stop), which is then passed on to the tasks and rethrown after
+    * them. A fresh thread inherits the caller's Spark local properties
+    * (job group, streaming batch id, SQL execution id), which a pooled
+    * one would not, so every job stays attributed to its batch. The
+    * first failure is rethrown, the others added as suppressed. */
+  private[graft] def concurrently(tasks: (String, () => Unit)*): Unit = {
+    val failures = new ConcurrentLinkedQueue[Throwable]()
+    val threads = tasks.map { case (name, task) =>
+      new Thread(() => try task() catch {
+        case t: Throwable => failures.add(t)
+      }, s"graft-write-$name")
+    }
+    threads.foreach(_.start())
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive) try t.join() catch {
+        case _: InterruptedException =>
+          interrupted = true
+          threads.foreach(_.interrupt())
+      }
+    }
+    if (interrupted)
+      throw new InterruptedException("batch interrupted during its writes")
+    val it = failures.iterator()
+    if (it.hasNext) {
+      val first = it.next()
+      it.forEachRemaining(t => first.addSuppressed(t))
+      throw first
+    }
   }
 
   /** Streaming entry (K5 foreachBatch, parity with

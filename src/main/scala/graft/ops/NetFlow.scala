@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
   * Reference semantics (/root/reference/src/etl_vol_transfers/main.py:96-105):
   * sum inputs and outputs per (address, unit) within a tx, full-outer join,
   * fill 0, `diff = out − in`, drop diff = 0. The reference runs this row-at-
-  * a-time in a pandas UDF per tx; natively it is two grouped sums + one
-  * full-outer join, all shuffling once on the same composite key — Catalyst
-  * reuses the hash partitioning across the aggregation and the join, so the
-  * whole operator is a single exchange per side at any scale.
+  * a-time in a pandas UDF per tx; natively it is one grouped sum over the
+  * union of signed flows (outputs +value, inputs −value, a null value
+  * counted as 0): Σ(out) − Σ(in) per key, with a key seen on one side only
+  * summing against an implicit 0 — the fill-0 outer join without the join.
+  * The whole operator is a single exchange on the composite key.
   */
 object NetFlow {
 
@@ -20,16 +21,12 @@ object NetFlow {
     * @return (hash, address, unit, diff) with diff ≠ 0
     */
   def compute(outFlows: DataFrame, inFlows: DataFrame): DataFrame = {
-    val keys = Seq("hash", "address", "unit")
-    val outSum = outFlows.groupBy(keys.map(col): _*)
-      .agg(sum(col("value")).as("out_value"))
-    val inSum = inFlows.groupBy(keys.map(col): _*)
-      .agg(sum(col("value")).as("in_value"))
-    outSum.join(inSum, keys, "full_outer")
-      .select(
-        col("hash"), col("address"), col("unit"),
-        (coalesce(col("out_value"), lit(0L)) -
-          coalesce(col("in_value"), lit(0L))).as("diff"))
+    val keys = Seq(col("hash"), col("address"), col("unit"))
+    def signed(flows: DataFrame, sign: Long) =
+      flows.select(keys :+ (coalesce(col("value"), lit(0L)) * sign).as("v"): _*)
+    signed(outFlows, 1L).unionByName(signed(inFlows, -1L))
+      .groupBy(keys: _*)
+      .agg(sum(col("v")).as("diff"))
       .filter(col("diff") =!= 0L)
   }
 }

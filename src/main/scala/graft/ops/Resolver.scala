@@ -12,11 +12,11 @@ import org.apache.spark.sql.functions._
   * — the single biggest anti-pattern at scale (SURVEY.md §4). Natively the
   * resolver is a data dependency: join input outpoints
   * `(source tx hash, output index)` against the engine's own table of prior
-  * outputs. Catalyst picks shuffle/broadcast via AQE. Today the stored
-  * side (VolTransferJob's `utxo` table) is an unbucketed, append-only
-  * directory re-listed and scanned whole every batch; bucketing it on
-  * tx hash so the join is co-located and partition-pruned is ROADMAP
-  * item 2.
+  * outputs. Catalyst picks shuffle/broadcast via AQE. VolTransferJob
+  * hands it the batch's own outputs plus only the stored rows whose tx
+  * an input names (a broadcast semi-join of its `utxo` table to the
+  * batch's source tx hashes), so the stored table is scanned but never
+  * broadcast or shuffled whole.
   *
   * Contract parity (SURVEY.md §7.4 risk 3): a LEFT join — inputs whose
   * source tx predates the stream's start point resolve to null and drop out

@@ -30,4 +30,14 @@ object Bridge {
     * reads what they collected. private[spark] API, hence bridged. */
   def waitListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Ids of the RDDs whose blocks the block manager master still
+    * tracks. An RDD's blocks leave this set only when it is unpersisted
+    * (by a caller, or by the ContextCleaner once the RDD is
+    * garbage-collected), and the master drops them synchronously in
+    * the unpersist call. private[spark] API, hence bridged. */
+  def rddsWithBlocks(spark: org.apache.spark.sql.SparkSession): Set[Int] =
+    spark.sparkContext.env.blockManager.master
+      .getMatchingBlockIds(_.isRDD, askStorageEndpoints = false)
+      .flatMap(_.asRDDId.map(_.rddId)).toSet
 }

@@ -101,6 +101,27 @@ class BlockPipelineSpec extends AnyFunSuite with SparkTestBase {
       ("t3", "D", "lovelace", 777L)))
   }
 
+  test("net flow: one exchange, on the composite key") {
+    val outDf = Seq(("t1", "A", "u1", 5L)).toDF("hash", "address", "unit",
+      "value")
+    val inDf = Seq(("t1", "B", "u1", 5L)).toDF("hash", "address", "unit",
+      "value")
+    val plan = NetFlow.compute(outDf, inDf).queryExecution.executedPlan
+      .toString
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan)
+    assert(!plan.contains("Join"), plan)
+  }
+
+  test("declared sink schemas match what vol and edges produce") {
+    def fields(s: org.apache.spark.sql.types.StructType) =
+      s.fields.map(f => (f.name, f.dataType)).toSeq
+    val txMeta = txs.select("hash", "height", "slot")
+    assert(fields(Volume.vol(net, txMeta, dim).schema) ==
+      fields(graft.model.Schemas.volSink))
+    assert(fields(Transfers.edges(net, dim).schema) ==
+      fields(graft.model.Schemas.edgesSink))
+  }
+
   test("vol: inflows only, price-adjusted (lovelace/1e6, price/10^dec, " +
     "missing→0), summed per (hash, unit)") {
     val txMeta = txs.select("hash", "height", "slot")

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.jobs._
+import graft.ChainLines.block
 import graft.ops.Pricing
 
 /** Every ingest job runs many micro-batches in one long-lived session,
@@ -98,20 +99,10 @@ class IngestLeakSpec extends AnyFunSuite with SparkTestBase {
   }
 
   // three blocks: t1 pays A; t2 spends t1 to B; t3 spends t2 to C
-  private def block(h: Int, tx: String, spends: Option[String],
-                    addr: String, lovelace: Long): String = {
-    val inputs = spends.fold("")(s =>
-      s"""{"index":0,"transaction":{"id":"$s"}}""")
-    s"""{"py/state":{"blocktype":"praos","era":"conway","height":$h,""" +
-      s""""id":"b$h","slot":${h * 10},"transactions":[{"id":"$tx",""" +
-      s""""inputs":[$inputs],"outputs":[{"address":"$addr",""" +
-      s""""datum":null,"value":"{\\"ada\\":{\\"lovelace\\":$lovelace}}"}],""" +
-      """"fee":"1"}]}}"""
-  }
   private val blocks = Seq(
-    block(100, "t1", None, "A", 1000000L),
-    block(101, "t2", Some("t1"), "B", 400000L),
-    block(102, "t3", Some("t2"), "C", 300000L))
+    block(100, "t1", Nil, "A", 1000000L),
+    block(101, "t2", Seq("t1"), "B", 400000L),
+    block(102, "t3", Seq("t2"), "C", 300000L))
 
   test("RawPersistJob: 3 batches leave no persistent RDD behind") {
     val out = leakFree(blocks.map(l => (out: String) => {

@@ -31,12 +31,31 @@ trait SparkTestBase { self: AnyFunSuite =>
     listener.synchronized(n)
   }
 
-  /** Ids of the RDDs `sc.getPersistentRDDs` gained across `body`: the
-    * cuts and caches it left behind. */
+  /** Ids of the RDDs `body` left behind: those `sc.getPersistentRDDs`
+    * gained across it, and those whose blocks the block manager gained.
+    * Both forget an unreleased cut once the garbage collector takes it
+    * (the map holds its RDDs weakly, and the ContextCleaner then drops
+    * the blocks), so every RDD persistent at a job start inside `body`
+    * is held until the check: a leak is counted however soon the
+    * collector runs. */
   def newPersistentRDDs(body: => Any): Set[Int] = {
-    def ids = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val sc = spark.sparkContext
+    def ids = sc.getPersistentRDDs.keySet.toSet ++ Bridge.rddsWithBlocks(spark)
+    val held = new java.util.concurrent.ConcurrentHashMap[Int, AnyRef]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        sc.getPersistentRDDs.foreach { case (id, rdd) => held.put(id, rdd) }
+    }
+    Bridge.waitListenerBus(spark)
     val before = ids
-    body
-    ids -- before
+    sc.addSparkListener(listener)
+    try {
+      body
+      Bridge.waitListenerBus(spark)
+      ids -- before
+    } finally {
+      sc.removeSparkListener(listener)
+      held.clear()
+    }
   }
 }

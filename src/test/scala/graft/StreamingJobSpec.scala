@@ -153,9 +153,10 @@ class StreamingJobSpec extends AnyFunSuite with SparkTestBase {
       // stored read inferred its schema and each write was preceded by a
       // persist + count; 45 with the touched sets observed on cuts; 42
       // with the all-time partitions read once (merged by a full outer
-      // join instead of read for the delta and again for the upsert)
+      // join instead of read for the delta and again for the upsert); 40
+      // with the vol and edges inputs read with their declared schemas
       val jobs = sparkJobs(tick())
-      assert(jobs == 42, s"windowed tick ran $jobs Spark jobs")
+      assert(jobs == 40, s"windowed tick ran $jobs Spark jobs")
       val at = spark.read.parquet(s"$out/vol_all_time")
         .select("unit", "value_adj").as[(String, Double)].collect().toMap
       assert(at.keySet == Set("u", "w"))
@@ -269,16 +270,42 @@ class StreamingJobSpec extends AnyFunSuite with SparkTestBase {
   test("vol/transfer flagship: checkpointed exactly-once across a " +
     "mid-stream kill — uncommitted batch replays without duplicating " +
     "vol rows") {
-    val in = Files.createTempDirectory("graft_volin").toString
-    val out = Files.createTempDirectory("graft_volout").toString
-    val ckpt = Files.createTempDirectory("graft_volckpt").toString
-    def volRows = spark.read.parquet(s"$out/vol")
+    // the replayed batch holds an intra-batch spend: t1b spends t1's
+    // output (and one from before the stream, which drops out) and
+    // pays A more than t1 did, so A nets +0.5; a replay that resolved
+    // against its own earlier batch=<id> files would count t1's output
+    // twice and turn A into a sender. The next batch spends across
+    // batches (t2b spends t1b).
+    val drop1 = Seq(line1,
+      ChainLines.block(101, "t1b", Seq("t1", "t0"), "A", 1500000L))
+    val drop2 = Seq(ChainLines.block(102, "t2b", Seq("t1b"), "C", 400000L))
+    def dir(name: String) = Files.createTempDirectory(name).toString
+    def put(in: String, file: String, lines: Seq[String]): Unit =
+      Files.writeString(java.nio.file.Path.of(in, file),
+        lines.mkString("", "\n", "\n"))
+    def drain(in: String, out: String, ckpt: String): Unit = {
+      val q = VolTransferJob.runFiles(spark, in, dim, out, ckpt)
+      q.awaitTermination(60000); q.stop()
+    }
+    def volRows(out: String) = spark.read.parquet(s"$out/vol")
       .select("hash", "unit", "value_adj")
       .as[(String, String, Double)].collect().toSeq.sorted
-    Files.writeString(java.nio.file.Path.of(in, "b1.jsonl"), line1 + "\n")
-    val q1 = VolTransferJob.runFiles(spark, in, dim, out, ckpt)
-    q1.awaitTermination(60000); q1.stop()
-    assert(volRows == Seq(("t1", "lovelace", 1.0)))
+    def sink(out: String) = Seq("vol", "edges", "utxo").map(t =>
+      spark.read.parquet(s"$out/$t").drop("batch").collect()
+        .map(_.toString).toSeq.sorted)
+
+    // the same two drops, uninterrupted
+    val (refIn, ref) = (dir("graft_volrefin"), dir("graft_volref"))
+    val refCkpt = dir("graft_volrefckpt")
+    put(refIn, "b1.jsonl", drop1); drain(refIn, ref, refCkpt)
+    put(refIn, "b2.jsonl", drop2); drain(refIn, ref, refCkpt)
+
+    val in = dir("graft_volin")
+    val out = dir("graft_volout")
+    val ckpt = dir("graft_volckpt")
+    put(in, "b1.jsonl", drop1); drain(in, out, ckpt)
+    assert(volRows(out) == Seq(("t1", "lovelace", 1.0),
+      ("t1b", "lovelace", 0.5)))
     // simulate a kill in the vulnerable window: batch data written,
     // checkpoint commit NOT — drop the latest commit marker; Spark
     // must re-run that batch with the SAME id on restart
@@ -291,13 +318,13 @@ class StreamingJobSpec extends AnyFunSuite with SparkTestBase {
     val crc = new java.io.File(commitDir, s".${latest.getName}.crc")
     if (crc.exists()) assert(crc.delete())
     // and the world moves on before the restart: a new block arrives
-    Files.writeString(java.nio.file.Path.of(in, "b2.jsonl"), line2 + "\n")
-    val q2 = VolTransferJob.runFiles(spark, in, dim, out, ckpt)
-    q2.awaitTermination(60000); q2.stop()
-    // nothing lost (t2 arrived), nothing duplicated (t1's batch was
-    // replayed onto its own batch directory, not appended twice)
-    assert(volRows == Seq(("t1", "lovelace", 1.0),
-      ("t2", "lovelace", 0.4)))
+    put(in, "b2.jsonl", drop2); drain(in, out, ckpt)
+    // nothing lost (t2b arrived), nothing duplicated (t1's batch was
+    // replayed onto its own batch directory, not appended twice), and
+    // the replay resolved t1b's spend of t1 exactly once
+    assert(volRows(out) == Seq(("t1", "lovelace", 1.0),
+      ("t1b", "lovelace", 0.5), ("t2b", "lovelace", 0.4)))
+    assert(sink(out) == sink(ref))
     // the utxo store also stayed replay-clean
     val utxo = spark.read.parquet(s"$out/utxo")
     assert(utxo.count() ==
