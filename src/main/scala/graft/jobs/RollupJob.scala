@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.io.Fs
-import graft.model.Schemas
-import graft.ops.Volume
+import graft.ops.{Transfers, Volume}
 import graft.graph.{PageRank, Snapshots}
 
 /** Batch rollup chain (SURVEY.md §3.3) — the Airflow DAGs as one job:
@@ -90,7 +89,7 @@ object RollupJob {
     // extract: WHERE value_adj != 0 (F5), windowed to the tick; the cut
     // observes the height buckets the by-block upsert will rewrite
     val vol = sinceHeight.foldLeft(
-      spark.read.schema(Schemas.volSink).parquet(s"$dataDir/vol")
+      spark.read.schema(Volume.volSchema).parquet(s"$dataDir/vol")
         .filter(col("value_adj") =!= 0.0))(
       (df, h) => df.filter(col("height") >= h))
     val byBlockCut = Snapshots.cutObserved(Volume.byBlock(vol)
@@ -146,7 +145,7 @@ object RollupJob {
     // and the scores come back as a local relation (see PageRank).
     val edgesPath = s"$dataDir/edges"
     if (Fs.pathExists(spark, edgesPath)) {
-      val edges = spark.read.schema(Schemas.edgesSink).parquet(edgesPath)
+      val edges = spark.read.schema(Transfers.edgesSchema).parquet(edgesPath)
         .select(col("send_addr").as("src"), col("rx_addr").as("dst"))
       val scores = PageRank.run(edges)
         .withColumn("pbucket", keyBucket(col("address")))

@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.graph.Snapshots
 import graft.ingest.BlockParser
@@ -33,8 +33,13 @@ import graft.streaming.FileDrop
   */
 object VolTransferJob {
 
-  /** Batch core: lines + dimension tables → (vol, edges) appended to
-    * outDir. */
+  /** Batch core: lines + dimension tables → (utxo, vol, edges) appended
+    * to outDir. The three appends run at once, so a failed batch can
+    * leave partial tables: `vol` and `edges` rows may land although the
+    * `utxo` append failed, and later spends of that batch's outputs then
+    * drop out of the resolve. This path has no replay; a source that
+    * retries batches takes `writeBatchIdempotent`, whose rerun rewrites
+    * all three tables. */
   def writeBatch(spark: SparkSession, lines: DataFrame, priceDim: DataFrame,
                  outDir: String): Unit =
     writeCore(spark, lines, priceDim, outDir, None)
@@ -103,9 +108,15 @@ object VolTransferJob {
                            outpointCount: Long): Option[DataFrame] =
     if (!Fs.pathExists(spark, path)) None
     else {
-      val all = spark.read.schema(schema).parquet(path)
-      val before = batchId.fold(all)(id =>
-        all.filter(col("batch") =!= id).drop("batch"))
+      // the idempotent path declares its `batch` partition column, so the
+      // filter resolves (and keeps no row) while no batch=<id> directory
+      // holds a committed file yet, e.g. after a first write was killed
+      val before = batchId match {
+        case None => spark.read.schema(schema).parquet(path)
+        case Some(id) =>
+          spark.read.schema(schema.add("batch", LongType)).parquet(path)
+            .filter(col("batch") =!= id).drop("batch")
+      }
       val srcHashes = outpoints.select(col("src_tx_hash").as("hash"))
       Some(before.join(Snapshots.broadcastIfSmall(srcHashes, outpointCount),
         Seq("hash"), "left_semi"))

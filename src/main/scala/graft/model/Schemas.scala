@@ -53,25 +53,6 @@ object Schemas {
   val tokenValueType: MapType =
     MapType(StringType, MapType(StringType, LongType))
 
-  /** The flagship job's `vol` sink table, as Volume.vol produces it;
-    * declared so its readers run no schema-inference job. */
-  val volSink: StructType = StructType(Seq(
-    StructField("hash", StringType),
-    StructField("height", LongType),
-    StructField("slot", LongType),
-    StructField("unit", StringType),
-    StructField("value_adj", DoubleType)))
-
-  /** The flagship job's `edges` sink table, as Transfers.edges
-    * produces it. */
-  val edgesSink: StructType = StructType(Seq(
-    StructField("hash", StringType),
-    StructField("unit", StringType),
-    StructField("rx_addr", StringType),
-    StructField("send_addr", StringType),
-    StructField("value", LongType),
-    StructField("value_adj", DoubleType)))
-
   /** Resolved-input rows, Blockfrost shape
     * (/root/reference/src/etl_vol_transfers/util/schema.py:30-44). */
   val resolvedInputSchema: StructType = StructType(Seq(

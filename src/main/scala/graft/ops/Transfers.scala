@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Transfer-edge attribution (SURVEY.md §2.9 compute_transfers, §2.6 J3).
   *
@@ -22,6 +23,16 @@ import org.apache.spark.sql.functions._
   * that are not bounded this way.
   */
 object Transfers {
+
+  /** The schema of the `edges` sink table [[edges]] produces; its
+    * readers pass it so they run no schema-inference job. */
+  val edgesSchema: StructType = StructType(Seq(
+    StructField("hash", StringType),
+    StructField("unit", StringType),
+    StructField("rx_addr", StringType),
+    StructField("send_addr", StringType),
+    StructField("value", LongType),
+    StructField("value_adj", DoubleType)))
 
   /** @param netFlow  (hash, address, unit, diff)
     * @param priceDim Pricing.dimension output

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import graft.graph.Snapshots
 import graft.io.Fs
@@ -17,6 +17,15 @@ import graft.io.Fs
   * ON CONFLICT (/root/reference/airflow/archive/dags/etl_vol_dag.py:24-39).
   */
 object Volume {
+
+  /** The schema of the `vol` sink table [[vol]] produces; its readers
+    * pass it so they run no schema-inference job. */
+  val volSchema: StructType = StructType(Seq(
+    StructField("hash", StringType),
+    StructField("height", LongType),
+    StructField("slot", LongType),
+    StructField("unit", StringType),
+    StructField("value_adj", DoubleType)))
 
   /** The `vol` table: inflow rows (diff>0), price-adjusted, summed per
     * (hash, height, slot, unit).

@@ -117,9 +117,9 @@ class BlockPipelineSpec extends AnyFunSuite with SparkTestBase {
       s.fields.map(f => (f.name, f.dataType)).toSeq
     val txMeta = txs.select("hash", "height", "slot")
     assert(fields(Volume.vol(net, txMeta, dim).schema) ==
-      fields(graft.model.Schemas.volSink))
+      fields(Volume.volSchema))
     assert(fields(Transfers.edges(net, dim).schema) ==
-      fields(graft.model.Schemas.edgesSink))
+      fields(Transfers.edgesSchema))
   }
 
   test("vol: inflows only, price-adjusted (lovelace/1e6, price/10^dec, " +
