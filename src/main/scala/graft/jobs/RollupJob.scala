@@ -42,6 +42,28 @@ import graft.graph.{PageRank, Snapshots}
   * floating-point adds (same class of reordering as Spark's own partial
   * aggregation); exact-recompute equivalence is pinned to 1e-9 relative
   * tolerance in StreamingJobSpec.
+  *
+  * A tick is the two DAGs run at once as two legs ([[Concurrently]]),
+  * both joined before `run` returns:
+  *  - the vol leg: the `byBlock` cut, the `delta` cut, the by-block
+  *    upsert, then the all-time upsert;
+  *  - the PageRank leg: the `edges` read, [[PageRank.run]], then the
+  *    address_pagerank upsert.
+  * They are independent: their inputs and outputs are disjoint (`vol`,
+  * vol_by_block, vol_all_time against `edges`, address_pagerank), and
+  * PageRank is a global recompute, so it needs neither the window nor
+  * anything the vol leg writes. Both legs are mostly per-job scheduling
+  * and commit time, which each fills with the other's tasks. A failed leg
+  * fails the tick only once the other has ended, so the other leg's
+  * tables are committed; a rerun rewrites them unchanged.
+  *
+  * Failure window: inside the vol leg the two upserts stay in sequence.
+  * If the all-time upsert fails after the by-block upsert committed, a
+  * rerun computes Δ against the rewritten by-block rows, so Δ = 0 and
+  * vol_all_time silently misses that window's volume. Run at once, the
+  * all-time upsert could also commit while the by-block one fails, and a
+  * rerun would then add Δ twice; in sequence only the first window is
+  * open.
   */
 object RollupJob {
 
@@ -80,7 +102,15 @@ object RollupJob {
     *   re-rolls the full table, which stays correct (idempotent) but is
     *   O(history); production ticks should always pass a window. */
   def run(spark: SparkSession, dataDir: String,
-          sinceHeight: Option[Long] = None): Unit = {
+          sinceHeight: Option[Long] = None): Unit =
+    Concurrently(
+      "tick-vol" -> (() => volLeg(spark, dataDir, sinceHeight)),
+      "tick-pagerank" -> (() => pageRankLeg(spark, dataDir)))
+
+  /** vol → vol_by_block / vol_all_time over the tick's window
+    * (etl_vol_dag). */
+  private def volLeg(spark: SparkSession, dataDir: String,
+                     sinceHeight: Option[Long]): Unit = {
     val hb = heightBucketSize(spark)
     val byBlockPath = s"$dataDir/vol_by_block"
     val allTimePath = s"$dataDir/vol_all_time"
@@ -136,13 +166,15 @@ object RollupJob {
       Seq("unit"), deltaTouched, addDelta)
     Snapshots.release(byBlock)
     Snapshots.release(delta)
+  }
 
-    // pagerank leg (etl_pagerank_dag): edges → (address, score).
-    // PageRank is a global recompute, so every address — and thus every
-    // key bucket — is touched each tick; the partitioned upsert still
-    // keeps the write path uniform and FS-safe. Up to 1M addresses the
-    // 20 rounds run on a driver-held rank vector, one Spark job each,
-    // and the scores come back as a local relation (see PageRank).
+  /** edges → (address, score) → address_pagerank (etl_pagerank_dag).
+    * PageRank is a global recompute, so every address — and thus every
+    * key bucket — is touched each tick; the partitioned upsert still
+    * keeps the write path uniform and FS-safe. Up to 1M addresses the
+    * 20 rounds run on a driver-held rank vector, one Spark job each,
+    * and the scores come back as a local relation (see PageRank). */
+  private def pageRankLeg(spark: SparkSession, dataDir: String): Unit = {
     val edgesPath = s"$dataDir/edges"
     if (Fs.pathExists(spark, edgesPath)) {
       val edges = spark.read.schema(Transfers.edgesSchema).parquet(edgesPath)

@@ -1,6 +1,5 @@
 package graft.jobs
 
-import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -27,9 +26,9 @@ import graft.streaming.FileDrop
   *
   * A batch is three Spark phases: one eager cut of the parsed txs, one
   * eager cut of the net flow (which pins the pre-write store listing),
-  * then the `utxo`, `vol` and `edges` writes at once — most of a small
-  * batch is per-job scheduling and commit time, which the writes then
-  * overlap instead of queueing.
+  * then the `utxo`, `vol` and `edges` writes at once ([[Concurrently]])
+  * — most of a small batch is per-job scheduling and commit time, which
+  * the writes then overlap instead of queueing.
   */
 object VolTransferJob {
 
@@ -86,11 +85,12 @@ object VolTransferJob {
       // re-planned against the files the concurrent utxo write adds
       val net = NetFlow.compute(outFlows, Resolver.resolve(outpoints, utxo))
         .localCheckpoint(true, MEMORY_AND_DISK)
-      try concurrently(
-        "utxo" -> (() => write(outFlows.hint("rebalance"), "utxo")),
-        "vol" -> (() => write(Volume.vol(net,
+      try Concurrently(
+        "write-utxo" -> (() => write(outFlows.hint("rebalance"), "utxo")),
+        "write-vol" -> (() => write(Volume.vol(net,
           txs.select("hash", "height", "slot"), priceDim), "vol")),
-        "edges" -> (() => write(Transfers.edges(net, priceDim), "edges")))
+        "write-edges" -> (() => write(Transfers.edges(net, priceDim),
+          "edges")))
       finally Snapshots.release(net)
     } finally Snapshots.release(txs)
   }
@@ -121,39 +121,6 @@ object VolTransferJob {
       Some(before.join(Snapshots.broadcastIfSmall(srcHashes, outpointCount),
         Seq("hash"), "left_semi"))
     }
-
-  /** Runs each named task on a fresh thread and returns once all have
-    * ended — also when the calling thread is interrupted (a query
-    * stop), which is then passed on to the tasks and rethrown after
-    * them. A fresh thread inherits the caller's Spark local properties
-    * (job group, streaming batch id, SQL execution id), which a pooled
-    * one would not, so every job stays attributed to its batch. The
-    * first failure is rethrown, the others added as suppressed. */
-  private[graft] def concurrently(tasks: (String, () => Unit)*): Unit = {
-    val failures = new ConcurrentLinkedQueue[Throwable]()
-    val threads = tasks.map { case (name, task) =>
-      new Thread(() => try task() catch {
-        case t: Throwable => failures.add(t)
-      }, s"graft-write-$name")
-    }
-    threads.foreach(_.start())
-    var interrupted = false
-    threads.foreach { t =>
-      while (t.isAlive) try t.join() catch {
-        case _: InterruptedException =>
-          interrupted = true
-          threads.foreach(_.interrupt())
-      }
-    }
-    if (interrupted)
-      throw new InterruptedException("batch interrupted during its writes")
-    val it = failures.iterator()
-    if (it.hasNext) {
-      val first = it.next()
-      it.forEachRemaining(t => first.addSuppressed(t))
-      throw first
-    }
-  }
 
   /** Streaming entry (K5 foreachBatch, parity with
     * /root/reference/src/etl_vol_transfers/main.py:211-227). */

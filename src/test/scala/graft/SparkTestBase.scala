@@ -31,6 +31,29 @@ trait SparkTestBase { self: AnyFunSuite =>
     listener.synchronized(n)
   }
 
+  /** Local property `key` as every Spark job `body` starts sees it,
+    * with `key` set to `value` on the calling thread around `body`. */
+  def jobLocalProperty(key: String, value: String)(
+      body: => Any): Seq[String] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(j.properties.getProperty(key)))
+    }
+    Bridge.waitListenerBus(spark)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, value)
+    try {
+      body
+      Bridge.waitListenerBus(spark)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
   /** Ids of the RDDs `body` left behind: those `sc.getPersistentRDDs`
     * gained across it, and those whose blocks the block manager gained.
     * Both forget an unreleased cut once the garbage collector takes it

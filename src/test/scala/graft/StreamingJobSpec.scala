@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.jobs.{RawPersistJob, VolTransferJob, RollupJob}
@@ -170,6 +171,49 @@ class StreamingJobSpec extends AnyFunSuite with SparkTestBase {
       val (_, tick) = rolledStore()
       val leaked = newPersistentRDDs { tick(); tick() }
       assert(leaked.isEmpty, s"${leaked.size} RDDs left after 2 ticks")
+    }
+  }
+
+  private def allTime(out: String): Map[String, Double] =
+    spark.read.parquet(s"$out/vol_all_time")
+      .select("unit", "value_adj").as[(String, Double)].collect().toMap
+
+  test("every job of a windowed tick carries the caller's local properties") {
+    withHeightBuckets {
+      val (_, tick) = rolledStore()
+      // the legs run on their own threads: a job that lost the caller's
+      // properties would drop out of a traced tick span or a batch
+      val seen = jobLocalProperty("graft.spec.tag", "tick")(tick())
+      assert(seen.nonEmpty && seen.forall(_ == "tick"), seen)
+    }
+  }
+
+  test("a failed PageRank leg fails the tick after the vol leg committed") {
+    withHeightBuckets {
+      val (ref, refTick) = rolledStore()
+      refTick()
+      val (out, tick) = rolledStore()
+      // a regular file where the address_pagerank table should be
+      val pagerank = java.nio.file.Path.of(out, "address_pagerank")
+      graft.io.Fs.deletePath(spark, pagerank.toString)
+      Files.writeString(pagerank, "not a table")
+      intercept[Exception](tick())
+      val legs = Thread.getAllStackTraces.keySet.asScala
+        .filter(t => t.getName.startsWith("graft-") && t.isAlive)
+      assert(legs.isEmpty, legs.map(_.getName))
+      def byBlock(dir: String) = spark.read.parquet(s"$dir/vol_by_block")
+        .select("unit", "height", "value_adj")
+        .as[(String, Long, Double)].collect().toSet
+      assert(byBlock(out) == byBlock(ref))
+      assert(allTime(out) == allTime(ref))
+      // the rerun's Δ against the committed by-block rows is 0
+      Files.delete(pagerank)
+      tick()
+      assert(allTime(out) == allTime(ref))
+      val scores = spark.read.parquet(s"$out/address_pagerank")
+        .select("address", "score").as[(String, Double)].collect()
+      assert(scores.map(_._1).sorted.toSeq == Seq("A", "B", "C"))
+      assert(scores.forall(s => java.lang.Double.isFinite(s._2)), scores.toSeq)
     }
   }
 

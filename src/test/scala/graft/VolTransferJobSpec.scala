@@ -1,13 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graftbridge.Bridge
 import graft.ChainLines.block
 import graft.jobs.VolTransferJob
 import graft.ops.Pricing
@@ -61,23 +57,8 @@ class VolTransferJobSpec extends AnyFunSuite with SparkTestBase {
   test("every job of writeBatch carries the caller's local properties") {
     val out = tmp()
     VolTransferJob.writeBatch(spark, batch1, dim, out)
-    val sc = spark.sparkContext
-    val tags = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        tags.add(String.valueOf(j.properties.getProperty("graft.spec.tag")))
-    }
-    Bridge.waitListenerBus(spark)
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.spec.tag", "batch-2")
-    try {
-      VolTransferJob.writeBatch(spark, batch2, dim, out)
-      Bridge.waitListenerBus(spark)
-    } finally {
-      sc.setLocalProperty("graft.spec.tag", null)
-      sc.removeSparkListener(listener)
-    }
-    val seen = tags.asScala.toSeq
+    val seen = jobLocalProperty("graft.spec.tag", "batch-2")(
+      VolTransferJob.writeBatch(spark, batch2, dim, out))
     assert(seen.nonEmpty && seen.forall(_ == "batch-2"), seen)
   }
 
@@ -94,34 +75,5 @@ class VolTransferJobSpec extends AnyFunSuite with SparkTestBase {
     assert(writers.isEmpty, writers.map(_.getName))
     // the vol write ran to its end beside the failed one
     assert(spark.read.parquet(s"$out/vol").count() > before)
-  }
-
-  test("concurrently: an interrupted caller waits for every task, then " +
-    "rethrows the interrupt") {
-    val started = new CountDownLatch(2)
-    val release = new CountDownLatch(1)
-    val ended = new AtomicInteger()
-    // a task that ignores interrupts until it is released
-    def stubborn(): Unit = {
-      started.countDown()
-      var done = false
-      while (!done) try { release.await(); done = true }
-      catch { case _: InterruptedException => () }
-      ended.incrementAndGet()
-    }
-    @volatile var thrown: Throwable = null
-    val caller = new Thread(() =>
-      try VolTransferJob.concurrently("a" -> (() => stubborn()),
-        "b" -> (() => stubborn()))
-      catch { case t: Throwable => thrown = t })
-    caller.start()
-    assert(started.await(10, TimeUnit.SECONDS))
-    caller.interrupt()
-    caller.join(300)
-    assert(caller.isAlive, "returned before its tasks ended")
-    release.countDown()
-    caller.join(10000)
-    assert(!caller.isAlive && ended.get == 2)
-    assert(thrown.isInstanceOf[InterruptedException], thrown)
   }
 }
