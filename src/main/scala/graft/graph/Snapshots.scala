@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, Dataset, Observation}
+import org.apache.spark.sql.{Column, Dataset, Observation, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
@@ -144,6 +144,15 @@ object Snapshots {
     val c = cutObserved(ds, level, count(lit(1)).as("n"))
     (c.ds, c.long("n"))
   }
+
+  /** Materializes a lazy cut (`localCheckpoint(false, level)`) in one
+    * job, as the eager form does. The eager form persists the cut's RDD
+    * before that job runs and leaves it persisted when the job throws,
+    * so a caller that must free a failed cut's blocks takes the cut
+    * lazily and calls this inside the `try` whose `finally`
+    * [[release]]s it. */
+  def materialize(cut: Dataset[_]): Unit =
+    cut.toDF().foreachPartition((_: Iterator[Row]) => ())
 
   /** Retires the checkpoint blocks under a cut frame (one returned by
     * [[cut]], [[cutSized]], [[cutObserved]] or `localCheckpoint`; a

@@ -107,48 +107,6 @@ object Layout {
       .groupBy(identity).map { case (b, fs) => (b, fs.size) }
   }
 
-  /** Per-file min/max statistics manifest for `cols` — the data-skipping
-    * index that makes a Z-ordered layout (functions/ZOrderExpression)
-    * actually pay off: cluster by the Morton key at write time, collect
-    * per-file ranges once, then range predicates touch only the files
-    * whose envelope overlaps.
-    *
-    * One column-pruned scan (only `cols` are read); at 100 TB this runs
-    * once per ingest/compaction tick, and the manifest itself is
-    * metadata-sized (one row per file). Table formats keep exactly these
-    * stats in their commit logs — this is the explicit, format-free
-    * form. */
-  def fileStats(spark: SparkSession, dir: String,
-                cols: Seq[String]): DataFrame = {
-    require(cols.nonEmpty, "fileStats needs at least one column")
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    val aggs = cols.flatMap(c =>
-      Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max")))
-    spark.read.parquet(dir)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Range-pruned read: only files whose [min,max] envelope for
-    * `column` overlaps [lo, hi] are opened; the exact predicate is
-    * re-applied on top (stats prune files, they don't filter rows).
-    * The manifest collect is file-list-sized — driver metadata, same
-    * class as any scan's file listing. */
-  def prunedRead(spark: SparkSession, dir: String, manifest: DataFrame,
-                 column: String, lo: Long, hi: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val files = manifest
-      .filter(col(s"${column}_max") >= lo && col(s"${column}_min") <= hi)
-      .select("file").collect().map(_.getString(0))
-    if (files.isEmpty)
-      // schema from the directory, zero files read (constant-folds to
-      // an empty relation)
-      spark.read.parquet(dir).filter(lit(false))
-    else
-      spark.read.parquet(files.toIndexedSeq: _*)
-        .filter(col(column) >= lo && col(column) <= hi)
-  }
-
   /** Execute a compaction plan: each group's files are read together and
     * rewritten as ONE file into `outDir` (coalesce(1) per group — the
     * point of the exercise). Each group is a one-task job, so the

@@ -52,12 +52,13 @@ object Volume {
       .groupBy(col("unit"), col("height"))
       .agg((sum(col("value_adj")) / 1e6).as("value_adj"))
 
-  /** vol_all_time rollup: Σ per unit, descending
+  /** vol_all_time rollup: Σ per unit
     * (/root/reference/airflow/archive/dags/etl_vol_dag.py:81-85). */
   def allTime(volByBlock: DataFrame): DataFrame =
+    // the reference's descending sort is display order only; left out,
+    // since a sort costs a range-partitioning job and no caller reads order
     volByBlock.groupBy(col("unit"))
       .agg(sum(col("value_adj")).as("value_adj"))
-      .orderBy(col("value_adj").desc)
 
   /** Keyed upsert (INSERT … ON CONFLICT DO UPDATE,
     * /root/reference/airflow/archive/dags/etl_vol_dag.py:24-39) as
@@ -84,40 +85,36 @@ object Volume {
   /** Partition-granular keyed upsert: merge `updates` (which must carry
     * a long-valued `pbucket` column) into the `pbucket`-partitioned
     * table at `path`, reading and rewriting ONLY the `touched`
-    * partitions via dynamic partition overwrite — O(delta·bucket) per
-    * tick, never O(table). The at-scale form of [[upsert]]; shared by
-    * the batch RollupJob tick and the streaming incremental rollup.
+    * partitions via dynamic partition overwrite — O(touched buckets),
+    * never the rest of the table. The at-scale form of [[upsert]];
+    * shared by the batch RollupJob tick and the streaming incremental
+    * rollup.
     *
     * `touched` must cover every `pbucket` in `updates`; a superset is
     * fine (its extra partitions are rewritten unchanged). Callers
     * observe it on a cut that already runs
     * ([[graft.graph.Snapshots.cutObserved]] with `collect_set(pbucket)`)
     * or know it outright, so no job runs to find it. The merged
-    * partitions materialize once, as one eager cut, before the write
-    * overwrites the files they were read from.
-    *
-    * `merge(existing, updates, keys)` gives the rows of the touched
-    * partitions after the tick: by default [[upsert]] (updates replace
-    * the stored rows they collide with); an accumulating table passes
-    * a merge that folds updates into the stored rows, so the stored
-    * partitions are read once. A table's first write is `updates`
-    * as given. */
+    * partitions materialize once, as one cut, before the write
+    * overwrites the files they were read from, and are released even
+    * when that cut or the write fails. A table's first write is
+    * `updates` as given. */
   def upsertPartitioned(spark: SparkSession, path: String,
                         updates: DataFrame, keys: Seq[String],
-                        touched: Seq[Long],
-                        merge: (DataFrame, DataFrame, Seq[String]) =>
-                          DataFrame = upsert): Unit = {
+                        touched: Seq[Long]): Unit = {
     if (!Fs.pathExists(spark, path)) {
       updates.write.partitionBy("pbucket").mode("overwrite").parquet(path)
       return
     }
     if (touched.isEmpty) return
     val existing = readTouched(spark, path, updates.schema, touched)
-    val merged = merge(existing, updates, keys)
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
-    try merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pbucket").parquet(path)
-    finally Snapshots.release(merged)
+    val merged = upsert(existing, updates, keys)
+      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK)
+    try {
+      Snapshots.materialize(merged)
+      merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("pbucket").parquet(path)
+    } finally Snapshots.release(merged)
   }
 }

@@ -123,25 +123,4 @@ class IoSpec extends AnyFunSuite with SparkTestBase {
       assert(n == 1, s"group ${g.group} wrote $n files")
     }
   }
-
-  test("file-stats manifest prunes range reads to overlapping files only") {
-    val dir = Files.createTempDirectory("graft_skip").toString
-    // key-clustered layout: 8 range-partitioned files over key 0..799
-    (0L until 800L).map(i => (i, i % 7)).toDF("key", "v")
-      .repartitionByRange(8, col("key"))
-      .write.mode("overwrite").parquet(dir)
-    val manifest = Layout.fileStats(spark, dir, Seq("key")).persist()
-    assert(manifest.count() == 8)
-    val pruned = Layout.prunedRead(spark, dir, manifest, "key", 100L, 199L)
-    val full = spark.read.parquet(dir)
-      .filter(col("key") >= 100L && col("key") <= 199L)
-    // identical answer, strictly fewer files opened
-    assert(pruned.select("key").as[Long].collect().sorted.toSeq ==
-      full.select("key").as[Long].collect().sorted.toSeq)
-    assert(pruned.inputFiles.length < full.inputFiles.length)
-    assert(pruned.inputFiles.length <= 2) // 100-row range spans ≤2 files
-    // empty overlap → empty frame with the right schema, no files
-    val none = Layout.prunedRead(spark, dir, manifest, "key", 5000L, 6000L)
-    assert(none.count() == 0 && none.columns.toSeq == Seq("key", "v"))
-  }
 }
