@@ -8,7 +8,7 @@ import graft.ops.{Transfers, Volume}
 import graft.graph.{PageRank, Snapshots}
 
 /** Batch rollup chain (SURVEY.md §3.3) — the Airflow DAGs as one job:
-  * vol → vol_by_block / vol_all_time (upserted on their keys), plus
+  * vol → vol_by_block (upserted on its key) → vol_all_time, plus
   * PageRank over the transfer edges → address_pagerank.
   *
   * The Airflow layer was scheduling, not semantics
@@ -24,14 +24,18 @@ import graft.graph.{PageRank, Snapshots}
   * partition overwrite. That write is O(delta·bucket), not O(table) —
   * at 100 TB of history a cadence tick rewrites a handful of height
   * buckets, never the table. vol_all_time and address_pagerank are
-  * global recomputes (one row per unit / address) and rewrite every key
-  * bucket. Existence probes go through the Hadoop FileSystem API, so
-  * the job runs unchanged on HDFS/S3 (`java.io.File` does not).
+  * global recomputes (one row per unit / address), written straight
+  * over their key buckets with [[Volume.overwritePartitions]]: no
+  * read-back and no merge. That write replaces every stored key bucket
+  * because neither key set ever shrinks: vol_by_block rows are never
+  * deleted, and `edges` is append-only. A failed write leaves the old
+  * rows readable. Existence probes go through the Hadoop FileSystem
+  * API, so the job runs unchanged on HDFS/S3 (`java.io.File` does not).
   *
   * vol_all_time is recomputed each tick from the committed vol_by_block,
   * as the reference does ("by_block feeds both loads",
   * etl_vol_dag.py:78-92). So a rerun repairs any failed load: after a
-  * failed all-time upsert it re-sums the by-block rows the failed tick
+  * failed all-time write it re-sums the by-block rows the failed tick
   * committed, and after a failed by-block upsert it commits them first.
   * No failure loses or doubles a window's volume, and no ledger is kept.
   * The price is a read of the whole vol_by_block each tick, not only
@@ -39,20 +43,19 @@ import graft.graph.{PageRank, Snapshots}
   * past the tick's own `vol` scan, which reads every `vol` file: the
   * by-block table holds at most one row per `vol` row.
   *
-  * The touched sets cost no job of their own: `byBlock` is one eager
+  * The touched set costs no job of its own: `byBlock` is one eager
   * observed cut ([[Snapshots.cutObserved]]) that also collects its
-  * `pbucket` set, and the two recomputes touch every key bucket. Stored
-  * tables are read with known schemas and the `vol` and `edges` inputs
-  * with their declared sink schemas (no schema-inference job anywhere
-  * in the tick), and each upsert materializes its merged partitions
-  * once.
+  * `pbucket` set. Stored tables are read with known schemas and the
+  * `vol` and `edges` inputs with their declared sink schemas (no
+  * schema-inference job anywhere in the tick), and the by-block upsert
+  * materializes its merged partitions once.
   *
   * A tick is the two DAGs run at once as two legs ([[Concurrently]]),
   * both joined before `run` returns:
   *  - the vol leg: the `byBlock` cut, the by-block upsert, then the
-  *    all-time recompute and its upsert;
+  *    all-time recompute and its write;
   *  - the PageRank leg: the `edges` read, [[PageRank.run]], then the
-  *    address_pagerank upsert.
+  *    address_pagerank write.
   * They are independent: their inputs and outputs are disjoint (`vol`,
   * vol_by_block, vol_all_time against `edges`, address_pagerank), and
   * PageRank is a global recompute, so it needs neither the window nor
@@ -63,15 +66,16 @@ import graft.graph.{PageRank, Snapshots}
   */
 object RollupJob {
 
-  /** Heights per vol_by_block partition. Default 100k blocks ≈ one
-    * partition per ~3 weeks of chain; a tick appends to the newest
-    * bucket and occasionally revises a recent one. */
-  private def heightBucketSize(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.rollup.heightBucketSize", "100000").toLong
+  /** Heights per vol_by_block partition: 100k blocks ≈ one partition
+    * per ~3 weeks of chain; a tick appends to the newest bucket and
+    * occasionally revises a recent one. A constant: the size is not
+    * stored with the table, so a store must keep the one it began with. */
+  private val HeightBucketSize = 100000L
 
   /** Hash-bucket count for key-partitioned rollups (vol_all_time,
-    * address_pagerank). Small tables → few buckets; the point is
-    * partition-granular rewrites, not parallelism. */
+    * address_pagerank). Small tables → few buckets. Both are rewritten
+    * whole each tick; the layout is what lets that write be a dynamic
+    * partition overwrite, which leaves the table readable if it fails. */
   private val KeyBuckets = 16
 
   private def keyBucket(key: Column): Column =
@@ -92,7 +96,6 @@ object RollupJob {
     * recomputed from the committed vol_by_block (etl_vol_dag). */
   private def volLeg(spark: SparkSession, dataDir: String,
                      sinceHeight: Option[Long]): Unit = {
-    val hb = heightBucketSize(spark)
     val byBlockPath = s"$dataDir/vol_by_block"
 
     // extract: WHERE value_adj != 0 (F5), windowed to the tick; the cut
@@ -102,7 +105,7 @@ object RollupJob {
         .filter(col("value_adj") =!= 0.0))(
       (df, h) => df.filter(col("height") >= h))
     val byBlockCut = Snapshots.cutObserved(Volume.byBlock(vol)
-      .withColumn("pbucket", expr(s"height div $hb")),
+      .withColumn("pbucket", expr(s"height div $HeightBucketSize")),
       MEMORY_AND_DISK, collect_set(col("pbucket")).as("touched"))
     val byBlock = byBlockCut.ds
     try Volume.upsertPartitioned(spark, byBlockPath, byBlock,
@@ -112,15 +115,13 @@ object RollupJob {
     val allTime = Volume.allTime(
         spark.read.schema(byBlock.schema).parquet(byBlockPath))
       .withColumn("pbucket", keyBucket(col("unit")))
-    Volume.upsertPartitioned(spark, s"$dataDir/vol_all_time", allTime,
-      Seq("unit"), 0L until KeyBuckets)
+    Volume.overwritePartitions(allTime, s"$dataDir/vol_all_time")
   }
 
   /** edges → (address, score) → address_pagerank (etl_pagerank_dag).
-    * PageRank is a global recompute, so every address — and thus every
-    * key bucket — is touched each tick; the partitioned upsert still
-    * keeps the write path uniform and FS-safe. Up to 1M addresses the
-    * 20 rounds run on a driver-held rank vector, one Spark job each,
+    * PageRank is a global recompute, so the scores are written straight
+    * over the key buckets, as the all-time sums are. Up to 1M addresses
+    * the 20 rounds run on a driver-held rank vector, one Spark job each,
     * and the scores come back as a local relation (see PageRank). */
   private def pageRankLeg(spark: SparkSession, dataDir: String): Unit = {
     val edgesPath = s"$dataDir/edges"
@@ -129,8 +130,7 @@ object RollupJob {
         .select(col("send_addr").as("src"), col("rx_addr").as("dst"))
       val scores = PageRank.run(edges)
         .withColumn("pbucket", keyBucket(col("address")))
-      Volume.upsertPartitioned(spark, s"$dataDir/address_pagerank", scores,
-        Seq("address"), 0L until KeyBuckets)
+      Volume.overwritePartitions(scores, s"$dataDir/address_pagerank")
     }
   }
 }

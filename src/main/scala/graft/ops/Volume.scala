@@ -63,8 +63,9 @@ object Volume {
   /** Keyed upsert (INSERT … ON CONFLICT DO UPDATE,
     * /root/reference/airflow/archive/dags/etl_vol_dag.py:24-39) as
     * anti-join + union: rows in `existing` whose key collides with an
-    * update are replaced. Both sides shuffle on the key once; at scale this
-    * becomes an overwrite of only the affected partitions. */
+    * update are replaced. Both sides shuffle on the key once. The
+    * merge of [[upsertPartitioned]] (RollupJob's by-block leg,
+    * EventTimeRollup's serving table) and of GraphMerge's edge store. */
   def upsert(existing: DataFrame, updates: DataFrame,
              keys: Seq[String]): DataFrame =
     existing.join(updates.select(keys.map(col): _*), keys, "left_anti")
@@ -75,35 +76,47 @@ object Volume {
     * caller passes the table's known schema, so no schema-inference job
     * runs per read (an untyped `spark.read.parquet` reads footers in a
     * Spark job of its own). */
-  def readTouched(spark: SparkSession, path: String, schema: StructType,
-                  touched: Seq[Long]): DataFrame = {
+  private def readTouched(spark: SparkSession, path: String,
+                          schema: StructType,
+                          touched: Seq[Long]): DataFrame = {
     val df = spark.read.schema(schema).parquet(path)
     if (touched.isEmpty) df.limit(0)
     else df.filter(col("pbucket").isin(touched: _*))
   }
 
+  /** One dynamic-partition-overwrite write of the `pbucket`-partitioned
+    * frame `df` to `path`: it replaces exactly the partitions `df` holds
+    * and leaves every other partition of the table as it is. The new
+    * files are staged and swapped in at commit, so a write whose job
+    * fails leaves the previous rows readable. A static
+    * `mode("overwrite")` would not: it deletes the table (or a regular
+    * file at its path) before its job runs. */
+  def overwritePartitions(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("pbucket").parquet(path)
+
   /** Partition-granular keyed upsert: merge `updates` (which must carry
     * a long-valued `pbucket` column) into the `pbucket`-partitioned
     * table at `path`, reading and rewriting ONLY the `touched`
-    * partitions via dynamic partition overwrite — O(touched buckets),
-    * never the rest of the table. The at-scale form of [[upsert]];
-    * shared by the batch RollupJob tick and the streaming incremental
-    * rollup.
+    * partitions ([[overwritePartitions]]) — O(touched buckets), never
+    * the rest of the table. The at-scale form of [[upsert]], for
+    * incremental writes: RollupJob's by-block leg (the tick's height
+    * buckets) and EventTimeRollup's serving table (a micro-batch's day
+    * buckets).
     *
     * `touched` must cover every `pbucket` in `updates`; a superset is
     * fine (its extra partitions are rewritten unchanged). Callers
     * observe it on a cut that already runs
-    * ([[graft.graph.Snapshots.cutObserved]] with `collect_set(pbucket)`)
-    * or know it outright, so no job runs to find it. The merged
-    * partitions materialize once, as one cut, before the write
-    * overwrites the files they were read from, and are released even
-    * when that cut or the write fails. A table's first write is
-    * `updates` as given. */
+    * ([[graft.graph.Snapshots.cutObserved]] with `collect_set(pbucket)`),
+    * so no job runs to find it. The merged partitions materialize once,
+    * as one cut, before the write overwrites the files they were read
+    * from, and are released even when that cut or the write fails. A
+    * table's first write is `updates` as given. */
   def upsertPartitioned(spark: SparkSession, path: String,
                         updates: DataFrame, keys: Seq[String],
                         touched: Seq[Long]): Unit = {
     if (!Fs.pathExists(spark, path)) {
-      updates.write.partitionBy("pbucket").mode("overwrite").parquet(path)
+      overwritePartitions(updates, path)
       return
     }
     if (touched.isEmpty) return
@@ -112,9 +125,7 @@ object Volume {
       .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK)
     try {
       Snapshots.materialize(merged)
-      merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pbucket").parquet(path)
+      overwritePartitions(merged, path)
     } finally Snapshots.release(merged)
   }
 }

@@ -12,7 +12,7 @@ class ConfKeyGuardSpec extends AnyFunSuite {
   private val key = """"(spark\.graft\.[A-Za-z0-9_.]+)"""".r
 
   test("the spark.graft.* keys read under src/main/scala are exactly " +
-    "the seven engine knobs") {
+    "the six engine knobs") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"${root.toAbsolutePath} not found")
     val walk = Files.walk(root)
@@ -28,7 +28,6 @@ class ConfKeyGuardSpec extends AnyFunSuite {
       "spark.graft.knn.maxExactBlock",
       "spark.graft.neardup.minMatchFrac",
       "spark.graft.rangeJoin.binWidth",
-      "spark.graft.rollup.heightBucketSize",
       "spark.graft.semantic.cellBudget"), found.toSeq.sorted.mkString("\n"))
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import graft.jobs.{RawPersistJob, VolTransferJob, RollupJob}
 import graft.ops.{Pricing, Volume}
 import graft.streaming.{EventTimeRollup, ReplayServer}
@@ -90,62 +91,55 @@ class StreamingJobSpec extends AnyFunSuite with SparkTestBase {
       Option(dir.listFiles()).fold(Set.empty[String])(
         _.map(_.getName).filter(_.endsWith(".parquet")).toSet)
     }
-    spark.conf.set("spark.graft.rollup.heightBucketSize", "10")
-    try {
-      // tick 1: heights 5 and 15 → buckets 0 and 1
-      Seq(("t1", 5L, 50L, "u", 3e6), ("t2", 15L, 150L, "u", 4e6))
-        .toDF("hash", "height", "slot", "unit", "value_adj")
-        .write.parquet(s"$out/vol")
-      RollupJob.run(spark, out)
-      val (b0, b1) = (files(0), files(1))
-      assert(b0.nonEmpty && b1.nonEmpty)
-      assert(spark.read.parquet(s"$out/vol_all_time")
-        .select("unit", "value_adj").as[(String, Double)]
-        .collect().toSet == Set(("u", 7.0)))
+    // tick 1: heights 5 and 100_015 → height buckets 0 and 1
+    Seq(("t1", 5L, 50L, "u", 3e6), ("t2", 100015L, 150L, "u", 4e6))
+      .toDF("hash", "height", "slot", "unit", "value_adj")
+      .write.parquet(s"$out/vol")
+    RollupJob.run(spark, out)
+    val (b0, b1) = (files(0), files(1))
+    assert(b0.nonEmpty && b1.nonEmpty)
+    assert(spark.read.parquet(s"$out/vol_all_time")
+      .select("unit", "value_adj").as[(String, Double)]
+      .collect().toSet == Set(("u", 7.0)))
 
-      // tick 2: only height 15 revised (4e6 → 5e6) + new height 17 —
-      // bucket 1 only; bucket 0's files must be byte-identical
-      Seq(("t2", 15L, 150L, "u", 5e6), ("t3", 17L, 170L, "u", 1e6))
-        .toDF("hash", "height", "slot", "unit", "value_adj")
-        .write.mode("overwrite").parquet(s"$out/vol")
-      RollupJob.run(spark, out, sinceHeight = Some(10L))
-      assert(files(0) == b0, "untouched bucket was rewritten")
-      assert(files(1) != b1, "touched bucket was not rewritten")
-      val got = spark.read.parquet(s"$out/vol_by_block")
-        .select("unit", "height", "value_adj").as[(String, Long, Double)]
-        .collect().toSet
-      assert(got == Set(("u", 5L, 3.0), ("u", 15L, 5.0), ("u", 17L, 1.0)))
-      // all-time, recomputed from the by-block rows, follows the
-      // revision: 3 + 5 + 1
-      val at = spark.read.parquet(s"$out/vol_all_time")
-        .select("unit", "value_adj").as[(String, Double)].collect()
-      assert(at.length == 1 && math.abs(at.head._2 - 9.0) < 1e-9, at.toSeq)
-    } finally spark.conf.unset("spark.graft.rollup.heightBucketSize")
+    // tick 2: only height 100_015 revised (4e6 → 5e6) + new height
+    // 100_017 — bucket 1 only; bucket 0's files must be byte-identical
+    Seq(("t2", 100015L, 150L, "u", 5e6), ("t3", 100017L, 170L, "u", 1e6))
+      .toDF("hash", "height", "slot", "unit", "value_adj")
+      .write.mode("overwrite").parquet(s"$out/vol")
+    RollupJob.run(spark, out, sinceHeight = Some(100010L))
+    assert(files(0) == b0, "untouched bucket was rewritten")
+    assert(files(1) != b1, "touched bucket was not rewritten")
+    val got = spark.read.parquet(s"$out/vol_by_block")
+      .select("unit", "height", "value_adj").as[(String, Long, Double)]
+      .collect().toSet
+    assert(got == Set(("u", 5L, 3.0), ("u", 100015L, 5.0),
+      ("u", 100017L, 1.0)))
+    // all-time, recomputed from the by-block rows, follows the
+    // revision: 3 + 5 + 1
+    val at = spark.read.parquet(s"$out/vol_all_time")
+      .select("unit", "value_adj").as[(String, Double)].collect()
+    assert(at.length == 1 && math.abs(at.head._2 - 9.0) < 1e-9, at.toSeq)
   }
 
   /** A store whose rollups took their first (full) tick: heights 5 and
-    * 15 of two units over height buckets of 10, and a 3-address edge
-    * set; returns the store and the windowed tick that revises height
-    * 15 and adds 17 (buckets 1 only, plus the all-time and PageRank
-    * legs). */
+    * 100_015 of two units (height buckets 0 and 1), and a 3-address
+    * edge set; returns the store and the windowed tick that revises
+    * height 100_015 and adds 100_017 (height bucket 1 only, plus the
+    * all-time and PageRank legs). */
   private def rolledStore(): (String, () => Unit) = {
     val out = Files.createTempDirectory("graft_tick").toString
-    Seq(("t1", 5L, 50L, "u", 3e6), ("t2", 15L, 150L, "u", 4e6),
-      ("t3", 15L, 150L, "w", 2e6))
+    Seq(("t1", 5L, 50L, "u", 3e6), ("t2", 100015L, 150L, "u", 4e6),
+      ("t3", 100015L, 150L, "w", 2e6))
       .toDF("hash", "height", "slot", "unit", "value_adj")
       .write.parquet(s"$out/vol")
     Seq(("A", "B"), ("B", "C"), ("C", "A"), ("A", "C"))
       .toDF("send_addr", "rx_addr").write.parquet(s"$out/edges")
     RollupJob.run(spark, out)
-    Seq(("t2", 15L, 150L, "u", 5e6), ("t4", 17L, 170L, "w", 1e6))
+    Seq(("t2", 100015L, 150L, "u", 5e6), ("t4", 100017L, 170L, "w", 1e6))
       .toDF("hash", "height", "slot", "unit", "value_adj")
       .write.mode("overwrite").parquet(s"$out/vol")
-    (out, () => RollupJob.run(spark, out, sinceHeight = Some(10L)))
-  }
-
-  private def withHeightBuckets[T](body: => T): T = {
-    spark.conf.set("spark.graft.rollup.heightBucketSize", "10")
-    try body finally spark.conf.unset("spark.graft.rollup.heightBucketSize")
+    (out, () => RollupJob.run(spark, out, sinceHeight = Some(100010L)))
   }
 
   /** Runs `body` with table `name` of `out` moved aside and a regular
@@ -159,35 +153,33 @@ class StreamingJobSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("windowed rollup tick: Spark job count pin") {
-    withHeightBuckets {
-      val (out, tick) = rolledStore()
-      // 68 jobs when each touched set was a distinct + collect, each
-      // stored read inferred its schema and each write was preceded by a
-      // persist + count; 45 with the touched sets observed on cuts; 42
-      // with the all-time partitions read once (merged by a full outer
-      // join instead of read for the delta and again for the upsert); 40
-      // with the vol and edges inputs read with their declared schemas;
-      // 38 with vol_all_time recomputed from vol_by_block (no delta cut)
-      val jobs = sparkJobs(tick())
-      assert(jobs == 38, s"windowed tick ran $jobs Spark jobs")
-      val at = spark.read.parquet(s"$out/vol_all_time")
-        .select("unit", "value_adj").as[(String, Double)].collect().toMap
-      assert(at.keySet == Set("u", "w"))
-      assert(math.abs(at("u") - 8.0) < 1e-9 && math.abs(at("w") - 3.0) < 1e-9,
-        at)
-    }
+    val (out, tick) = rolledStore()
+    // 68 jobs when each touched set was a distinct + collect, each
+    // stored read inferred its schema and each write was preceded by a
+    // persist + count; 45 with the touched sets observed on cuts; 42
+    // with the all-time partitions read once (merged by a full outer
+    // join instead of read for the delta and again for the upsert); 40
+    // with the vol and edges inputs read with their declared schemas;
+    // 38 with vol_all_time recomputed from vol_by_block (no delta cut);
+    // 33 with both recomputes written straight over their key buckets
+    // (no read-back, anti-join or merged cut)
+    val jobs = sparkJobs(tick())
+    assert(jobs == 33, s"windowed tick ran $jobs Spark jobs")
+    val at = spark.read.parquet(s"$out/vol_all_time")
+      .select("unit", "value_adj").as[(String, Double)].collect().toMap
+    assert(at.keySet == Set("u", "w"))
+    assert(math.abs(at("u") - 8.0) < 1e-9 && math.abs(at("w") - 3.0) < 1e-9,
+      at)
   }
 
   test("windowed rollup ticks leave no persistent RDD behind") {
-    withHeightBuckets {
-      val (out, tick) = rolledStore()
-      val leaked = newPersistentRDDs {
-        withTableBlocked(out, "vol_all_time")(intercept[Exception](tick()))
-        tick(); tick()
-      }
-      assert(leaked.isEmpty,
-        s"${leaked.size} RDDs left after a failed tick and 2 ticks")
+    val (out, tick) = rolledStore()
+    val leaked = newPersistentRDDs {
+      withTableBlocked(out, "vol_all_time")(intercept[Exception](tick()))
+      tick(); tick()
     }
+    assert(leaked.isEmpty,
+      s"${leaked.size} RDDs left after a failed tick and 2 ticks")
   }
 
   private def allTime(out: String): Map[String, Double] =
@@ -203,53 +195,47 @@ class StreamingJobSpec extends AnyFunSuite with SparkTestBase {
   // commits, then the all-time one fails
   Seq("vol_all_time", "vol_by_block").foreach { table =>
     test(s"a failed $table upsert is repaired by the rerun") {
-      withHeightBuckets {
-        val (ref, refTick) = rolledStore()
-        refTick()
-        val (out, tick) = rolledStore()
-        withTableBlocked(out, table)(intercept[Exception](tick()))
-        tick()
-        assert(byBlock(out) == byBlock(ref))
-        assert(allTime(out) == Map("u" -> 8.0, "w" -> 3.0), allTime(out))
-      }
+      val (ref, refTick) = rolledStore()
+      refTick()
+      val (out, tick) = rolledStore()
+      withTableBlocked(out, table)(intercept[Exception](tick()))
+      tick()
+      assert(byBlock(out) == byBlock(ref))
+      assert(allTime(out) == Map("u" -> 8.0, "w" -> 3.0), allTime(out))
     }
   }
 
   test("every job of a windowed tick carries the caller's local properties") {
-    withHeightBuckets {
-      val (_, tick) = rolledStore()
-      // the legs run on their own threads: a job that lost the caller's
-      // properties would drop out of a traced tick span or a batch
-      val seen = jobLocalProperty("graft.spec.tag", "tick")(tick())
-      assert(seen.nonEmpty && seen.forall(_ == "tick"), seen)
-    }
+    val (_, tick) = rolledStore()
+    // the legs run on their own threads: a job that lost the caller's
+    // properties would drop out of a traced tick span or a batch
+    val seen = jobLocalProperty("graft.spec.tag", "tick")(tick())
+    assert(seen.nonEmpty && seen.forall(_ == "tick"), seen)
   }
 
   test("a failed PageRank leg fails the tick after the vol leg committed") {
-    withHeightBuckets {
-      val (ref, refTick) = rolledStore()
-      refTick()
-      val (out, tick) = rolledStore()
-      // a regular file where the address_pagerank table should be
-      val pagerank = java.nio.file.Path.of(out, "address_pagerank")
-      graft.io.Fs.deletePath(spark, pagerank.toString)
-      Files.writeString(pagerank, "not a table")
-      intercept[Exception](tick())
-      val legs = Thread.getAllStackTraces.keySet.asScala
-        .filter(t => t.getName.startsWith("graft-") && t.isAlive)
-      assert(legs.isEmpty, legs.map(_.getName))
-      assert(byBlock(out) == byBlock(ref))
-      assert(allTime(out) == allTime(ref))
-      // the rerun rewrites both vol tables unchanged: vol_all_time is
-      // recomputed from the committed by-block rows
-      Files.delete(pagerank)
-      tick()
-      assert(allTime(out) == allTime(ref))
-      val scores = spark.read.parquet(s"$out/address_pagerank")
-        .select("address", "score").as[(String, Double)].collect()
-      assert(scores.map(_._1).sorted.toSeq == Seq("A", "B", "C"))
-      assert(scores.forall(s => java.lang.Double.isFinite(s._2)), scores.toSeq)
-    }
+    val (ref, refTick) = rolledStore()
+    refTick()
+    val (out, tick) = rolledStore()
+    // a regular file where the address_pagerank table should be
+    val pagerank = java.nio.file.Path.of(out, "address_pagerank")
+    graft.io.Fs.deletePath(spark, pagerank.toString)
+    Files.writeString(pagerank, "not a table")
+    intercept[Exception](tick())
+    val legs = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-") && t.isAlive)
+    assert(legs.isEmpty, legs.map(_.getName))
+    assert(byBlock(out) == byBlock(ref))
+    assert(allTime(out) == allTime(ref))
+    // the rerun rewrites both vol tables unchanged: vol_all_time is
+    // recomputed from the committed by-block rows
+    Files.delete(pagerank)
+    tick()
+    assert(allTime(out) == allTime(ref))
+    val scores = spark.read.parquet(s"$out/address_pagerank")
+      .select("address", "score").as[(String, Double)].collect()
+    assert(scores.map(_._1).sorted.toSeq == Seq("A", "B", "C"))
+    assert(scores.forall(s => java.lang.Double.isFinite(s._2)), scores.toSeq)
   }
 
   test("upsertPartitioned over a touched superset rewrites the extra " +
@@ -270,6 +256,29 @@ class StreamingJobSpec extends AnyFunSuite with SparkTestBase {
       ("d", 4.0, 0L)))
     assert(new java.io.File(s"$path/pbucket=2").listFiles().toSet == b2,
       "a bucket outside the touched set was rewritten")
+  }
+
+  test("a failed overwritePartitions leaves the table readable and " +
+    "unchanged") {
+    val dir = Files.createTempDirectory("graft_overwrite").toString
+    val path = s"$dir/t"
+    def rows = spark.read.parquet(path)
+      .select("k", "v", "pbucket").as[(String, Double, Long)]
+      .collect().toSet
+    val before = Set(("a", 1.0, 0L), ("b", 2.0, 1L))
+    Volume.overwritePartitions(before.toSeq.toDF("k", "v", "pbucket"), path)
+    // read from parquet, so the failure is raised by a task of the
+    // write's job (a local frame would fail while planning, before any
+    // write starts)
+    Seq(("a", 10.0, 0L), ("b", 20.0, 1L)).toDF("k", "v", "pbucket")
+      .write.parquet(s"$dir/src")
+    val failing = spark.read.parquet(s"$dir/src").select(col("k"),
+      when(col("k") === "b", raise_error(lit("injected write failure")))
+        .otherwise(col("v")).as("v"), col("pbucket"))
+    val e = intercept[Exception](Volume.overwritePartitions(failing, path))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected")), e)
+    assert(rows == before)
   }
 
   test("socket source: replay server → streaming raw persist") {
